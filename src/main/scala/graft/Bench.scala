@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   * a silent −1 that would shrink the total. A streaming section reports
   * MemoryStream events/sec for the stateful operators. */
 object Bench {
+  /** Local core count for the mains: `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   def main(args: Array[String]): Unit = {
     // --list: print the registry (one name per line) and exit — the
     // sharded harness enumerates queries from the CODE via this flag,
@@ -25,15 +28,7 @@ object Bench {
     // round-10 sf10 artifact had no streaming numbers at all).
     if (args.headOption.contains("--streaming")) {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local("graft-bench-streaming", envCpus)
       val curve = graft.streaming.StreamBench.curve(spark, sfDir)
         .toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"" + k + "\":" + math.rint(v) }.mkString("{", ",", "}")
@@ -42,19 +37,8 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", envCpus)
 
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
       val t0 = System.nanoTime()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.Observation
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+
 /** Helpers for riding tiny control-flow aggregates (loop convergence
   * probes, round gates) on a frame's own materialization job via
   * `Dataset.observe` (CollectMetrics), instead of paying a separate
@@ -16,8 +18,22 @@ import org.apache.spark.sql.Observation
   * fixpoint), or (b) carry a loud post-exit assertion that fails the
   * job on a wrong exit (the chunked-LCP `require(active.isEmpty)`).
   * A metric that never arrives (listener hiccup) falls back to the
-  * exact aggregation job — the pre-fusion behavior. */
+  * exact aggregation job — the pre-fusion behavior — and is counted
+  * in [[fallbacks]].
+  *
+  * Observed COUNTS are not exact row counts: under
+  * `spark.graft.reliableCheckpoints` the eager `Dataset.checkpoint`
+  * re-runs the plan in its file-write job, so CollectMetrics sees
+  * every row twice and a count may double. Use them only as `> 0`
+  * gates or as cost hints, never as a value a result depends on. */
 object Observed {
+
+  private val fallbackCount = new AtomicLong(0L)
+  private val fallbackLogged = new AtomicBoolean(false)
+
+  /** JVM-wide number of [[metrics]] calls that timed out and sent
+    * their caller to the exact aggregation job. */
+  def fallbacks: Long = fallbackCount.get
 
   /** The observed metrics of `obs` once its action has completed, or
     * None if the listener has not delivered within `waitMs` (callers
@@ -25,13 +41,23 @@ object Observed {
     * checkpoint in every graft use) has already finished synchronously
     * when this is called, so the wait only covers listener-bus delay —
     * measured microseconds-to-milliseconds, the 10 s ceiling is a
-    * never-hang guard, not an expected wait. */
+    * never-hang guard, not an expected wait. Each timeout is counted
+    * in [[fallbacks]]; the first one in the JVM is logged, so a
+    * delivery regression shows up instead of reading as per-round
+    * latency. */
   def metrics(obs: Observation, waitMs: Long = 10000L): Option[Map[String, Any]] = {
     try {
       val row = scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(waitMs, "ms"))
       Some(row.schema.fieldNames.zip(row.toSeq).toMap)
-    } catch { case _: java.util.concurrent.TimeoutException => None }
+    } catch { case _: java.util.concurrent.TimeoutException =>
+      fallbackCount.incrementAndGet()
+      if (fallbackLogged.compareAndSet(false, true))
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"observed metrics not delivered within $waitMs ms; falling back to " +
+            "an exact aggregation job (logged once; count in graft.Observed.fallbacks)")
+      None
+    }
   }
 
   /** Long metric `k` out of an observed row; null (empty-input max/min)
@@ -62,11 +88,18 @@ object Observed {
   * minute, bounding dead-shuffle residency to ~interval regardless of
   * which session created the frames. */
 object LoopGc {
-  /** Seconds between forced GCs inside iterative builds; <= 0 disables. */
+  /** Seconds between forced GCs inside iterative builds; <= 0 disables.
+    * Fractions are honored; a value that is not a finite number falls
+    * back to the default (60) instead of failing the build. */
   val IntervalKey = "spark.graft.loopGcIntervalSec"
 
-  // JVM-global throttle so two concurrent loops don't double-GC
-  @volatile private var lastGcNs: Long = 0L
+  private[graft] def intervalNs(conf: Option[String]): Long =
+    conf.flatMap(_.trim.toDoubleOption).filterNot(d => d.isNaN || d.isInfinite)
+      .map(s => (s * 1e9).toLong).getOrElse(60L * 1000000000L)
+
+  // JVM-global throttle so two concurrent loops don't double-GC: a
+  // tick GCs only if its compare-and-set claims the slot
+  private val lastGcNs = new AtomicLong(0L)
 
   /** Per-loop ticker: call [[Ticker.tick]] once per round. GCs only
     * when ≥ interval has elapsed since BOTH this loop's start and the
@@ -74,15 +107,13 @@ object LoopGc {
     * sf0.1 build) never GCs at all. */
   final class Ticker(spark: org.apache.spark.sql.SparkSession) {
     private val startNs = System.nanoTime()
-    private val intervalNs =
-      spark.conf.get(IntervalKey, "60").toLong * 1000000000L
+    private[graft] val intervalNs = LoopGc.intervalNs(spark.conf.getOption(IntervalKey))
     def tick(): Unit = {
       if (intervalNs <= 0) return
       val now = System.nanoTime()
-      if (now - math.max(startNs, lastGcNs) >= intervalNs) {
-        lastGcNs = now
+      val last = lastGcNs.get
+      if (now - math.max(startNs, last) >= intervalNs && lastGcNs.compareAndSet(last, now))
         System.gc()
-      }
     }
   }
 

@@ -25,9 +25,9 @@ object Tables {
     * TIMESTAMP(NANOS) columns infer as (LongType vs error), and two
     * sessions in one JVM may disagree on it; keyed on the path's
     * LOCAL-FS mtime so a table REWRITTEN in-JVM with a changed schema
-    * (generator mains — ScaleUp, StructuredEmbeddings — overwrite
-    * their dest dirs) is re-inferred instead of silently misread
-    * (r18 verdict item 7). Overwrites rewrite the directory's
+    * (the test-side generators ScaleUp and StructuredEmbeddings
+    * overwrite their dest dirs) is re-inferred instead of silently
+    * misread (r18 verdict item 7). Overwrites rewrite the directory's
     * children, which updates its mtime; a non-local path (hdfs://,
     * s3a://) stats as 0 — i.e. the pre-r19 immutable-inputs contract,
     * now documented here. */

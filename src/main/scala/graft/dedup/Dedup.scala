@@ -413,24 +413,8 @@ object Dedup {
                         k: Int = 3, threshold: Double = 0.2): DataFrame =
     directFromShingles(cached(shingles(df, idCol, textCol, k)), idCol, threshold)
 
-  /** Pricing knob for the r18-verdict item-5 question (dictionary-
-    * encode the direct join key to shrink the exchange): when true,
-    * [[directFromShingles]] assigns each distinct shingle a dense
-    * 8-byte id with one aggregation pass and self-joins on the id.
-    * EXACT either way (dense ids, no hashing — two branches read one
-    * CHECKPOINTED dictionary, so the nondeterministic id assignment
-    * can never diverge between them). Default reflects the committed
-    * sf10 A-B (BENCH_ngram_dict_r19.json): with the r19 join-layout
-    * pin the string self-join already pays ONE reused exchange of the
-    * shingle frame, while the dictionary route must still move the
-    * strings once to attach ids and then pays a SECOND, id-keyed
-    * exchange — strictly more bytes end to end. */
-  private[graft] val NgramDictJoinKey = "spark.graft.ngramDictJoin"
-
   private[dedup] def directFromShingles(sh: DataFrame, idCol: String,
                                         threshold: Double): DataFrame = {
-    if (sh.sparkSession.conf.get(NgramDictJoinKey, "false").toBoolean)
-      return directFromShinglesDict(sh, idCol, threshold)
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     // JOIN-LAYOUT PIN (guide §2 partition-by-work; r18 verdict item 2):
     // the meeting stream (Σ per-shingle df² rows) materializes INSIDE
@@ -440,35 +424,14 @@ object Dedup {
     // A user numPartitions repartition is never coalesced, both join
     // branches read the SAME exchange (ReusedExchange), and the join
     // reuses the co-partitioning — so the plan pays the one exchange
-    // it always paid, at a pinned width.
+    // it always paid, at a pinned width. (A dictionary-encoded join
+    // key pays a second, id-keyed exchange on top of this one: measured
+    // 1.31×/1.73× slower at sf10 and removed, BENCH_ngram_dict_r19.json.)
     val shufP = sh.sparkSession.sessionState.conf.numShufflePartitions
     val byShingle = sh.repartition(shufP, col("shingle"))
     val a = byShingle.select(col(idCol).as("doc1"), col("shingle"))
     val b = byShingle.select(col(idCol).as("doc2"), col("shingle"))
     val inter = a.join(b, Seq("shingle")).filter(col("doc1") < col("doc2"))
-      .groupBy("doc1", "doc2").agg(count(lit(1)).as("inter"))
-    jaccardFromIntersections(inter, sizes, idCol, threshold)
-  }
-
-  /** The dictionary-encoded variant behind [[NgramDictJoinKey]] — see
-    * that key's Scaladoc for the verdict of the committed A-B. Ids are
-    * `monotonically_increasing_id` over the distinct shingles —
-    * collision-free by construction (never a hash), and the dictionary
-    * is eagerly CHECKPOINTED so both attach branches and both join
-    * sides observe the same assignment (a recomputed nondeterministic
-    * id column could otherwise differ between plan branches). */
-  private def directFromShinglesDict(sh: DataFrame, idCol: String,
-                                     threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val shufP = sh.sparkSession.sessionState.conf.numShufflePartitions
-    val bySh = sh.repartition(shufP, col("shingle"))
-    val dict = graft.Checkpoints.checkpoint(bySh.select("shingle").distinct()
-      .withColumn("__sid", monotonically_increasing_id()))
-    val withId = bySh.join(dict, Seq("shingle")).select(col(idCol), col("__sid"))
-    val byId = withId.repartition(shufP, col("__sid"))
-    val a = byId.select(col(idCol).as("doc1"), col("__sid"))
-    val b = byId.select(col(idCol).as("doc2"), col("__sid"))
-    val inter = a.join(b, Seq("__sid")).filter(col("doc1") < col("doc2"))
       .groupBy("doc1", "doc2").agg(count(lit(1)).as("inter"))
     jaccardFromIntersections(inter, sizes, idCol, threshold)
   }

@@ -211,8 +211,8 @@ object EditDistance {
     * "result") — the operator's own construction, exposed so
     * measurement tools (and [[editDistancePairsAuto]]'s volume
     * predictor) profile THE SHIPPED PIPELINE instead of a hand-synced
-    * copy (the retired DebugEditDist drifted from the operator twice
-    * in one round). */
+    * copy (an earlier copy drifted from the operator twice in one
+    * round). */
   private[graft] def stages(df: DataFrame, idCol: String, textCol: String,
                         maxFrac: Double = 0.1, headChars: Int = 80,
                         hotDf: Int = 64, skewSampleFrac: Double = 0.1,
@@ -429,7 +429,7 @@ object EditDistance {
     // banded DPs, an ABSOLUTE quantity independent of corpus size. And
     // per-key df does not in general grow ∝ n: growing corpora add NEW
     // template families rather than proportionally bigger ones (the
-    // ScaleUp replica construction models exactly this — disjoint
+    // ScaleUp test-data replicas model exactly this — disjoint
     // per-replica vocabularies hold per-key df constant while n grows
     // 100×). The relative term stays for small corpora, where df ≈
     // n/vocab genuinely tracks n; the cap keeps suppression live at
@@ -564,21 +564,20 @@ object EditDistance {
     // threshold, it evades hotKeys (and with it both the drop and the
     // hot-based giant split above), and its a·b candidate stream —
     // bounded only by n·hotThreshold — lands in ONE task
-    // (EvasionStress measures the serialization). Detection therefore
-    // must START from the segs-side sampled df: keys whose sampled
-    // segs count alone makes a giant product POSSIBLE
-    // (a/p > blockTarget/hotDfCap — an evader's probe-df is at most
+    // (BENCH_editdist_evasion_r14.json measures the serialization).
+    // Detection therefore must START from the segs-side sampled df:
+    // keys whose sampled segs count alone makes a giant product
+    // POSSIBLE (a/p > blockTarget/hotDfCap — an evader's probe-df is at most
     // ~the clamp, else it would be hot) and that are NOT already
     // handled via hotKeys are assigned B from the segs-side count
     // alone, with the probe-df BOUNDED by hotDfCap rather than
     // recounted (the rejected-recount history and its measured cost
     // are in the next comment), and the usual product rule assigns
-    // B. Knob `spark.graft.editdistSegsGiant`
-    // (default on) exists for the dormant-path A-B; exactness is
-    // indifferent (the block split is exact at any B, forced-path
-    // spec), detection affects COST only.
-    val segsGiantOn = df.sparkSession.conf
-      .get("spark.graft.editdistSegsGiant", "true").toBoolean
+    // B. Exactness is indifferent (the block split is exact at any B,
+    // forced-path spec), detection affects COST only: it won 0.88×
+    // on the evasion corpus and sat at parity on the dormant sf10
+    // corpus (BENCH_editdist_evasion_r14.json,
+    // BENCH_editdist_dormant_ab_r14.json), so it always runs.
     // b is NOT recounted: an evader's probe-df is at most ~the clamp
     // (above it the key would be hot and handled upstream), so
     // b-hat = hotDfCap bounds it and the product rule runs on the
@@ -589,12 +588,12 @@ object EditDistance {
     // flipped keys, but each key's replication is dwarfed by its own
     // a·b candidate stream) — while recounting b cost a second sampled probe
     // ENUMERATION, measured at ~1.5x the serialized tail it was
-    // buying back (EvasionStress, nShort = 2M: on 253 s vs off 165 s
-    // with the recount; the enumeration, not the aggregation, is the
-    // probe side's dominant map cost).
+    // buying back (BENCH_editdist_evasion_r14.json, nShort = 2M: on
+    // 253 s vs off 165 s with the recount; the enumeration, not the
+    // aggregation, is the probe side's dominant map cost).
     val giantKeys2 = broadcast(
       segsSample.groupBy("__k").agg(count(lit(1)).as("__a2"))
-        .filter(lit(segsGiantOn) &&
+        .filter(
           col("__a2").cast("double") / lit(p) * lit(hotDfCap.toDouble) >
             lit(4.0 * blockTarget))
         .join(hotKeys.select("__k"), Seq("__k"), "left_anti")
@@ -610,9 +609,10 @@ object EditDistance {
     // of an n-row hash map (measured: SparkOutOfMemoryError in the
     // SHJ build at nShort = 2M, B = 200, while the UNSPLIT path
     // survived with one big map and the serialized tail;
-    // EvasionStress). So giantKeys2 keys split the OTHER way round:
-    // the SEGS side tags its own doc-hash block (a pure projection
-    // inside the Generate it already pays — per-block build a/B rows)
+    // BENCH_editdist_evasion_r14.json). So giantKeys2 keys split the
+    // OTHER way round: the SEGS side tags its own doc-hash block (a
+    // pure projection inside the Generate it already pays — per-block
+    // build a/B rows)
     // and the PROBE side replicates once per block. HOW the probe
     // replicates matters as much as which side: a second probe scan
     // to slice out the flip rows re-runs the probe ENUMERATION — the

@@ -63,10 +63,10 @@ object SkewJoin {
         k.cast("string"))))
   }
 
-  /** The salted join itself. Measured at sf10 (DebugSkew, 3 iters,
-    * same-session): joining on the two-column (key, __salt) pair costs
-    * ~8.5 s where the plain join is ~2.4 s — the composite key demotes
-    * the broadcast hash table from the codegen'd long-key
+  /** The salted join itself. Measured at sf10 (BENCH_skew_ab_r7.json,
+    * 3 iters, same-session): joining on the two-column (key, __salt)
+    * pair costs ~8.5 s where the plain join is ~2.4 s — the composite
+    * key demotes the broadcast hash table from the codegen'd long-key
     * LongHashedRelation to the generic UnsafeHashedRelation. Fusing
     * (key, salt) into the single long `key*factor + salt` restores the
     * fast path: 2.4–3.2 s, ≈1.2× plain. So for integral keys we join

@@ -192,8 +192,8 @@ object DedupQueries {
         .orderBy("doc1", "doc2")),
 
     // #44 embedding-cosine exact pairs, BOUNDED: a fixed 500-probe
-    // slice (vec_id < 500 — ScaleUp offsets replica ids, so the slice
-    // is the same 500 vectors at every SF) against the full corpus.
+    // slice (vec_id < 500 — the ScaleUp test generator offsets replica
+    // ids, so the slice is the same 500 vectors at every SF) against the full corpus.
     // O(500·n), linear in the corpus — the registered exact baseline
     // after round 6 measured the unbounded triangular join at 36% of
     // the whole sf10 suite (quadratic by semantics; it survives as the

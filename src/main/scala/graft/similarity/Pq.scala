@@ -275,9 +275,7 @@ object Pq {
     // frame's unknown filter stats happen to plan the merge join
     // already — the hint keeps that measured shape independent of the
     // caller's probe-frame lineage)
-    val pj = if (spark.conf.getOption("spark.graft.pqPostingShuffleJoin").forall(_.toBoolean))
-      p.hint("merge") else p
-    pj.join(c, Seq("__cid"))
+    p.hint("merge").join(c, Seq("__cid"))
       .filter(col("probe_id") =!= col("neighbor_id"))
       .withColumn("adc", bcLuts.adc(col("probe_id"), col("__codes")))
       .withColumn("rank", row_number().over(w))
@@ -426,12 +424,8 @@ object Pq {
     // its probe frame's unknown stats already plan the merge join.
     // The exchange this buys back is the ENCODED corpus (cell id +
     // packed 8-byte codes — the wire-frugal posting exchange the PQ
-    // design is built around), not the raw vectors. Escape hatch for
-    // clusters where scan parallelism is plentiful and the posting
-    // exchange is the scarcer resource:
-    // spark.graft.pqPostingShuffleJoin=false restores the broadcast.
-    val p = if (spark.conf.getOption("spark.graft.pqPostingShuffleJoin").forall(_.toBoolean))
-      p0.hint("merge") else p0
+    // design is built around), not the raw vectors.
+    val p = p0.hint("merge")
     val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("neighbor_id"))
     p.join(c, Seq("__cid"))
       .filter(col("probe_id") =!= col("neighbor_id"))

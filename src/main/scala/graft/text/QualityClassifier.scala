@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
-import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,14 +17,14 @@ import org.apache.spark.sql.functions._
   * vocabulary — hashing sidesteps the corpus-sized dictionary build);
   * training is `maxIter` treeAggregate gradient passes, each moving
   * one `buckets`-sized coefficient vector (2^18 ≈ 2 MB) per executor,
-  * never a corpus-sized structure; scoring broadcasts that same
-  * vector and is again a pure projection — streaming-legal, and the
-  * exact shape a 1000-executor scoring pass wants. */
+  * never a corpus-sized structure; scoring ships that same vector in
+  * its task closure and is again a pure projection — streaming-legal,
+  * and the exact shape a 1000-executor scoring pass wants. */
 object QualityClassifier {
 
   final case class Model(lr: LogisticRegressionModel, buckets: Int)
 
-  private def featurize(df: DataFrame, textCol: String, buckets: Int): DataFrame =
+  private[graft] def featurize(df: DataFrame, textCol: String, buckets: Int): DataFrame =
     new HashingTF().setInputCol("__qc_grams").setOutputCol("__qc_feat")
       .setNumFeatures(buckets)
       .transform(
@@ -46,15 +46,24 @@ object QualityClassifier {
     Model(lr.fit(feats), buckets)
   }
 
-  /** Score a frame: appends `quality_prob` (P(label=1), rounded 4).
-    * Pure projection over broadcast coefficients. */
-  def score(model: Model, df: DataFrame, textCol: String): DataFrame =
-    model.lr.transform(featurize(df, textCol, model.buckets))
-      .withColumn("quality_prob",
-        round(element_at(vector_to_array(col("probability")), 2), 4))
-      .drop("__qc_grams", "__qc_feat",
-        model.lr.getRawPredictionCol, model.lr.getProbabilityCol,
-        model.lr.getPredictionCol)
+  /** Score a frame: appends `quality_prob` = sigmoid(w·x + b), i.e.
+    * P(label=1), rounded 4. Pure projection; the closure captures the
+    * coefficients and intercept as plain values, never the fitted
+    * model — its training summary holds the SparkSession, which stops
+    * being serializable once any `Dataset.observe` has registered an
+    * Observation with it (`Task not serializable`). */
+  def score(model: Model, df: DataFrame, textCol: String): DataFrame = {
+    val w = model.lr.coefficients.toArray
+    val b = model.lr.intercept
+    val prob = udf { (x: Vector) =>
+      var dot = 0.0
+      x.foreachActive((i, v) => dot += v * w(i))
+      1.0 / (1.0 + math.exp(-(dot + b)))
+    }
+    featurize(df, textCol, model.buckets)
+      .withColumn("quality_prob", round(prob(col("__qc_feat")), 4))
+      .drop("__qc_grams", "__qc_feat")
+  }
 
   /** Weak-supervision bootstrap: label the corpus by whether its
     * heuristic `quality_score` clears the corpus median, train on

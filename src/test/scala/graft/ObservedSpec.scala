@@ -68,4 +68,28 @@ class ObservedSpec extends AnyFunSuite with SharedSpark {
     assert(second === Set("doc_id", "text", "extra"),
       "schema cache served a stale StructType after an in-place rewrite")
   }
+
+  test("a metric that never arrives falls back to None and is counted") {
+    // an Observation whose frame never ran: the wait must time out
+    val obs = org.apache.spark.sql.Observation()
+    val before = Observed.fallbacks
+    assert(Observed.metrics(obs, waitMs = 50L).isEmpty)
+    assert(Observed.fallbacks === before + 1)
+  }
+
+  test("LoopGc interval parses fractions and falls back to the default on garbage") {
+    def interval(v: String): Long = {
+      spark.conf.set(LoopGc.IntervalKey, v)
+      try {
+        val t = LoopGc.ticker(spark)
+        t.tick() // must not throw whatever the setting
+        t.intervalNs
+      } finally spark.conf.unset(LoopGc.IntervalKey)
+    }
+    assert(interval("1.5") === 1500000000L)
+    assert(interval("not-a-number") === 60000000000L)
+    assert(interval("NaN") === 60000000000L)
+    assert(interval("0") === 0L)
+    assert(interval(" 30 ") === 30000000000L)
+  }
 }

@@ -62,4 +62,36 @@ class QualityClassifierSpec extends AnyFunSuite with SharedSpark {
     assert(out.count() == 120)
     assert(out.select("label").distinct().count() == 2)
   }
+
+  test("quality_prob equals the fitted model's own P(label=1), rounded 4") {
+    val model = QualityClassifier.train(corpus, "text", "label",
+      buckets = 1 << 12, maxIter = 20)
+    // driver-side reference: MLlib's own probability per feature vector
+    val want = QualityClassifier.featurize(corpus, "text", 1 << 12)
+      .select("doc_id", "__qc_feat").collect().map { r =>
+        val p = model.lr.predictProbability(
+          r.getAs[org.apache.spark.ml.linalg.Vector]("__qc_feat"))(1)
+        r.getLong(0) -> BigDecimal(p).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }.toMap
+    val got = QualityClassifier.score(model, corpus, "text")
+      .select("doc_id", "quality_prob").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got === want)
+  }
+
+  test("scoring stays serializable after an observed op in the same session") {
+    // an observed action registers the Observation with the session;
+    // a scoring closure that reached the session (the fitted model's
+    // training summary holds it) then fails with Task not serializable
+    val obs = org.apache.spark.sql.Observation()
+    val ck = Checkpoints.checkpoint((1 to 100).toDF("x")
+      .observe(obs, count(lit(1)).as("cnt")))
+    assert(Observed.metrics(obs).map(Observed.longOf(_, "cnt")).contains(100L))
+    Checkpoints.free(ck)
+    val out = QualityClassifier.bootstrapScore(corpus, "text", "doc_id",
+      Seq("the", "a", "of", "and", "to", "in", "is", "it"), buckets = 1 << 12)
+    val probs = out.select("quality_prob").as[Double].collect()
+    assert(probs.length == 120)
+    assert(probs.forall(p => p >= 0.0 && p <= 1.0))
+  }
 }

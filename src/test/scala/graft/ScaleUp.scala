@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *    both engines compare on anyway); per-user eps_us uniqueness is
   *    preserved because user_id shifts per replica.
   *
-  * Usage: runMain graft.ScaleUp [srcDir] [destDir] [factor]
+  * Usage: sbt "Test/runMain graft.ScaleUp [srcDir] [destDir] [factor]"
   */
 object ScaleUp {
 

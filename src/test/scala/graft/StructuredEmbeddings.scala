@@ -41,11 +41,11 @@ import org.apache.spark.sql.functions._
   * scales to any corpus size, and the same discipline as [[ScaleUp]]:
   * value-deterministic under retries and independent of partitioning.
   *
-  * Usage: runMain graft.StructuredEmbeddings destDir nRows
-  *          [nClusters] [sigma] [dim]
+  * Usage: sbt "Test/runMain graft.StructuredEmbeddings destDir nRows
+  *          [nClusters] [sigma] [dim]"
   * writes destDir/embeddings.parquet with the driver testdata schema
-  * (vec_id bigint, embedding array<float>, label int) so RecallAb /
-  * LshRecallAb / Tables.embeddings read it unchanged. */
+  * (vec_id bigint, embedding array<float>, label int) so
+  * Tables.embeddings and the registered ANN queries read it unchanged. */
 object StructuredEmbeddings {
 
   /** A hashed uniform in (0, 1): pmod keeps it positive, the +0.5

@@ -458,7 +458,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       assert(adcs.forall(a => a >= -1e-9), "squared distance cannot be negative")
     }
     // recall bar: same as the raw-PQ test's (the raw-vs-residual gap
-    // at production parameters is RecallAb's measurement, not a
+    // at production parameters is BENCH_pq_recall_r17.json's measurement, not a
     // 40-vector fixture's)
     val got = out.map(r => (r.getLong(0), r.getLong(2))).toSet
     assert((exact & got).size >= 12, s"IVFADC recall too low: ${(exact & got).size}/20")
