@@ -13,35 +13,48 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred parquet schema per (path, mtime, nanosAsLong) — schema
-    * inference is an eager footer-reading Spark job at every
-    * `spark.read.parquet` CALL, so a suite that opens the same table
-    * hundreds of times pays hundreds of schema jobs (one per table
-    * per query per bench iteration; at cluster scale it is a footer
-    * listing pass over the table). The schema is plan METADATA, not
-    * data: supplying it via `.schema(...)` skips only the inference
+  /** Inferred parquet schema per (path, nanosAsLong) → (mtime,
+    * schema) — schema inference is an eager footer-reading Spark job at
+    * every `spark.read.parquet` CALL, so a suite that opens the same
+    * table hundreds of times pays hundreds of schema jobs (one per
+    * table per query per bench iteration; at cluster scale it is a
+    * footer listing pass over the table). The schema is plan METADATA,
+    * not data: supplying it via `.schema(...)` skips only the inference
     * job — every query still scans the parquet itself. Keyed on the
     * nanosAsLong conf too because that flag changes what type
     * TIMESTAMP(NANOS) columns infer as (LongType vs error), and two
-    * sessions in one JVM may disagree on it; keyed on the path's
-    * LOCAL-FS mtime so a table REWRITTEN in-JVM with a changed schema
-    * (the test-side generators ScaleUp and StructuredEmbeddings
-    * overwrite their dest dirs) is re-inferred instead of silently
-    * misread (r18 verdict item 7). Overwrites rewrite the directory's
-    * children, which updates its mtime; a non-local path (hdfs://,
-    * s3a://) stats as 0 — i.e. the pre-r19 immutable-inputs contract,
-    * now documented here. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), org.apache.spark.sql.types.StructType]()
+    * sessions in one JVM may disagree on it. The entry remembers the
+    * path's LOCAL-FS mtime and is REPLACED when it changes, so a table
+    * rewritten in-JVM with a changed schema (the test-side generators
+    * ScaleUp and StructuredEmbeddings overwrite their dest dirs) is
+    * re-inferred instead of misread, and rewrites leave one entry per
+    * path, not one per mtime. A rewrite inside the mtime granularity
+    * (one second on some filesystems) keeps the old mtime: call
+    * [[invalidate]] after writing. A non-local path (hdfs://, s3a://)
+    * stats as 0, i.e. is treated as immutable unless invalidated. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, org.apache.spark.sql.types.StructType)]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
     val mtime = new java.io.File(path).lastModified() // 0 for non-local paths
-    val sch = schemaCache.computeIfAbsent((path, mtime, nanos),
-      _ => spark.read.parquet(path).schema)
+    val hit = schemaCache.get(key)
+    val sch = if (hit != null && hit._1 == mtime) hit._2 else {
+      val inferred = spark.read.parquet(path).schema
+      schemaCache.put(key, (mtime, inferred))
+      inferred
+    }
     spark.read.schema(sch).parquet(path)
   }
+
+  /** Drop the cached schema of the table at `path` (`<dir>/<name>.parquet`)
+    * under every conf, so the next [[apply]] re-infers it. */
+  def invalidate(path: String): Unit = schemaCache.keySet.removeIf(_._1 == path)
+
+  /** Cached schema entries for `path` — spec hook. */
+  private[graft] def schemaCacheEntries(path: String): Int =
+    schemaCache.keySet.stream.filter(_._1 == path).count().toInt
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

@@ -13,7 +13,16 @@ import org.apache.spark.sql.functions._
   *    run it AFTER MinHash banding restricts the candidate set.
   *  - MinHash/LSH: signatures are per-row expressions; banding turns
   *    candidate generation into an equi-join on (band, bandHash) — the
-  *    canonical web-scale near-dup design (cf. Broder '97).
+  *    canonical web-scale near-dup design (cf. Broder '97). The banded
+  *    and MinHash operators read ONE cached per-document projection
+  *    (id, shingle array, size, signature): under AQE, Spark 4.1 never
+  *    reuses an exchange above a cached or checkpointed leaf
+  *    (PlanAuditSpec pins it), so an aggregate over an exploded
+  *    shingle cache re-ran its shuffle in every plan branch.
+  *  - clusters: [[survivors]] materializes the pairs once, resolves up
+  *    to `spark.sql.autoBroadcastJoinThreshold` / 128 B edges with
+  *    union-find on the driver, and larger graphs with
+  *    large-star/small-star rounds (O(log² n), exact exit test).
   *  - SimHash: per-row 64-bit signature; near-dups collide on rotated
   *    band keys (Charikar '02 / Manku et al. WWW'07 style blocking).
   */
@@ -436,27 +445,53 @@ object Dedup {
     jaccardFromIntersections(inter, sizes, idCol, threshold)
   }
 
+  /** THE per-document projection of the banded and MinHash operators:
+    * one row per id — `(id, __sh, __n, sig)` with `__sh` the distinct
+    * k-shingle array, `__n` its size and `sig` the [[graft.functions
+    * .MinHashSig]] kernel over it — tracked and cached, so tokenizing,
+    * shingling and MinHash run ONCE per document however many plan
+    * branches read it (no aggregate above the cache: see the AQE reuse
+    * gap in the object Scaladoc). Rows sharing an id are merged first
+    * and their shingle arrays unioned; the signature is bit-identical
+    * to an explode + per-permutation `min` aggregate over the union
+    * (TextDedupSpec). */
+  private def docSignatures(df: DataFrame, idCol: String, textCol: String,
+                            k: Int, perms: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    cachedCorpus(graft.Parallelism.spread(df).withColumn("__ws", words(col(textCol)))
+      .filter(size(col("__ws")) >= k)
+      .groupBy(col(idCol))
+      .agg(array_distinct(flatten(collect_list(shingleArray(k)))).as("__sh"))
+      .select(col(idCol), col("__sh"), size(col("__sh")).cast("long").as("__n"),
+        graft.functions.GraftFunctions.minhashSig(col("__sh"), perms).as("sig")))
+  }
+
   /** The 100 TB n-gram Jaccard composition: MinHash banding generates
     * the candidate pairs (equi-join on (band, bandHash) — fan-out is
     * bounded by band-bucket sizes, immune to frequent-shingle skew),
-    * then an EXACT full-set intersection verifies each candidate, so
-    * every emitted pair carries its true Jaccard. Recall: a pair with
-    * Jaccard J misses all bands w.p. (1 − J^(perms/bands))^bands —
-    * with the 2-row/32-band default, < 1e-14 at J = 0.8 — so for
-    * genuine near-dup corpora (qualifying pairs are high-J) the output
-    * equals the direct join's. Shingles are computed once and reused by
-    * both the signature aggregation and the verify joins. */
+    * then an EXACT intersection of the two shingle arrays verifies
+    * each candidate, so every emitted pair carries its true Jaccard.
+    * Recall: a pair with Jaccard J misses all bands w.p.
+    * (1 − J^(perms/bands))^bands — with the 2-row/32-band default,
+    * < 1e-14 at J = 0.8 — so for genuine near-dup corpora (qualifying
+    * pairs are high-J) the output equals the direct join's. Candidates
+    * and verification both read the one [[docSignatures]] projection:
+    * no shingle explode, no aggregate, no shingle-keyed join. */
   def ngramJaccardPairsBanded(df: DataFrame, idCol: String, textCol: String,
                               k: Int = 3, threshold: Double = 0.2,
                               perms: Int = 64, bands: Int = 32): DataFrame = {
-    val sh = cachedCorpus(shingles(df, idCol, textCol, k))
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val cands = bandPairs(signaturesFromShingles(sh, idCol, perms), idCol, perms, bands)
-    val inter = cands
-      .join(sh.select(col(idCol).as("doc1"), col("shingle")), Seq("doc1"))
-      .join(sh.select(col(idCol).as("doc2"), col("shingle")), Seq("doc2", "shingle"))
-      .groupBy("doc1", "doc2").agg(count(lit(1)).as("inter"))
-    jaccardFromIntersections(inter, sizes, idCol, threshold)
+    val docs = docSignatures(df, idCol, textCol, k, perms)
+    def side(d: String) = docs.select(col(idCol).as(d), col("__sh").as(s"__sh_$d"),
+      col("__n").as(s"__n_$d"))
+    bandPairs(docs, idCol, perms, bands)
+      .join(side("doc1"), Seq("doc1"))
+      .join(side("doc2"), Seq("doc2"))
+      .withColumn("inter", size(array_intersect(col("__sh_doc1"), col("__sh_doc2"))).cast("long"))
+      .filter(col("inter") > 0) // as the shingle-keyed join: no shared shingle, no pair
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("__n_doc1") + col("__n_doc2") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc1"), col("doc2"), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** Smallest threshold at which the banded composition's per-pair miss
@@ -520,20 +555,6 @@ object Dedup {
       else directFromShingles(sh, idCol, threshold)
     }
 
-  /** MinHash signatures computed from an existing `(id, shingle)` frame
-    * (one distinct-shingle row per doc): `perms` min-aggregates over the
-    * per-shingle MinHashPermHashes kernel — map-side combinable, only
-    * `perms` longs per doc per partition cross the shuffle. */
-  def signaturesFromShingles(sh: DataFrame, idCol: String, perms: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
-    val mins = (0 until perms).map(p => min(col("__mix").getItem(p)).as(s"__m$p"))
-    sh.withColumn("__mix",
-        graft.functions.GraftFunctions.minhashPermHashes(xxhash64(col("shingle")), perms))
-      .groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until perms).map(p => col(s"__m$p")): _*).as("sig"))
-  }
-
   /** THE band-key derivation over a signature array column: one
     * xxhash64 per `perms/bands`-row slice. Shared by the batch
     * [[bandPairs]] equi-join and the streaming gate
@@ -560,12 +581,11 @@ object Dedup {
   }
 
   /** MinHash signature: for each of `perms` seeded hash permutations,
-    * the min over the doc's shingles. Signatures are bit-identical to
-    * the array-input MinHashSig kernel (same base xxhash64, same
-    * splitmix finalize; spec-pinned). */
+    * the min over the doc's shingles — the `(id, sig)` columns of the
+    * cached [[docSignatures]] projection. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, perms: Int = 32): DataFrame =
-    signaturesFromShingles(shingles(df, idCol, textCol, k), idCol, perms)
+    docSignatures(df, idCol, textCol, k, perms).select(col(idCol), col("sig"))
 
   /** LSH candidate pairs: docs sharing any band of the MinHash
     * signature, with estimated Jaccard (matching-permutation fraction)
@@ -574,7 +594,7 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, perms: Int = 32, bands: Int = 8,
                         threshold: Double = 0.5): DataFrame = {
-    val sigs = cached(minhashSignatures(df, idCol, textCol, k, perms))
+    val sigs = minhashSignatures(df, idCol, textCol, k, perms)
     bandPairs(sigs, idCol, perms, bands)
       .join(sigs.select(col(idCol).as("doc1"), col("sig").as("sig1")), Seq("doc1"))
       .join(sigs.select(col(idCol).as("doc2"), col("sig").as("sig2")), Seq("doc2"))
@@ -584,92 +604,194 @@ object Dedup {
       .select(col("doc1"), col("doc2"), round(col("est_jaccard"), 4).as("est_jaccard"))
   }
 
-  /** Duplicate-cluster resolution: given candidate near-dup PAIRS,
-    * assign every doc the minimum id of its connected component (the
-    * survivor). Each round does one edge-hop (min label over
-    * neighbours) AND one pointer-doubling hop (label := label of my
-    * label), so convergence is O(log diameter) rounds — a 2^10-long
-    * chain resolves within the default bound. No driver-side graph.
+  /** Duplicate-cluster resolution: given candidate near-dup PAIRS
+    * `(doc1, doc2)`, assign every id in `ids` the minimum id of its
+    * connected component — the survivor, "minimum" in Spark's ordering
+    * of the id type (string ids get Spark's `min`). An edge with a null
+    * end or a self-loop connects nothing and is dropped. Returns
+    * (id, survivor) for every row of `ids`.
     *
-    * Cost shape: only ids that appear in a pair are iterated — every
-    * other id is trivially its own survivor and joins back at the end —
-    * and each round's result is localCheckpoint'ed so lineage (and
-    * re-planning cost) stays constant across rounds; superseded rounds
-    * unpersist, bounding storage to two label sets. Convergence is an
-    * exact changed-row probe (join on id, works for ANY id type —
-    * numeric-only witnesses like Σ survivor go null on string ids and
-    * would fake convergence) over the tiny pair-touched frame.
-    *
-    * Returns (id, survivor) for every id in `ids`. */
-  def survivors(pairs: DataFrame, ids: DataFrame, idCol: String,
-                maxIters: Int = 10): DataFrame = {
-    val edges = graft.Checkpoints.checkpoint(
-      pairs.select(col("doc1").as("a"), col("doc2").as("b"))
-        .union(pairs.select(col("doc2").as("a"), col("doc1").as("b"))))
-    // the emptiness probe rides the labels checkpoint's own
-    // materialization (CollectMetrics), not a separate isEmpty job
-    val obs0 = org.apache.spark.sql.Observation()
-    var labels = graft.Checkpoints.checkpoint(
-      edges.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("survivor"))
-        .observe(obs0, count(lit(1)).as("cnt")))
-    var iter = 0
-    var changed = graft.Observed.metrics(obs0)
-      .map(graft.Observed.longOf(_, "cnt") > 0L)
-      .getOrElse(!labels.isEmpty)
-    val gc = graft.LoopGc.ticker(pairs.sparkSession)
-    while (changed && iter < maxIters) {
-      val viaEdges = edges.join(labels, edges("b") === labels("id"))
-        .select(col("a").as("id"), col("survivor"))
-      val hopped = labels.select(col("id"), col("survivor")).union(viaEdges)
-        .groupBy("id").agg(min("survivor").as("survivor"))
-      // pointer doubling: survivor := survivor's survivor
-      val parents = hopped.select(col("id").as("__pid"), col("survivor").as("__psurv"))
-      // CONVERGENCE PROBE FUSED into the checkpoint materialization
-      // (guide §1.2 — remove serial driver passes): the old labels
-      // join in for comparison (1:1 — the id set is invariant across
-      // rounds: every round's ids are exactly the initial edge
-      // endpoints), a CollectMetrics node counts changed rows DURING
-      // the checkpoint job, and the carried __old column is projected
-      // away before the blocks are written. Replaces the per-round
-      // changed-row probe job. The exit is trust-but-verify: a zero
-      // observed count is re-confirmed by one exact probe below
-      // before the loop may end, so a wrong/missing metric can only
-      // cost rounds (bounded by maxIters), never change the fixpoint.
-      val obs = org.apache.spark.sql.Observation()
-      val next = graft.Checkpoints.checkpoint( // truncates lineage; labels stay one hop deep
-        hopped.join(parents, hopped("survivor") === col("__pid"), "left")
-          .select(col("id"), coalesce(col("__psurv"), col("survivor")).as("survivor"))
-          .join(labels.select(col("id"), col("survivor").as("__old")), Seq("id"))
-          .observe(obs, count(when(col("survivor") =!= col("__old"), 1)).as("chg"))
-          .select(col("id"), col("survivor")))
-      val observedChanged = graft.Observed.metrics(obs)
-        .map(graft.Observed.longOf(_, "chg") > 0L)
-      // exact probe when the metric says "converged" (confirm before
-      // exiting) or never arrived (fall back to pre-fusion behavior)
-      changed = observedChanged.contains(true) || next
-        .join(labels.withColumnRenamed("survivor", "__old"), Seq("id"))
-        .filter(col("survivor") =!= col("__old"))
-        .limit(1).count() > 0
-      // Checkpoints.free, NOT Dataset.unpersist: the latter only
-      // un-caches CacheManager entries and is a silent no-op on a
-      // checkpoint-backed frame (its blocks were persisted on the RDD
-      // directly) — the original unpersist here never freed anything
-      graft.Checkpoints.free(labels)
-      labels = next
-      iter += 1
-      gc.tick() // bound dead-shuffle residency in long builds (LoopGc)
+    * The pairs are materialized ONCE — one eager checkpoint, oriented
+    * (a = larger, b = smaller), whose CollectMetrics counts the edges
+    * — and then one of two exact routes runs; [[survivorStats]] counts
+    * each call's route and the star route's rounds:
+    *  - driver: at most [[driverEdgeBound]] + 1 edges are collected.
+    *    When they fit, union-find on the driver groups the ids into
+    *    components and Spark takes `array_min` over each component's
+    *    ids in a local relation that is broadcast into the final left
+    *    join. The bound comes from `spark.sql.autoBroadcastJoinThreshold`
+    *    (128 B per edge: ~82k edges at the 10 MB default), so the labels
+    *    are no larger than what Spark broadcasts anyway; a threshold
+    *    ≤ 0 turns the route off.
+    *  - star: larger graphs run alternating large-star/small-star
+    *    (Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014). Each round re-attaches every node's larger
+    *    neighbours to the least id of its closed neighbourhood (large
+    *    star), then every node and its smaller neighbours to their
+    *    least (small star); both keep connectivity, and the fixpoint is
+    *    one star per component centred on its minimum. The loop exits
+    *    on an exact "edge set unchanged" test: the observed counts of
+    *    each round's checkpoint may only skip the exact probe when they
+    *    show a change (the rule in [[graft.Observed]]). The alternating
+    *    algorithm converges in O(log² n) rounds; more than
+    *    2·(⌈log₂ n⌉ + 1)² rounds fails the call with a `require`
+    *    instead of returning wrong survivors. */
+  def survivors(pairs: DataFrame, ids: DataFrame, idCol: String): DataFrame = {
+    val spark = pairs.sparkSession
+    val obs = org.apache.spark.sql.Observation()
+    val edges = graft.Checkpoints.checkpoint(pairs
+      .filter(col("doc1").isNotNull && col("doc2").isNotNull && col("doc1") =!= col("doc2"))
+      .select(greatest(col("doc1"), col("doc2")).as("a"), least(col("doc1"), col("doc2")).as("b"))
+      .observe(obs, count(lit(1)).as("n")))
+    // the observed count is a cost hint only: it may double under
+    // reliable checkpoints, and the route never changes the result
+    val observed = graft.Observed.metrics(obs).map(graft.Observed.longOf(_, "n"))
+    val bound = driverEdgeBound(spark)
+    val collected: Option[Array[org.apache.spark.sql.Row]] =
+      if (bound <= 0 || observed.exists(_ > 2 * bound)) None
+      else if (observed.exists(_ <= bound)) Some(edges.collect())
+      else Some(edges.limit(bound.toInt + 1).collect()).filter(_.length <= bound)
+    val labels = collected match {
+      case Some(rows) =>
+        driverRoutes.incrementAndGet()
+        graft.Checkpoints.free(edges) // the labels are a local relation
+        driverLabels(rows, edges.schema("a").dataType, spark)
+      case None =>
+        starRoutes.incrementAndGet()
+        starLabels(edges, observed.getOrElse(edges.count()))
     }
-    // untouched ids are their own survivor. The returned frame stays
-    // LAZY and reads the final labels checkpoint, so labels cannot be
-    // freed here (it is bounded by the pair-touched ids, not the
-    // corpus); edges is dead — its last reader was the final round's
-    // viaEdges, materialized into that round's `next`
-    graft.Checkpoints.free(edges)
     ids.select(col(idCol).as("id"))
-      .join(labels.withColumnRenamed("survivor", "__s"), Seq("id"), "left")
+      .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("__s"), col("id")).as("survivor"))
   }
+
+  /** Calls of [[survivors]] per route, and the star route's summed
+    * rounds — JVM-wide, in the style of [[graft.Observed.fallbacks]]. */
+  final case class SurvivorStats(driverRoutes: Long, starRoutes: Long, starRounds: Long)
+
+  private val driverRoutes = new java.util.concurrent.atomic.AtomicLong()
+  private val starRoutes = new java.util.concurrent.atomic.AtomicLong()
+  private val starRounds = new java.util.concurrent.atomic.AtomicLong()
+
+  def survivorStats: SurvivorStats =
+    SurvivorStats(driverRoutes.get, starRoutes.get, starRounds.get)
+
+  /** Driver-side heap per collected edge (two boxed ids, the row, the
+    * union-find slots) that [[driverEdgeBound]] budgets for. */
+  private val EdgeBytes = 128L
+
+  /** Most edges [[survivors]] resolves on the driver:
+    * `spark.sql.autoBroadcastJoinThreshold` / 128 B; ≤ 0 when the
+    * threshold turns broadcasting off. */
+  def driverEdgeBound(spark: org.apache.spark.sql.SparkSession): Long =
+    math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / EdgeBytes, Int.MaxValue - 1L)
+
+  /** Round budget of the star route for a graph of at most `n` nodes:
+    * 2·(⌈log₂ n⌉ + 1)², the O(log² n) bound with slack (random chains
+    * of 2¹³ ids take 11 rounds). */
+  private[graft] def starRoundBound(n: Long): Int = {
+    val log2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(n, 2L) - 1)
+    2 * (log2 + 1) * (log2 + 1)
+  }
+
+  /** (id, __s) for every id of `edges` via union-find on the driver;
+    * the minimum of each component is Spark's `array_min`. */
+  private def driverLabels(edges: Array[org.apache.spark.sql.Row],
+                           idType: org.apache.spark.sql.types.DataType,
+                           spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val index = new java.util.HashMap[Any, Integer]()
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def node(v: Any): Int = {
+      val key = v match { case b: Array[Byte] => java.nio.ByteBuffer.wrap(b); case o => o }
+      val hit = index.get(key)
+      if (hit != null) hit.intValue
+      else {
+        val i = values.length
+        index.put(key, i); values += v; parent += i
+        i
+      }
+    }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) } // path halving
+      x
+    }
+    edges.foreach { r =>
+      val ra = find(node(r.get(0)))
+      val rb = find(node(r.get(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val comps = values.indices.groupBy(find).valuesIterator
+      .map(c => org.apache.spark.sql.Row(c.map(values)))
+      .toSeq
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types
+      .StructField("__ids", org.apache.spark.sql.types.ArrayType(idType, containsNull = false))))
+    broadcast(spark.createDataFrame(comps.asJava, schema)
+      .select(explode(col("__ids")).as("id"), array_min(col("__ids")).as("__s")))
+  }
+
+  /** (id, __s) for every id of the oriented `edges` checkpoint via
+    * alternating large-star/small-star rounds (see [[survivors]]);
+    * `nEdges` bounds the node count at 2·nEdges for the round budget.
+    * Superseded rounds are freed; the returned lazy frame reads the
+    * last one. */
+  private def starLabels(edges: DataFrame, nEdges: Long): DataFrame = {
+    val maxRounds = starRoundBound(2 * math.max(nEdges, 1L))
+    val gc = graft.LoopGc.ticker(edges.sparkSession)
+    var e = edges // round 0 reads the raw pairs, which may repeat an edge
+    var eCount = Option.empty[Long]
+    var rounds = 0
+    var changed = true
+    while (changed) {
+      require(rounds < maxRounds,
+        s"survivors: large-star/small-star did not converge within $maxRounds rounds " +
+          s"(2·(⌈log₂ n⌉ + 1)² for n ≤ ${2 * nEdges} nodes)")
+      // large star: edge (a, b), a > b, moves a onto the least id of b's
+      // closed neighbourhood — b itself, or b's least smaller neighbour
+      val mins = e.groupBy("a").agg(min("b").as("__m")).withColumnRenamed("a", "b")
+      val large = e.join(mins, Seq("b"), "left")
+        .select(col("a"), coalesce(col("__m"), col("b")).as("b"))
+      // small star: a and each of its smaller neighbours link to their least
+      val small = large.withColumn("__m",
+          min("b").over(org.apache.spark.sql.expressions.Window.partitionBy("a")))
+        .select(explode(array(
+          struct(col("a").as("x"), col("__m").as("y")),
+          struct(col("b").as("x"), col("__m").as("y")))).as("__e"))
+        .select(col("__e.x").as("a"), col("__e.y").as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()
+      val obs = org.apache.spark.sql.Observation()
+      val next = graft.Checkpoints.checkpoint(
+        if (rounds == 0) small.observe(obs, count(lit(1)).as("n"))
+        else small.join(e.withColumn("__old", lit(true)), Seq("a", "b"), "left")
+          .observe(obs, count(lit(1)).as("n"), count(col("__old")).as("kept"))
+          .select("a", "b"))
+      val m = graft.Observed.metrics(obs)
+      val n = m.map(graft.Observed.longOf(_, "n"))
+      // next == e iff next ⊆ e and |next| = |e| (both distinct after
+      // round 0): the counts can prove a change, only the exact probe
+      // proves there is none
+      val observedChange = rounds == 0 || (for (x <- n; k <- m.map(graft.Observed.longOf(_, "kept")))
+        yield k != x || eCount.exists(_ != x)).contains(true)
+      changed = observedChange || !sameEdges(next, e)
+      graft.Checkpoints.free(e)
+      e = next
+      eCount = n
+      rounds += 1
+      gc.tick() // bound dead-shuffle residency in long builds (LoopGc)
+    }
+    starRounds.addAndGet(rounds)
+    e.groupBy(col("a").as("id")).agg(min("b").as("__s"))
+  }
+
+  /** Exact set equality of two distinct (a, b) edge frames: one job. */
+  private def sameEdges(x: DataFrame, y: DataFrame): Boolean =
+    x.withColumn("__x", lit(true))
+      .join(y.withColumn("__y", lit(true)), Seq("a", "b"), "full_outer")
+      .filter(col("__x").isNull || col("__y").isNull)
+      .limit(1).count() == 0
 
   /** 64-bit SimHash over word hashes: bit b is set when the sum of
     * ±1 contributions (per word, sign of bit b of xxhash64(word)) is

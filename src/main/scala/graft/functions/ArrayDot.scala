@@ -156,36 +156,11 @@ object GraftFunctions {
         new ExpressionInfo(classOf[NibbleL1].getName, "nibble_l1"),
         (exprs: Seq[Expression]) => NibbleL1(exprs.head, exprs(1)))
     }
-
-    val mpId = FunctionIdentifier("minhash_perm_hashes")
-    if (!reg.functionExists(mpId)) {
-      reg.registerFunction(mpId,
-        new ExpressionInfo(classOf[MinHashPermHashes].getName, "minhash_perm_hashes"),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2)
-            throw new IllegalArgumentException(
-              s"minhash_perm_hashes(h0, perms) takes 2 arguments, got ${exprs.length}")
-          val permsExpr = exprs(1)
-          if (!permsExpr.foldable)
-            throw new IllegalArgumentException(
-              "minhash_perm_hashes(h0, perms): perms must be an integer literal")
-          permsExpr.eval() match {
-            case n: Number if n.intValue() > 0 => MinHashPermHashes(exprs.head, n.intValue())
-            case other => throw new IllegalArgumentException(
-              s"minhash_perm_hashes(h0, perms): perms must be a positive integer, got $other")
-          }
-        })
-    }
   }
 
   /** Native MinHash signature over array<string> shingles. */
   def minhashSig(shingles: Column, perms: Int): Column =
     call_function("minhash_sig", shingles, org.apache.spark.sql.functions.lit(perms))
-
-  /** Per-shingle permutation hashes from xxhash64(shingle) — feeds the
-    * min-aggregate signature formulation. */
-  def minhashPermHashes(h0: Column, perms: Int): Column =
-    call_function("minhash_perm_hashes", h0, org.apache.spark.sql.functions.lit(perms))
 
   /** Codegen'd Σ aᵢ·bᵢ over array<double> columns. */
   def arrayDot(a: Column, b: Column): Column = call_function("array_dot", a, b)

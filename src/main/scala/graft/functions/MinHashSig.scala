@@ -74,35 +74,3 @@ object MinHashMix {
     z ^ (z >>> 31)
   }
 }
-
-/** Per-shingle permutation hashes from a base xxhash64: input is the
-  * bigint xxhash64(shingle) (Spark's default seed 42 — the same base
-  * hash MinHashSig computes), output the `perms` mixed hashes. This is
-  * the SHINGLE-ROW formulation's kernel: signatures then come from
-  * `perms` min-aggregates, which combine map-side — no collect_set of
-  * shingle strings ever crosses the shuffle. Bit-identical signatures
-  * to MinHashSig. */
-case class MinHashPermHashes(child: Expression, perms: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_perm_hashes requires bigint (xxhash64 of the shingle), got ${t.simpleString(10)}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_perm_hashes"
-
-  private lazy val seeds: Array[Long] = MinHashMix.seeds(perms)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val h0 = input.asInstanceOf[Long]
-    val out = new Array[Long](perms)
-    var p = 0
-    while (p < perms) { out(p) = MinHashMix.mix(h0, seeds(p)); p += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

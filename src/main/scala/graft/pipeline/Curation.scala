@@ -53,8 +53,9 @@ object Curation {
     * holdout "unseen" text is a near-copy of a training doc). This
     * variant splits by near-dup CLUSTER: MinHash/LSH candidate pairs
     * ([[graft.dedup.Dedup.minhashCandidates]]) resolve to connected
-    * components ([[graft.dedup.Dedup.survivors]] — min-label +
-    * pointer doubling, O(log diameter) rounds), and the md5 bucket is
+    * components ([[graft.dedup.Dedup.survivors]] — union-find on the
+    * driver for pair sets under the broadcast threshold, else
+    * large-star/small-star rounds, O(log² n)), and the md5 bucket is
     * computed on the CLUSTER id, so every member of a near-dup family
     * shares a side. Singleton documents (no near-dup) hash on their
     * own id — identical to [[hashSplit]] for them. Output:

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * reuse the blocked triangular self-join of [[Cosine.nearDupPairs]]
   * with the cluster id fused into the join key, so one oversized cell
   * cannot serialize into a single task: each cell's quadratic work
-  * spreads over p(p+1)/2 block-pair tasks. Group resolution is the
-  * pointer-doubling [[Dedup.survivors]] (O(log diameter) rounds, and
-  * dup groups are tiny in practice).
+  * spreads over p(p+1)/2 block-pair tasks. Group resolution is
+  * [[Dedup.survivors]] (union-find on the driver while the pairs fit
+  * the broadcast threshold, else large-star/small-star rounds).
   *
   * Representative rule: the paper keeps the member with LOW cosine
   * similarity to its cluster centroid (outliers preserve diversity;

@@ -36,7 +36,7 @@ class CheckpointsSpec extends AnyFunSuite with SharedSpark {
     // reference output on the default (local) path
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc1", "doc2")
     val ids = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("id")
-    def run() = graft.dedup.Dedup.survivors(pairs, ids, "id")
+    def run() = onSurvivorsRoute("star")(graft.dedup.Dedup.survivors(pairs, ids, "id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val local = run()
     assert(local == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
@@ -79,17 +79,25 @@ class CheckpointsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("survivors frees superseded generations: at most the final labels stay resident") {
-    // a 6-long chain forces several pointer-doubling rounds, so the
-    // loop creates (and must free) several superseded label sets
-    val pairs = (1L to 6L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("doc1", "doc2")
+    // a 6-long chain over shuffled ids forces several star rounds, so
+    // the loop creates (and must free) several superseded edge sets;
+    // the driver route keeps no checkpoint at all
+    val order = Seq(4L, 1L, 6L, 3L, 5L, 2L)
+    val pairs = order.sliding(2).map(s => (s.head, s.last)).toSeq.toDF("doc1", "doc2")
     val ids = (1L to 8L).toDF("id")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = graft.dedup.Dedup.survivors(pairs, ids, "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out == ((1L to 6L).map(_ -> 1L) ++ Seq(7L -> 7L, 8L -> 8L)).toSet)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1,
-      s"survivors left ${leaked.size} checkpoints resident (expected <= 1, " +
-        "the final labels the lazy result still reads): rdd ids " + leaked.mkString(","))
+    val want = ((1L to 6L).map(_ -> 1L) ++ Seq(7L -> 7L, 8L -> 8L)).toSet
+    for ((route, resident) <- Seq("star" -> 1, "driver" -> 0)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rounds0 = graft.dedup.Dedup.survivorStats.starRounds
+      val out = onSurvivorsRoute(route)(graft.dedup.Dedup.survivors(pairs, ids, "id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(out == want, route)
+      if (route == "star")
+        assert(graft.dedup.Dedup.survivorStats.starRounds - rounds0 >= 2, "expected several rounds")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.size <= resident,
+        s"$route route left ${leaked.size} checkpoints resident (expected <= $resident, " +
+          "the final edges the lazy result still reads): rdd ids " + leaked.mkString(","))
+    }
   }
 }

@@ -117,12 +117,22 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
       .count() == 0)
   }
 
-  test("survivors resolves a long chain within the iteration bound (pointer doubling)") {
+  test("survivors resolves long chains within the round bound (star route)") {
     import graft.dedup.Dedup
-    val chain = (1 until 40).map(i => (i.toLong, (i + 1).toLong)).toDF("doc1", "doc2")
-    val ids = (1 to 40).map(_.toLong).toDF("doc_id")
-    val surv = Dedup.survivors(chain, ids, "doc_id")
-    assert(surv.filter(col("survivor") =!= 1L).count() == 0) // whole chain → min id 1
+    // a sorted chain and the same chain over shuffled ids: the old
+    // min-label loop needed rounds linear in the length of the second
+    val shuffled = new scala.util.Random(3).shuffle((1L to 300L).toVector)
+    for (order <- Seq((1L to 300L).toVector, shuffled)) {
+      val chain = order.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc1", "doc2")
+      val ids = (1L to 300L).toDF("doc_id")
+      val before = Dedup.survivorStats.starRounds
+      val surv = onSurvivorsRoute("star")(Dedup.survivors(chain, ids, "doc_id")).cache()
+      val rounds = Dedup.survivorStats.starRounds - before
+      assert(surv.count() == 300)
+      assert(surv.filter(col("survivor") =!= 1L).count() == 0) // whole chain → min id 1
+      assert(rounds <= Dedup.starRoundBound(600L), s"$rounds rounds")
+      surv.unpersist()
+    }
   }
 
   test("spline with fewer than 3 knots degrades to linear/constant") {

@@ -44,15 +44,20 @@ class ObservedSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("survivors converges identically with the fused probe (chain needs >1 round)") {
-    // an 8-long chain: pointer doubling needs ~3 rounds, and the fused
-    // observed probe must neither exit early (wrong survivors) nor
-    // spin to maxIters (the exact confirm runs once, at the fixpoint)
-    val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("doc1", "doc2")
+    // an 8-long chain over shuffled ids on the star route: it needs
+    // several rounds, and the observed counts must neither end the loop
+    // early (wrong survivors) nor keep it spinning (the exact probe
+    // confirms the fixpoint once). Probe jobs are counted by job group.
+    val order = Seq(5L, 2L, 8L, 1L, 7L, 3L, 6L, 4L)
+    val pairs = order.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc1", "doc2")
     val ids = (1L to 10L).toDF("id")
-    val got = graft.dedup.Dedup.survivors(pairs, ids, "id")
+    val before = graft.dedup.Dedup.survivorStats.starRounds
+    val got = onSurvivorsRoute("star")(graft.dedup.Dedup.survivors(pairs, ids, "id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rounds = graft.dedup.Dedup.survivorStats.starRounds - before
     val want = ((1L to 8L).map(i => (i, 1L)) ++ Seq((9L, 9L), (10L, 10L))).toSet
     assert(got === want)
+    assert(rounds >= 2 && rounds <= graft.dedup.Dedup.starRoundBound(14L), s"$rounds rounds")
   }
 
   test("Tables schema cache re-infers after an in-place rewrite (mtime key)") {
@@ -67,6 +72,31 @@ class ObservedSpec extends AnyFunSuite with SharedSpark {
     val second = Tables(spark, dir, "documents").schema.fieldNames.toSet
     assert(second === Set("doc_id", "text", "extra"),
       "schema cache served a stale StructType after an in-place rewrite")
+  }
+
+  test("Tables schema cache: rewrites replace one entry; invalidate covers the same-mtime window") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tabinv").toString
+    val path = s"$dir/documents.parquet"
+    val narrow = Seq((1L, "a")).toDF("doc_id", "text")
+    val wide = Seq((1L, "a", 0.5)).toDF("doc_id", "text", "extra")
+    def cols = Tables(spark, dir, "documents").schema.fieldNames.toSet
+    // N rewrites at distinct mtimes: each is re-inferred, and the path
+    // keeps ONE entry (the old key grew by one per mtime)
+    for (i <- 1 to 4) {
+      (if (i % 2 == 0) wide else narrow).write.mode("overwrite").parquet(path)
+      assert(new java.io.File(path).setLastModified(i * 1000000L))
+      assert(cols === (if (i % 2 == 0) Set("doc_id", "text", "extra") else Set("doc_id", "text")))
+    }
+    assert(Tables.schemaCacheEntries(path) === 1)
+    // a rewrite that keeps the mtime (same-second window) is served
+    // the stale schema until invalidate
+    narrow.write.mode("overwrite").parquet(path)
+    assert(new java.io.File(path).setLastModified(4000000L))
+    assert(cols === Set("doc_id", "text", "extra"), "fixture no longer reproduces the window")
+    Tables.invalidate(path)
+    assert(Tables.schemaCacheEntries(path) === 0)
+    assert(cols === Set("doc_id", "text"))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("a metric that never arrives falls back to None and is counted") {

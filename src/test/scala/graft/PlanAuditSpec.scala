@@ -75,6 +75,81 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
 
+  test("Spark pin: under AQE no exchange is reused above a cached or checkpointed leaf") {
+    // the reuse gap the dedup plans are built around (Dedup.docSignatures):
+    // an aggregate self-unioned over spark.range reads ONE exchange
+    // twice, the same plan over a cached or checkpointed frame runs its
+    // shuffle once per branch. If an upgrade closes the gap, this fails
+    // and the per-document projection's rationale needs re-measuring.
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    def shape(base: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val agg = base.groupBy((col("id") % 10).as("k")).agg(sum("id").as("s"))
+      val df = agg.union(agg)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      (Walk.collect(p) { case s: ShuffleQueryStageExec if !s.plan.isInstanceOf[ReusedExchangeExec] => s }.size,
+        Walk.collect(p) { case r: ReusedExchangeExec => r }.size)
+    }
+    assert(shape(spark.range(0, 1000, 1, 4).toDF()) === (1, 1), "control: range must reuse")
+    val cached = spark.range(0, 1000, 1, 4).toDF().cache()
+    cached.count()
+    try assert(shape(cached) === (2, 0), "cached leaf")
+    finally cached.unpersist()
+    val ck = Checkpoints.checkpoint(spark.range(0, 1000, 1, 4).toDF())
+    try assert(shape(ck) === (2, 0), "checkpointed leaf")
+    finally Checkpoints.free(ck)
+  }
+
+  test("banded pair plan: one minhash_sig per document, no min aggregate over exploded shingles") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Min
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    object Walk extends AdaptiveSparkPlanHelper // descends into AQE-planned caches
+    val q = SparkEntry.queries("q_dedup_ngram_banded")(spark, sf).queryExecution
+    val outer = q.withCachedData
+    val cachedPlans = outer.collect { case r: InMemoryRelation => r.cacheBuilder }
+      .distinct.map(_.cachedPlan)
+    def count(es: Seq[Expression])(pf: PartialFunction[Expression, Unit]) =
+      es.map(_.collect(pf).size).sum
+    def sigs(es: Seq[Expression]) = count(es) { case _: graft.functions.MinHashSig => () }
+    def mins(es: Seq[Expression]) = count(es) { case _: Min => () }
+    val outerExprs = outer.collect { case n => n.expressions }.flatten
+    val cachedExprs = cachedPlans.flatMap(p => Walk.collect(p) { case n => n.expressions }.flatten)
+    assert(cachedPlans.nonEmpty, "the per-document projection is not cached")
+    assert(sigs(outerExprs) === 0, "minhash_sig evaluated outside the cached projection")
+    assert(sigs(cachedExprs) === 1, s"expected one minhash_sig in the cached projection")
+    assert(mins(outerExprs) + mins(cachedExprs) === 0, "a min aggregate is back in the banded plan")
+  }
+
+  test("spanStatsPerRow: a consumer filter stays above the spread exchange (rand()*0.0 barrier)") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val bloom = graft.dedup.Dedup.duplicatedGramBloom(Tables.documents(spark, sf), "doc_id", "text")
+    // one split and ~3.6 MB of plan stats: Parallelism.spread inserts its
+    // round-robin exchange in front of the scoring fold
+    val docs = spark.range(0, 200000, 1, 1).select(col("id").as("doc_id"),
+      concat(lit("w"), col("id").cast("string"), lit(" a b c d e f g h i j k")).as("text"))
+    val gated = graft.dedup.Dedup.spanStatsPerRow(docs, bloom, "doc_id", "text")
+      .filter(col("dup_fraction") > 0)
+    val phys = gated.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val spreads = phys.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    assert(spreads.size === 1, s"expected the spread exchange\n$phys")
+    assert(phys.toString.contains("bloom_might_contain"), phys.toString.take(1500))
+    assert(!spreads.head.child.toString.contains("bloom_might_contain"),
+      s"the scoring fold was pushed below the spread exchange\n$phys")
+  }
+
   test("bounded exact embed baseline: broadcast probes × ONE corpus scan, no cartesian") {
     // q_dedup_embed is the bounded-probe exact baseline (O(|probes|·n)):
     // the right plan IS a nested-loop whose build side is the broadcast

@@ -68,7 +68,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     val directMeetings = sh.groupBy("shingle").count()
       .agg(sum(col("count") * (col("count") - 1) / 2).cast("long")).first().getLong(0)
     val bandedCands = Dedup.bandPairs(
-      Dedup.signaturesFromShingles(sh, "doc_id", 64), "doc_id", 64, 32).count()
+      Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 64), "doc_id", 64, 32).count()
     assert(directMeetings > 15000, s"Zipfian fixture should explode the direct join (got $directMeetings)")
     assert(bandedCands < 2000, s"banded candidates should stay linear (got $bandedCands)")
     assert(directMeetings > 5 * bandedCands)
@@ -82,6 +82,21 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     // the exact result (via the prefix path, which prunes the megashingle)
     val auto = toSet(Dedup.ngramJaccardPairsAuto(corpus, "doc_id", "text", 3, 0.2))
     assert(auto == direct)
+  }
+
+  test("banded pairs: an id on two rows is one document with the union of their shingles") {
+    // doc 2's two rows are the disjoint halves of doc 1: 4 + 4 shingles,
+    // all among doc 1's 10, so J(1, 2) = 8 / 10 — the value the
+    // shingle-row formulation (and the direct join) gives on this input
+    val corpus = Seq((1L, (0 until 12).map(i => s"w$i").mkString(" ")),
+      (2L, (0 until 6).map(i => s"w$i").mkString(" ")),
+      (2L, (6 until 12).map(i => s"w$i").mkString(" ")),
+      (3L, "x0 x1 x2 x3")).toDF("doc_id", "text")
+    def toSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val banded = toSet(Dedup.ngramJaccardPairsBanded(corpus, "doc_id", "text", 3, 0.5))
+    assert(banded === Set((1L, 2L, 0.8)))
+    assert(toSet(Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.5)) === banded)
   }
 
   test("ngram router: recall-1 path below the banding boundary, where banding demonstrably under-recalls") {
@@ -125,14 +140,32 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("min-aggregate minhash signatures are bit-identical to the array kernel") {
-    graft.functions.GraftFunctions.register(spark)
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-    val viaKernel = sh.groupBy("doc_id").agg(collect_set(col("shingle")).as("s"))
-      .select(col("doc_id"), graft.functions.GraftFunctions.minhashSig(col("s"), 16).as("sig"))
+    // the reference is written here, not taken from the library: one
+    // xxhash64 per distinct shingle (Spark's seed 42), a splitmix64
+    // finalize per permutation with seed (p+1)·φ, then the min per
+    // permutation over the doc's exploded shingles. Doc 5 occurs on two
+    // rows: its signature is that of the union of their shingles.
+    val golden = 0x9E3779B97F4A7C15L
+    def mix(h0: Long, seed: Long): Long = {
+      var z = h0 ^ seed
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+    val perms = 16
+    val permHashes = udf((h0: Long) => (1 to perms).map(p => mix(h0, p.toLong * golden)))
+    val corpus = docs.unionByName(Seq(
+      (5L, "one two three four five"), (5L, "six seven eight nine ten")).toDF("doc_id", "text"))
+    val shingled = Dedup.shingles(corpus, "doc_id", "text", 3).distinct()
+    val reference = shingled
+      .select(col("doc_id"), posexplode(permHashes(xxhash64(col("shingle")))).as(Seq("p", "h")))
+      .groupBy("doc_id", "p").agg(min("h").as("h"))
+      .collect().groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
+    val viaKernel = Dedup.minhashSignatures(corpus, "doc_id", "text", 3, perms)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaAgg = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 16)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaAgg == viaKernel)
+    assert(reference.keySet === Set(1L, 2L, 3L, 4L, 5L))
+    assert(viaKernel === reference)
   }
 
   test("simhash: identical texts at distance 0, near texts close, far texts blocked or distant") {
