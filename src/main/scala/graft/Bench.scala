@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * ±50% between interleaved runs of a 50-query single-JVM session. A
   * query that throws is recorded under "errors" with a zero time, never
   * a silent −1 that would shrink the total. A streaming section reports
-  * MemoryStream events/sec for the stateful operators. */
+  * MemoryStream events/sec for the stateful operators. BENCH_LATEST.json
+  * also carries each query's Janino compiles and compile ms per timed
+  * iteration (`codegen_compiles`, `codegen_ms`, from [[CodegenCensus]]):
+  * a warm compiled-class cache compiles only in the first. */
 object Bench {
   /** Local core count for the mains: `SPARK_GRAFT_CPUS`, default 4. */
   private[graft] def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -57,6 +60,9 @@ object Bench {
     val only = args.headOption.map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // Janino compiles per query and timed iteration: with a warm
+    // compiled-class cache only the first iteration compiles
+    val codegen = scala.collection.mutable.LinkedHashMap.empty[String, Seq[CodegenCensus.Snapshot]]
     // SharedFrames families: expensive intermediates several queries
     // legitimately share (the point of the registry — a user running
     // both members pays the construction once, and the artifact should
@@ -97,9 +103,11 @@ object Bench {
       // family member stay available for reuse — that amortization is
       // the measurement the registry exists to demonstrate
       SharedFrames.creatorTag = name
-      val runs = (1 to iters).map { _ =>
-        SharedFrames.releaseCreatedBy(name); timeOnce(fn)
+      val timed = (1 to iters).map { _ =>
+        SharedFrames.releaseCreatedBy(name); CodegenCensus.during(timeOnce(fn))
       }
+      val runs = timed.map(_._1)
+      codegen += name -> timed.map(_._2)
       val ok = runs.collect { case Right(s) => s }
       runs.collectFirst { case Left(e) => e }.foreach(errors += name -> _)
       name -> (if (ok.nonEmpty) math.rint(median(ok) * 1000) / 1000 else 0.0)
@@ -160,7 +168,11 @@ object Bench {
     // stay lean, but the FILE has no window)
     val streamingJson = streamingOpt
       .map(s => s""","events_per_sec":$s""").getOrElse("")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull$streamingJson,"sf":"$sfDir","t":$epoch}"""
+    def perQuery(v: CodegenCensus.Snapshot => String): String = codegen.map { case (k, cs) =>
+      s"\"" + k + "\":" + cs.map(v).mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val compiles = perQuery(_.compiles.toString)
+    val compileMs = perQuery(c => math.rint(c.ms).toLong.toString)
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull$streamingJson,"codegen_compiles":$compiles,"codegen_ms":$compileMs,"sf":"$sfDir","t":$epoch}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LATEST.json"),
       (full + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

@@ -349,13 +349,23 @@ object Dedup {
       .filter(size(col("__ws")) >= k)
       .select(col(idCol), explode(shingleArray(k)).as("shingle"))
 
+  /** [[shingles]] with one (id, shingle) row per id however many rows
+    * the id sits on: the union of an id's rows is one document, as in
+    * [[ngramJaccardPairsBanded]]. The exact paths count and intersect
+    * these rows, so a repeated row would count a shingle twice. The
+    * frame is hash-partitioned by id, so the per-id counts above it
+    * need no exchange of their own. */
+  private[graft] def docShingles(df: DataFrame, idCol: String, textCol: String,
+                                 k: Int): DataFrame =
+    shingles(df, idCol, textCol, k).repartition(col(idCol)).distinct()
+
   /** The tracked corpus shingle cache the ngram operators share
     * (Spark's CacheManager matches it by plan) — exposed so a caller
     * can materialize it in a dedicated job BEFORE a memory-hungry pair
     * join would otherwise populate it from inside pressured tasks. */
   def ngramShingleCache(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3): DataFrame =
-    cachedCorpus(shingles(df, idCol, textCol, k))
+    cachedCorpus(docShingles(df, idCol, textCol, k))
 
   /** Exact n-gram Jaccard pairs >= threshold (id1 < id2), via
     * positional prefix filtering (the AllPairs/PPJoin principle,
@@ -371,7 +381,7 @@ object Dedup {
     // subtrees of the RETURNED lazy plan, so it cannot be unpersisted
     // here; reclaim after materializing via releaseCaches() (or LRU
     // eviction / spark.catalog.clearCache(), as the bench harness does)
-    prefixFromShingles(cached(shingles(df, idCol, textCol, k)), idCol, threshold)
+    prefixFromShingles(cached(docShingles(df, idCol, textCol, k)), idCol, threshold)
 
   private[dedup] def prefixFromShingles(sh: DataFrame, idCol: String,
                                         threshold: Double): DataFrame = {
@@ -420,7 +430,7 @@ object Dedup {
     * is `ngramJaccardPairsBanded`. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.2): DataFrame =
-    directFromShingles(cached(shingles(df, idCol, textCol, k)), idCol, threshold)
+    directFromShingles(cached(docShingles(df, idCol, textCol, k)), idCol, threshold)
 
   private[dedup] def directFromShingles(sh: DataFrame, idCol: String,
                                         threshold: Double): DataFrame = {
@@ -531,7 +541,7 @@ object Dedup {
     if (threshold >= bandedSafeThreshold(perms, bands))
       ngramJaccardPairsBanded(df, idCol, textCol, k, threshold, perms, bands)
     else {
-      val sh = cachedCorpus(shingles(df, idCol, textCol, k))
+      val sh = cachedCorpus(docShingles(df, idCol, textCol, k))
       // Skew is measured on a Bernoulli SAMPLE of the shingle frame:
       // E[C(Binomial(df, p), 2)] = C(df, 2)·p², i.e. sampling scales
       // every shingle group's meeting count by the same p², so the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Params
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,11 +37,12 @@ object Fit {
         lit(null).cast("double").as("slope"), lit(null).cast("double").as("intercept"),
         lit(null).cast("double").as("r2"), lit(null).cast("double").as("rmse"))
     }
-    val (b, a) = (row.getDouble(0), row.getDouble(1))
-    df.agg(sqrt(avg(pow(col(yCol) - (lit(a) + lit(b) * col(xCol)), 2))).as("__rmse"))
+    // by reference, not as inlined literals: one compiled class for every fit
+    val fit = Params.of(row.getDouble(1), row.getDouble(0), row.getDouble(2))
+    df.agg(sqrt(avg(pow(col(yCol) - (fit(0) + fit(1) * col(xCol)), 2))).as("__rmse"))
       .select(lit(1).as("id"),
-        round(lit(b), 4).as("slope"), round(lit(a), 4).as("intercept"),
-        round(lit(row.getDouble(2)), 4).as("r2"), round(col("__rmse"), 4).as("rmse"))
+        round(fit(1), 4).as("slope"), round(fit(0), 4).as("intercept"),
+        round(fit(2), 4).as("r2"), round(col("__rmse"), 4).as("rmse"))
   }
 
   /** Polynomial fit by normal equations. Output: (degree, coef) rows,
@@ -173,36 +175,24 @@ object Fit {
     * evaluations. Per row and candidate the kernel is a single exp():
     * t is precomputed in the cache (no per-candidate ln/pow — pow(x,b)
     * costs several× exp and was the whole-suite's hottest scalar) and
-    * the squared basis reuses it as e·e. Driver sees only scalars. */
+    * the squared basis reuses it as e·e. Driver sees only scalars.
+    * Every job binds its numbers (seed, candidates) through one
+    * [[Params]] array, so the two job shapes (seed, round) compile once
+    * per JVM, not once per round and call. */
   private def annealedScale(d0: DataFrame, tExpr: org.apache.spark.sql.Column, yCol: String,
       a0: Double, b0: Double, iterations: Int, seed: Long): DataFrame = {
     val spark = d0.sparkSession
-    def basis(b: Double): org.apache.spark.sql.Column = exp(lit(b) * col("t"))
     val d = d0.select(tExpr.cast("double").as("t"), col(yCol).cast("double").as("y")).cache()
     try {
       val rng = new scala.util.Random(seed)
       val pop = 8
       val rounds = math.max(1, math.ceil(iterations.toDouble / pop).toInt)
-      val syyRow = d.agg(sum(pow(col("y"), 2))).first()
-      if (syyRow.isNullAt(0)) { // empty input: undefined fit, typed nulls
-        import spark.implicits._
-        return Seq((Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double]))
-          .toDF("a", "b", "sse_seed", "sse", "a_seed", "b_seed")
-      }
-      val syy = syyRow.getDouble(0)
-      // (sse with its optimal a, that a) per candidate, one job total;
-      // an exploding/degenerate basis poisons its candidate so it loses
-      // to every finite one
-      def evalAll(bs: Seq[Double]): Seq[(Double, Double)] = {
-        val aggs = bs.zipWithIndex.flatMap { case (b, j) =>
-          val e = basis(b) // codegen CSE shares the one exp() across both sums
-          Seq(sum(col("y") * e).as(s"__syf$j"), sum(e * e).as(s"__sff$j"))
-        }
-        val r = d.agg(aggs.head, aggs.tail: _*).first()
-        bs.indices.map { j =>
-          val (si, fi) = (2 * j, 2 * j + 1)
+      // (sse with its optimal a, that a) per candidate from the sums
+      // Σy·f and Σf·f; an exploding/degenerate basis poisons its
+      // candidate so it loses to every finite one
+      def costs(r: org.apache.spark.sql.Row, syy: Double, from: Int, n: Int): Seq[(Double, Double)] =
+        (0 until n).map { j =>
+          val (si, fi) = (from + 2 * j, from + 2 * j + 1)
           if (r.isNullAt(si) || r.isNullAt(fi) || !r.getDouble(fi).isFinite ||
               !r.getDouble(si).isFinite || r.getDouble(fi) <= 0) (Double.MaxValue, 0.0)
           else {
@@ -210,9 +200,30 @@ object Fit {
             (math.max(0.0, syy - a * r.getDouble(si)), a)
           }
         }
+      def basisSums(p: org.apache.spark.sql.Column, j: Int): Seq[org.apache.spark.sql.Column] = {
+        val e = exp(p(j) * col("t")) // codegen CSE shares the one exp() across both sums
+        Seq(sum(col("y") * e).as(s"__syf$j"), sum(e * e).as(s"__sff$j"))
       }
-      val sseSeed = d.agg(sum(pow(col("y") - lit(a0) * basis(b0), 2))).first().getDouble(0)
-      var (currentCost, currentA) = evalAll(Seq(b0)).head
+      // seed job: Σy², the seed's own sums and its y-space SSE at a0
+      val ps = Params.of(b0, a0)
+      val seedRow = d.agg(sum(pow(col("y"), 2)),
+        basisSums(ps, 0) :+ sum(pow(col("y") - ps(1) * exp(ps(0) * col("t")), 2)): _*).first()
+      if (seedRow.isNullAt(0)) { // empty input: undefined fit, typed nulls
+        import spark.implicits._
+        return Seq((Option.empty[Double], Option.empty[Double],
+          Option.empty[Double], Option.empty[Double],
+          Option.empty[Double], Option.empty[Double]))
+          .toDF("a", "b", "sse_seed", "sse", "a_seed", "b_seed")
+      }
+      val syy = seedRow.getDouble(0)
+      val sseSeed = seedRow.getDouble(3)
+      // a round's `pop` candidates in one job
+      def evalAll(bs: Seq[Double]): Seq[(Double, Double)] = {
+        val p = Params.of(bs: _*)
+        val aggs = bs.indices.flatMap(basisSums(p, _))
+        costs(d.agg(aggs.head, aggs.tail: _*).first(), syy, 0, bs.size)
+      }
+      var (currentCost, currentA) = costs(seedRow, syy, 1, 1).head
       var current = b0
       var (best, bestCost, bestA) = (b0, currentCost, currentA)
       for (k <- 1 to rounds) {

@@ -101,7 +101,8 @@ object Curation {
     // once, through the tracked registry so a long-running pipeline
     // calling this repeatedly has a release handle (withCacheScope /
     // releaseCaches) instead of an unbounded cache leak
-    val cs = Dedup.cachedCorpus(Dedup.shingles(corpus, idCol, textCol, k))
+    // one row per (id, shingle): the rows of a repeated id are one document
+    val cs = Dedup.cachedCorpus(Dedup.docShingles(corpus, idCol, textCol, k))
     // only the benchmark's TEXT matters — don't require it to carry the
     // corpus's id column
     val bs = Dedup.shingles(benchmark.select(lit(0L).as("__bid"), col(textCol)),

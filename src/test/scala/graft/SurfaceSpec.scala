@@ -35,6 +35,16 @@ class SurfaceSpec extends AnyFunSuite {
     assert(withMain === Set("Bench", "Verify", "Explain"))
   }
 
+  test("the settings GraftSession makes equal the README session-defaults table") {
+    val src = new String(Files.readAllBytes(mainRoot.resolve("graft/GraftSession.scala")), "UTF-8")
+    val inCode = """\.config\("([^"]+)"""".r.findAllMatchIn(src).map(_.group(1)).toSet
+    val row = """^\|\s*`(spark\.[\w.]+)`\s*\|.*""".r
+    val inReadme = Files.readAllLines(Paths.get("README.md")).asScala.toSeq
+      .collect { case row(key) if !key.startsWith("spark.graft.") => key }
+    assert(inReadme.distinct.size === inReadme.size, s"duplicate README rows: $inReadme")
+    assert(inCode === inReadme.toSet)
+  }
+
   test("spark.graft keys in the library equal the README knob table, each justified") {
     val inCode = sources(mainRoot).flatMap { case (_, src) =>
       confKey.findAllMatchIn(src).map(_.group(1))

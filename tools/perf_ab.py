@@ -15,6 +15,11 @@ direction): each side's median and quartiles, the pairs B won (ties count
 for neither), and whether the gain rule holds: B wins at least 9/10 of the
 pairs and the medians differ by more than A's interquartile range. Also the
 failed share of each side. --out writes every run's metrics as JSON.
+
+It flags, and exits 1 on, any metric whose B median is worse than its A
+median by more than the metric's BENCHMARK.json bound (a relative bound:
+0.1 = 10%), and a B failed share above A's, so a regression the benchmark
+would refuse shows before the change is submitted.
 """
 import argparse
 import json
@@ -59,12 +64,15 @@ def summarize(runs, metrics):
         b1, bm, b3 = quartiles(b)
         wins = sum(1 for x, y in pairs if (y < x if lower else y > x))
         better = bm < am if lower else bm > am
+        worse_by = ((bm - am) if lower else (am - bm)) / am if am else 0.0
+        bound = m.get("bound")
         rows.append({"metric": name, "unit": m.get("unit", ""), "pairs": len(pairs),
                      "a_q1": a1, "a_median": am, "a_q3": a3,
                      "b_q1": b1, "b_median": bm, "b_q3": b3,
                      "b_wins": wins, "delta_pct": 100.0 * (bm - am) / am if am else float("nan"),
                      "gain_rule": bool(better and wins >= 0.9 * len(pairs) and abs(bm - am) > a3 - a1),
-                     "bound": m.get("bound")})
+                     "bound": bound,
+                     "over_bound": bool(bound is not None and worse_by > bound)})
     return rows
 
 
@@ -82,6 +90,7 @@ def main():
     with open(os.path.join(b, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
     result = {"a": a, "b": b, "seconds": args.seconds, "workloads": {}}
+    flags = []
     for w in args.workload:
         runs = []
         for i in range(args.pairs):
@@ -105,10 +114,23 @@ def main():
         for r in rows:
             print(f"{r['metric']:14} {r['a_q1']:8.4g}/{r['a_median']:8.4g}/{r['a_q3']:8.4g} "
                   f"{r['b_q1']:8.4g}/{r['b_median']:8.4g}/{r['b_q3']:8.4g} "
-                  f"{r['delta_pct']:+7.1f}% {r['b_wins']:3d}/{r['pairs']:<3d} {r['gain_rule']}")
+                  f"{r['delta_pct']:+7.1f}% {r['b_wins']:3d}/{r['pairs']:<3d} {r['gain_rule']}"
+                  + ("  OVER BOUND" if r["over_bound"] else ""))
+            if r["over_bound"]:
+                flags.append(f"{w} {r['metric']}: B median {r['delta_pct']:+.1f}% vs A, bound {r['bound']:.0%}")
+        if failed["b"] > failed["a"]:
+            flags.append(f"{w}: B failed share {failed['b']:.3f} above A's {failed['a']:.3f}")
+        crashed = {s: sum(1 for r in runs if "error" in r[s]) for s in ("a", "b")}
+        if crashed["b"] > crashed["a"]:
+            flags.append(f"{w}: {crashed['b']} B runs ended without a result (A: {crashed['a']})")
+    result["flags"] = flags
     if args.out:
         with open(args.out, "w") as f:
             json.dump(result, f, indent=1)
+    for flag in flags:
+        print(f"FLAG {flag}", file=sys.stderr)
+    if flags:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
