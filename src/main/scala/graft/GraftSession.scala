@@ -50,8 +50,9 @@ object GraftSession {
       // Dead-shuffle residency in iterative builds (the r18 sf100 SA
       // lesson, BENCH_sa_sf100_postfix_r18.json) is now bounded INSIDE
       // the loops themselves: graft.LoopGc forces a throttled driver
-      // GC about once a minute while a doubling/survivors/LCP loop is
-      // running, so the bound holds in EVERY session (graft.Bench's
+      // GC at most once a minute (a fixed interval, no session key)
+      // while a doubling/survivors/LCP loop is running, so the bound
+      // holds in EVERY session (graft.Bench's
       // own session never had the r18 session-global
       // spark.cleaner.periodicGC.interval=90s) and short queries never
       // inherit forced-full-GC risk for a residency problem only long

@@ -81,41 +81,35 @@ object Observed {
   * forced-full-GC risk for a residency problem only long iterative
   * builds have, and sessions built outside GraftSession (graft.Bench's
   * own, a user's) never got the bound at all. This hook moves the GC
-  * INTO the loops: each round calls [[maybeGc]], which is a no-op
+  * INTO the loops: each round calls [[LoopGc.Ticker.tick]], a no-op
   * until the loop has been running ≥ the interval since the last GC —
   * so a build that finishes in seconds (every sf0.1 query) never pays
   * a forced GC, while a multi-minute sf10/sf100 build GCs about once a
   * minute, bounding dead-shuffle residency to ~interval regardless of
   * which session created the frames. */
 object LoopGc {
-  /** Seconds between forced GCs inside iterative builds; <= 0 disables.
-    * Fractions are honored; a value that is not a finite number falls
-    * back to the default (60) instead of failing the build. */
-  val IntervalKey = "spark.graft.loopGcIntervalSec"
-
-  private[graft] def intervalNs(conf: Option[String]): Long =
-    conf.flatMap(_.trim.toDoubleOption).filterNot(d => d.isNaN || d.isInfinite)
-      .map(s => (s * 1e9).toLong).getOrElse(60L * 1000000000L)
+  /** Nanoseconds between forced GCs inside iterative builds (60 s).
+    * BENCH_sa_sf10_r19.json switched it off together with the
+    * chunked-LCP work pin; the defaults won both pairs. */
+  private val IntervalNs = 60L * 1000000000L
 
   // JVM-global throttle so two concurrent loops don't double-GC: a
   // tick GCs only if its compare-and-set claims the slot
   private val lastGcNs = new AtomicLong(0L)
 
   /** Per-loop ticker: call [[Ticker.tick]] once per round. GCs only
-    * when ≥ interval has elapsed since BOTH this loop's start and the
-    * last JVM-wide forced GC — a loop shorter than the interval (every
-    * sf0.1 build) never GCs at all. */
-  final class Ticker(spark: org.apache.spark.sql.SparkSession) {
+    * when ≥ the interval has elapsed since BOTH this loop's start and
+    * the last JVM-wide forced GC — a loop shorter than the interval
+    * (every sf0.1 build) never GCs at all. */
+  final class Ticker {
     private val startNs = System.nanoTime()
-    private[graft] val intervalNs = LoopGc.intervalNs(spark.conf.getOption(IntervalKey))
     def tick(): Unit = {
-      if (intervalNs <= 0) return
       val now = System.nanoTime()
       val last = lastGcNs.get
-      if (now - math.max(startNs, last) >= intervalNs && lastGcNs.compareAndSet(last, now))
+      if (now - math.max(startNs, last) >= IntervalNs && lastGcNs.compareAndSet(last, now))
         System.gc()
     }
   }
 
-  def ticker(spark: org.apache.spark.sql.SparkSession): Ticker = new Ticker(spark)
+  def ticker(): Ticker = new Ticker
 }

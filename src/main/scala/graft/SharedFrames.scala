@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Cross-query reuse registry for EXPENSIVE intermediates that several
-  * registered queries derive from (the suffix-array repeat extents
-  * feeding both `q_dup_spans_sa` and `q_dup_passages`; the DSIR
-  * weights frame feeding both `q_dsir` and `q_dsir_sample`). A caller
+  * registered queries derive from (the DSIR weights frame feeding both
+  * `q_dsir` and `q_dsir_sample`; the edit-distance pairs feeding both
+  * `q_dedup_editdist` and `q_dedup_editdist_auto`). A caller
   * that runs both members of such a family pays the construction once.
   *
   * Entries are eager `localCheckpoint`s, NOT catalog caches: a
@@ -114,22 +114,6 @@ object SharedFrames {
             entries.synchronized { entries += Entry(tag, params, keys, df, creatorTag) }
             df
         }
-    }
-  }
-
-  /** The live entry for `tag` over the same inputs whose params
-    * satisfy `accept`, if any — opportunistic reuse for callers that
-    * can derive their result from a frame built under DIFFERENT
-    * (covering) parameters: a suffix-extent table built at a smaller
-    * minLen serves any larger threshold through a filter. Returns the
-    * matching entry's params alongside its frame so the caller can
-    * compute the derivation. Never computes. */
-  def lookup(tag: String, inputs: Seq[DataFrame])
-            (accept: Seq[Any] => Boolean): Option[(Seq[Any], DataFrame)] = {
-    val keys = inputs.map(keyOf)
-    entries.synchronized {
-      entries.find(e => e.tag == tag && accept(e.params) && sameInputs(e, keys))
-        .map(e => (e.params, e.df))
     }
   }
 

@@ -36,6 +36,5 @@ object SparkEntry {
     * be added without declaring its prefix (an undeclared tag would be
     * released mid-family by Bench and silently measure as unshared). */
   def sharedFamilies: Map[String, String] =
-    Map("sa_extents" -> "q_dup_", "dsir_weights" -> "q_dsir",
-      "editdist_pairs" -> "q_dedup_editdist")
+    Map("dsir_weights" -> "q_dsir", "editdist_pairs" -> "q_dedup_editdist")
 }

@@ -749,7 +749,7 @@ object Dedup {
     * last one. */
   private def starLabels(edges: DataFrame, nEdges: Long): DataFrame = {
     val maxRounds = starRoundBound(2 * math.max(nEdges, 1L))
-    val gc = graft.LoopGc.ticker(edges.sparkSession)
+    val gc = graft.LoopGc.ticker()
     var e = edges // round 0 reads the raw pairs, which may repeat an edge
     var eCount = Option.empty[Long]
     var rounds = 0

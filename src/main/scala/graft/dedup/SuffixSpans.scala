@@ -5,51 +5,43 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact maximal duplicate substrings via a distributed suffix
-  * ordering — the actual Lee et al. '22 ExactSubstr construction
-  * (suffix array + neighbor LCP), re-expressed for Spark.
+/** Exact maximal repeated passages via a distributed suffix ordering —
+  * the Lee et al. '22 ExactSubstr construction (suffix array + neighbor
+  * LCP), re-expressed for Spark.
   *
-  * [[Dedup.duplicateSpans]] marks token ranges covered by a duplicated
-  * k-gram; at token granularity and minCount=2 that coverage is exact
-  * for duplicates of length ≥ k, but (a) duplicates SHORTER than k are
-  * invisible at the configured shuffle width, and (b) the pipeline
-  * never learns each repeat's exact extent or content — only coverage.
-  * This module computes, for every token position, the EXACT length of
-  * the longest repeated prefix of the suffix starting there
-  * ([[repeatExtents]]), which yields byte-exact span boundaries at ANY
-  * minLen ([[duplicateSpansExact]]) and the maximal repeated passages
-  * themselves ([[longestPassages]]) — the duplicate-mass inventory a
-  * curation pass reports.
+  * [[repeatExtents]] computes, for every token position, the EXACT
+  * length of the longest repeated prefix of the suffix starting there;
+  * its one consumer is [[longestPassages]] (the maximal repeated
+  * passages themselves — the duplicate-mass inventory a curation pass
+  * reports), built at that consumer's own `minLen`. Span COVERAGE at a
+  * threshold k needs no suffix ordering: a token is covered by a repeat
+  * of length ≥ k exactly when it is covered by a repeated k-gram, which
+  * is what [[Dedup.duplicateSpans]] computes.
   *
   * Construction (all relational, no driver-side corpus state):
   *  1. Prefix doubling (Manber–Myers): rank each suffix by its first
-  *     baseWidth·2^h tokens (round 0 keys on the raw baseWidth-token
-  *     slice — NUL-joined into one string on NUL-free corpora, else
-  *     compared as array; both orders ARE shorter-prefix-first
-  *     finite-suffix order), doubling h until ranks are fully
-  *     distinct or the span covers every still-ambiguous suffix's
-  *     remaining length (the round gate — not the longest document's
-  *     length). Ranks are HEAD ranks (class head's global
-  *     row index, [[GlobalOrder.withHeadRank]]) so a class of size s
-  *     owns rank range [r, r+s) and refines in place: each round only
-  *     the still-ambiguous classes fetch their pos+2^h partner's rank
-  *     and re-sort — rows carry (id, pos, rank, rank2), ~32 bytes,
-  *     never token text (the singleton flag and the class-head rank
-  *     ride the ranking sort itself — zero groupBy shuffles, zero
-  *     split joins). The rank STATE lives in one hash(doc)-partitioned
-  *     (doc, pos)-sorted table (round 14, [[doublingCoPartitioned]]):
-  *     positions are dense within each doc block, so a partner lookup
-  *     is an ARRAY OFFSET in the same partition and the per-round
-  *     refinement folds back in by a co-partitioned sorted merge —
-  *     the full corpus is never re-shuffled after the one layout
-  *     exchange, only scanned and rewritten through executor-local
-  *     checkpoints. (The pre-r14 join-formulated loop — frozen pieces
-  *     ∪ pending view probed by equi-join, one full-view exchange per
-  *     round — remains as [[doublingJoin]], the A-B comparator and
-  *     surrogate-collision fallback.) Suffixes
-  *     never compare across documents (a position within 2^h of its
-  *     doc end ranks its missing partner as −1 = "ends here", which
-  *     orders doc-final suffixes exactly like finite strings).
+  *     8·2^h tokens (round 0 keys on the raw 8-token slice — NUL-joined
+  *     into one string on NUL-free corpora, else compared as array;
+  *     both orders ARE shorter-prefix-first finite-suffix order), then
+  *     double h with one partner rank per round until the span covers
+  *     every still-ambiguous suffix's remaining length (the round gate —
+  *     not the longest document's length). Ranks are HEAD ranks (class
+  *     head's global row index, [[GlobalOrder.withHeadRank]]) so a class
+  *     of size s owns rank range [r, r+s) and refines in place: each
+  *     round only the still-ambiguous classes fetch their pos+2^h
+  *     partner's rank and re-sort — rows carry (id, pos, rank, rank2),
+  *     ~32 bytes, never token text (the singleton flag and the
+  *     class-head rank ride the ranking sort itself — zero groupBy
+  *     shuffles, zero split joins). Rounds run join-formulated
+  *     ([[doublingJoin]]: frozen pieces ∪ pending view probed by
+  *     equi-join) and switch, once the pending set stays above
+  *     [[CoPartSwitchFrac]] of the corpus, to one hash(doc)-partitioned
+  *     (doc, pos)-sorted table ([[copartLoop]]) where a partner lookup
+  *     is an ARRAY OFFSET in the same partition and the refinement folds
+  *     back in by a co-partitioned sorted merge. Suffixes never compare
+  *     across documents (a position within 2^h of its doc end ranks its
+  *     missing partner as −1 = "ends here", which orders doc-final
+  *     suffixes exactly like finite strings).
   *  2. Suffix-array adjacency: one [[GlobalOrder.withPrev]] boundary
   *     exchange over (rank, id, pos) pairs each suffix with its SA
   *     neighbor; a suffix's longest repeated prefix is realized at an
@@ -64,12 +56,10 @@ import org.apache.spark.sql.functions._
   *     rounds shrink to the true heavy-repeat mass and the per-pair
   *     mismatch position lands via one indexed array expression.
   *
-  * Scale: the doubling loop is ⌈log2(max doc tokens)⌉ rounds of slim
-  * shuffles; token arrays are only shuffled in the chunk rounds, whose
-  * survivor set after round 0 is the actual duplicate mass (AQE
-  * broadcasts the shrinking pair side). Reference comparator:
-  * `Dedup.duplicateSpans` (dedup/Dedup.scala:126) — spec-pinned equal
-  * at the same threshold, strictly more capable below it. */
+  * Scale: the doubling loop is ⌈log2(max doc tokens / 8)⌉ rounds of
+  * slim shuffles; token arrays are only shuffled in the chunk rounds,
+  * whose survivor set after round 0 is the actual duplicate mass (AQE
+  * broadcasts the shrinking pair side). */
 object SuffixSpans {
 
   private def words(text: org.apache.spark.sql.Column) =
@@ -78,96 +68,34 @@ object SuffixSpans {
   /** (idCol, n_tokens, pos, dup_len): for every token position whose
     * longest repeated prefix reaches `minLen`, its EXACT length.
     * A "repeat" is any other corpus position (any doc, including the
-    * same one) whose suffix shares that prefix.
-    *
-    * The construction is memoized through [[graft.SharedFrames]]
-    * (eager localCheckpoint keyed on the input plan), so several
-    * consumers in one JVM — `duplicateSpansExact` and
-    * `longestPassages` over the same corpus, or repeated calls — pay
-    * the suffix ordering ONCE. Reuse is OPPORTUNISTIC and covering:
-    * a call first looks for ANY live extents entry over the same
-    * corpus built at a width ≤ its minLen and derives its result by
-    * `dup_len >= minLen` — exact, because a repeat of length ≥ minLen
-    * needs ≥ minLen remaining tokens on both sides, so every pair
-    * realizing it already exists in the narrower-width construction's
-    * suffix set. Absent a covering entry it builds at its OWN width
-    * (a wider build admits more suffixes into adjacency, a far less
-    * selective gram prefilter, and a bigger materialized extent
-    * table — round 8 measured a forced minLen-5 build at 3× the
-    * minLen-8 cost, a bad trade when the narrow consumer may never
-    * run). `buildMinLen` (when in [2, minLen]) forces the wider build
-    * for callers that KNOW a narrower consumer follows. Release with
-    * `SharedFrames.release` after the last consumer.
-    *
-    * `maxRounds` bounds ONLY the chunked-LCP resolution loop (step 3);
-    * the prefix-doubling loop needs no bound — it terminates by
-    * construction via the pending-set round gate (span doubles every
-    * round, the gate closes once span ≥ the pending set's max
-    * remaining suffix length). */
+    * same one) whose suffix shares that prefix. The construction runs
+    * eagerly and returns a checkpointed frame; positions with fewer
+    * than `minLen` remaining tokens never enter the ordering. */
   def repeatExtents(df: DataFrame, idCol: String, textCol: String,
-                    minLen: Int = 8, maxRounds: Int = 48,
-                    buildMinLen: Int = 0,
-                    baseWidth: Int = DefaultBaseWidth,
-                    arity: Int = DefaultArity): DataFrame = {
-    require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    require(baseWidth >= 1, s"baseWidth must be >= 1, got $baseWidth")
-    require(arity >= 2 && arity <= 8, s"arity must be in [2, 8], got $arity")
-    // baseWidth is a COST knob only (identical output at any width —
-    // the base ranking orders suffixes by their first `baseWidth`
-    // tokens instead of 1, so the doubling loop starts at span
-    // baseWidth and skips log2(baseWidth) full-corpus rounds); it is
-    // deliberately NOT part of the SharedFrames key.
-    val covering = graft.SharedFrames.lookup("sa_extents", Seq(df)) {
-      case Seq(i, t, b: Int, m) => i == idCol && t == textCol &&
-        m == maxRounds && b <= minLen
-      case _ => false
-    }
-    covering match {
-      case Some((Seq(_, _, b: Int, _), ext)) =>
-        if (minLen > b) ext.filter(col("dup_len") >= minLen) else ext
-      case _ =>
-        val build = if (buildMinLen >= 2 && buildMinLen <= minLen) buildMinLen else minLen
-        val ext = graft.SharedFrames.getOrCompute("sa_extents", Seq(df),
-          Seq(idCol, textCol, build, maxRounds)) {
-          computeExtents(df, idCol, textCol, build, maxRounds, baseWidth, arity)
-        }
-        if (minLen > build) ext.filter(col("dup_len") >= minLen) else ext
-    }
-  }
+                    minLen: Int = 8): DataFrame =
+    graft.Checkpoints.checkpoint(computeExtents(df, idCol, textCol, minLen))
 
-  /** Refinement-round fan-out (like [[DefaultBaseWidth]], a pure cost
-    * knob — identical output at any arity, spec-pinned): each round
-    * combines the ranks at pos + j·span for j = 1..arity−1 into one
-    * refinement sort, multiplying span by `arity` — the Larsson–Sadakane
-    * doubling generalized to k-ary. Arity 4 runs half the range-sorts
-    * of arity 2 at ~2 extra longs per sort row, but pays (arity−1)
-    * partner lookup joins per round instead of 1 — each rescanning the
-    * full rank view (frozen ∪ pending ≈ n rows). Measured-and-REJECTED
-    * as the sf10 default (BENCH_sa_ladder_ab_r13.json, 3 interleaved
-    * fresh-JVM reps: family medians 240.3 s at arity 4 vs 172.8 at
-    * arity 2, 1.2–1.7× slower in both clean reps — on that corpus the
-    * ambiguous set stays ≈ n for every round, so the extra lookup
-    * joins cost more than the saved sorts). The knob ships for corpora
-    * whose ambiguous set decays fast, where the lookup joins touch
-    * only the small pending side. */
-  private[graft] val DefaultArity = 2
+  /** Round-0 rank width: ranking on 8-token slices removes the three
+    * full-corpus sort rounds (spans 1, 2 and 4) that rarely individuate
+    * natural text, at the price of ~8× wider round-0 sort rows. Widths
+    * 1 and 4 lost to 8 at sf10 (BENCH_sa_base_ab_r12.json), and so did
+    * 16 and 32 (BENCH_sa_ladder_ab_r13.json: past 8 the round-0 rows
+    * grow linearly while the saved rounds are already gone); 4-ary
+    * doubling lost to binary there too (1.2–1.7× slower). */
+  private val BaseWidth = 8
 
-  /** Round-12 A-B'd default (BENCH_sa_base_ab_r12.json): ranking on
-    * 8-token slices at round 0 removes the three full-corpus sort
-    * rounds (spans 1, 2 and 4) that rarely individuate natural text,
-    * at the price of ~8× wider round-0 sort rows. Measured ladder at
-    * sf10, identical extents at every width: 1 → 4 was 0.81× on the
-    * family medians; 4 → 8 a further 0.77–0.83× (2 interleaved
-    * fresh-JVM pairs, 277.6/227.2 → 212.5/188.8 s), with sf0.1 at
-    * parity — the wider sort rows stay cheaper than a full-corpus
-    * sort round until the slice width approaches typical repeat
-    * lengths. Round 13 located that knee AT 8: widths 16 and 32 were
-    * measured-and-REJECTED (BENCH_sa_ladder_ab_r13.json, 3 interleaved
-    * fresh-JVM reps — family medians 195.2/232.2 s vs 172.8 at width
-    * 8, no clean rep where wider wins: past width 8 the round-0 sort
-    * rows grow linearly while the saved full-corpus rounds are
-    * already gone). */
-  private[graft] val DefaultBaseWidth = 8
+  /** Longest-document cap (tokens) for the co-partitioned loop: a
+    * build containing any doc longer than this stays on the join loop,
+    * because the copart partner lookup buffers up to one doc's
+    * remaining rows per task (~29 B/row: 2M tokens is ~60 MB in one
+    * task). Memory guard only — both loops are exact. */
+  private val CoPartMaxDocTokens = 2000000L
+
+  /** Token-comparison budget per task for the chunked-LCP compare
+    * stage (work-aware repartition). Targets ~100 ms tasks on one
+    * core; BENCH_sa_sf10_r19.json left the stage to AQE together with
+    * switching off the loop GC, and the defaults won both pairs. */
+  private val LcpTokensPerTask = 2000000L
 
   /** [[computeExtentsDistinct]] behind a measured-routed
     * EXACT-DUPLICATE COLLAPSE. A suffix's content depends only on its
@@ -190,10 +118,13 @@ object SuffixSpans {
     * AQE-skew-splittable join — the collapse a 100 TB run cannot skip.
     * Grouping is on the raw text (never a hash): a hash collision
     * would silently merge distinct texts, and exactness here is
-    * oracle-checked. */
-  private def computeExtents(df: DataFrame, idCol: String, textCol: String,
-                             minLen: Int, maxRounds: Int,
-                             baseWidth: Int, arity: Int = DefaultArity): DataFrame = {
+    * oracle-checked. `copartMaxDocTokens` is the co-partitioned
+    * loop's memory guard (see [[CoPartMaxDocTokens]]); only specs lower
+    * it. */
+  private[graft] def computeExtents(df: DataFrame, idCol: String, textCol: String,
+                                    minLen: Int,
+                                    copartMaxDocTokens: Long = CoPartMaxDocTokens): DataFrame = {
+    require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     val base = graft.Parallelism.spread(df).select(col(idCol), col(textCol))
     // MEASURED routing (the editdist-chooser pattern): the collapse
     // pays one full text-keyed aggregation up front — on mostly-unique
@@ -206,17 +137,17 @@ object SuffixSpans {
     // if BOTH copies land in the sample, so small clusters (small
     // savings) route to the direct path. Both paths are EXACT; the
     // probe is one sampled aggregation at construction (this operator
-    // is already construction-eager through SharedFrames).
+    // is construction-eager anyway).
     val probe = base.sample(withReplacement = false, 0.1, seed = 7)
       .agg(count(lit(1)).as("__n"), countDistinct(col(textCol)).as("__d")).first()
     val (pn, pd) = (probe.getLong(0), probe.getLong(1))
     if (pn == 0L || (pn - pd).toDouble / pn < 0.1)
-      return computeExtentsDistinct(df, idCol, textCol, minLen, maxRounds, baseWidth, arity)
+      return computeExtentsDistinct(df, idCol, textCol, minLen, copartMaxDocTokens)
     val groups = base.groupBy(col(textCol))
       .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__cnt"))
     val extD = computeExtentsDistinct(
       groups.select(col("__rep").as(idCol), col(textCol)),
-      idCol, textCol, minLen, maxRounds, baseWidth, arity)
+      idCol, textCol, minLen, copartMaxDocTokens)
     val dupTexts = groups.filter(col("__cnt") >= 2)
     // duplicated reps' SA rows are superseded by the closed form below
     val uniqExt = extD.join(dupTexts.select(col("__rep").as(idCol)),
@@ -234,10 +165,9 @@ object SuffixSpans {
   }
 
   private def computeExtentsDistinct(df: DataFrame, idCol: String, textCol: String,
-                                     minLen: Int, maxRounds: Int,
-                                     baseWidth: Int, arity: Int): DataFrame = {
+                                     minLen: Int, copartMaxDocTokens: Long): DataFrame = {
     // workHint 8: this cache feeds the round-0 suffix explode (one row
-    // per token position, each carrying a baseWidth-token slice key —
+    // per token position, each carrying an 8-token slice key —
     // ~8× the input bytes before the sort) and the gram prefilter
     // explode, both narrow over the cache's partitioning
     val docsArr = Dedup.cachedCorpus(graft.Parallelism.spread(df, 8)
@@ -245,59 +175,34 @@ object SuffixSpans {
       .filter(size(col("__ws")) >= minLen)
       .select(col(idCol), col("__ws"), size(col("__ws")).cast("long").as("n_tokens")))
 
-    // one head pass: max length (empty guard), whether any token
-    // contains NUL (the binary base key's separator — see below), and
-    // the surrogate-key bijection check for the co-partitioned loop (a
-    // 64-bit xxhash64 collision between two doc ids would silently
-    // merge their suffix sets; astronomically unlikely at any real doc
-    // count, but exactness never RESTS on it — a detected collision
-    // routes to the join-formulated loop keyed on the raw id). The
-    // bijection check is COPART-ONLY: its two exact countDistincts add
-    // an Expand over the doc table, so when the knob forces the join
-    // path (where the surrogate is never used) they are skipped
-    // entirely (round 15, VERDICT r14 item 5).
-    val coPartConf = df.sparkSession.conf.get(CoPartConfKey, "auto")
-    val bijectionAggs =
-      if (coPartConf == "false") Nil
-      else Seq(countDistinct(col(idCol)), countDistinct(xxhash64(col(idCol))))
+    // one head pass: max length (empty guard and the chunked-LCP round
+    // bound), whether any token contains NUL (the binary base key's
+    // separator — see below), and the surrogate-key bijection check for
+    // the co-partitioned loop (a 64-bit xxhash64 collision between two
+    // doc ids would silently merge their suffix sets; astronomically
+    // unlikely at any real doc count, but exactness never RESTS on it —
+    // a detected collision keeps the build on the join-formulated loop,
+    // keyed on the raw id)
     val head = docsArr.agg(max("n_tokens"),
-      (max(when(exists(col("__ws"), t => t.contains("\u0000")), 1).otherwise(0))
-        +: bijectionAggs): _*).first()
+      max(when(exists(col("__ws"), t => t.contains("\u0000")), 1).otherwise(0)),
+      countDistinct(col(idCol)), countDistinct(xxhash64(col(idCol)))).first()
     if (head.isNullAt(0))
       // no doc long enough: empty result, right schema
       return docsArr.select(col(idCol), col("n_tokens"),
         lit(0).as("pos"), lit(0L).as("dup_len")).limit(0)
     val nulFree = head.getInt(1) == 0
-    // CO-PARTITIONED DOUBLING (round 14, default): the loop's rank
-    // state lives in ONE hash(doc)-partitioned, (doc, pos)-sorted
-    // table keyed by a LONG surrogate, so each round's partner lookup
-    // and rank merge are per-partition streaming passes with ZERO
-    // exchanges over the full corpus — see [[doublingCoPartitioned]].
-    // The join-formulated loop stays as the measured comparator and
-    // the fallback for a surrogate collision.
-    val surrogateOk = coPartConf == "false" || head.getLong(2) == head.getLong(3)
-    // PATHOLOGICAL-DOCUMENT GUARD (round 15, VERDICT r14 item 6):
-    // [[pairedRows]]'s lookahead deque is bounded by
-    // min((arity-1)*span, remaining doc length) ROWS — on a single
+    // PATHOLOGICAL-DOCUMENT GUARD: [[pairedRows]]' lookahead window is
+    // bounded by min(span, remaining doc length) rows — on a single
     // multi-million-token document that is a per-task buffer
     // proportional to the doc's full length late in the loop (span
-    // grows past every shorter doc). The join loop has no such
-    // per-doc buffer (its partner lookup is an equi-join), so a build
-    // whose LONGEST doc exceeds [[CoPartMaxDocTokensKey]] routes to
-    // the join formulation outright — including disabling the
-    // adaptive mid-loop switch, which would land in the same deque.
-    // max(n_tokens) rides the existing head pass, so the signal is
-    // free; the cap is a cost guard only (both loops are exact).
+    // grows past every shorter doc). The join loop has no such per-doc
+    // buffer (its partner lookup is an equi-join), so a build whose
+    // LONGEST doc exceeds the cap never switches to the co-partitioned
+    // table. Cost guard only (both loops are exact).
     val maxDocTokens = head.getLong(0)
-    val copartDocCap = df.sparkSession.conf
-      .get(CoPartMaxDocTokensKey, "2000000").toLong
-    val mode = coPartConf match {
-      case "false" => "join"
-      case _ if !surrogateOk => "join"
-      case _ if maxDocTokens > copartDocCap => "join"
-      case "true" => "copart"
-      case _ => "auto"
-    }
+    val mode =
+      if (head.getLong(2) != head.getLong(3) || maxDocTokens > copartMaxDocTokens) "join"
+      else "auto"
     lastModeChosen = mode // test-only instrumentation (see the var's doc)
     val keyExpr = if (mode == "join") col(idCol) else xxhash64(col(idCol))
 
@@ -313,19 +218,19 @@ object SuffixSpans {
     // instead of a full corpus sort (the withDenseRank formulation
     // re-sorted ALL n positions every round).
     //
-    // WIDE BASE RANK (round 12): round 0 ranks each suffix by its
-    // first `baseWidth` tokens — the key is the raw token slice,
+    // WIDE BASE RANK: round 0 ranks each suffix by its first
+    // [[BaseWidth]] tokens — the key is the raw token slice,
     // compared as array<string> (Spark array ordering is
     // lexicographic with shorter-prefix-first, which is EXACTLY
-    // finite-suffix order: a suffix within baseWidth of its doc end
+    // finite-suffix order: a suffix within 8 tokens of its doc end
     // keys on its full remaining tokens, so equal keys of unequal
     // remaining length are impossible). The loop then starts at span
-    // baseWidth, skipping the log2(baseWidth) earliest rounds — the
-    // ones whose 1–2-token prefixes can never individuate natural
-    // text, so they full-corpus-sort ~n rows each. The key is
+    // 8, skipping the three earliest rounds — the ones whose 1–4-token
+    // prefixes rarely individuate natural text, so they
+    // full-corpus-sort ~n rows each. The key is
     // CONTENT, never a hash: a hash collision would silently merge
     // distinct suffix classes, and this construction is oracle-exact.
-    // BINARY BASE KEY (round 13): when no token contains NUL (checked
+    // BINARY BASE KEY: when no token contains NUL (checked
     // in the head pass above — NUL sorts below every other character),
     // the slice keys join into ONE NUL-separated string instead of an
     // array<string>. Order equivalence: within-token differences
@@ -341,19 +246,11 @@ object SuffixSpans {
     // one from whitespace splitting of sane text, but parquet can hold
     // anything) falls back to the array form: exactness never rests on
     // the separator assumption.
-    val toks =
-      if (baseWidth <= 1)
-        docsArr.select(keyExpr.as("__kid"), col("n_tokens"),
-          posexplode(col("__ws")).as(Seq("pos", "__t")))
-      else if (nulFree)
-        docsArr.select(keyExpr.as("__kid"), col("n_tokens"),
-          posexplode(expr(
-            s"transform(__ws, (x, i) -> array_join(slice(__ws, i + 1, $baseWidth), chr(0)))"))
-            .as(Seq("pos", "__t")))
-      else
-        docsArr.select(keyExpr.as("__kid"), col("n_tokens"),
-          posexplode(expr(s"transform(__ws, (x, i) -> slice(__ws, i + 1, $baseWidth))"))
-            .as(Seq("pos", "__t")))
+    val baseKey = s"slice(__ws, i + 1, $BaseWidth)"
+    val toks = docsArr.select(keyExpr.as("__kid"), col("n_tokens"),
+      posexplode(expr(
+        if (nulFree) s"transform(__ws, (x, i) -> array_join($baseKey, chr(0)))"
+        else s"transform(__ws, (x, i) -> $baseKey)")).as(Seq("pos", "__t")))
     // the singleton/ambiguous split and the class-head rank both ride
     // the ranking sort itself (GlobalOrder.withHeadRankFlagged): one
     // parallel sort per round, no groupBy shuffles, no split joins
@@ -372,14 +269,10 @@ object SuffixSpans {
       max(when(col("__amb"), col("n_tokens") - col("pos"))).as("mx"),
       count(when(col("__amb"), 1)).as("cnt")))
     val st0 = graft.Observed.metrics(obs0)
-    val ranked = mode match {
-      case "copart" => doublingCoPartitioned(all0, baseWidth, arity, st0)
-      case "auto" =>
-        val r = doublingJoin(all0, baseWidth, arity, CoPartSwitchFrac, st0)
-        lastSwitchedToCoPart = r.switchedToCoPart // test-only, auto path only
-        r.ranked
-      case _ => doublingJoin(all0, baseWidth, arity, init = st0).ranked
-    }
+    val loop = doublingJoin(all0,
+      if (mode == "auto") CoPartSwitchFrac else Double.PositiveInfinity, st0)
+    lastSwitchedToCoPart = loop.switchedToCoPart // test-only instrumentation
+    val ranked = loop.ranked
 
     // --- 2. SA adjacency (suffixes that can host a >=minLen repeat) ---
     // (steps 2 and 3 run on the loop's "__kid" key — the raw id on the
@@ -432,10 +325,12 @@ object SuffixSpans {
     done += eqLcp
     var chunk = minLen.toLong
     var rounds = 0
+    // after r rounds every unresolved pair has matched minLen·2^r
+    // tokens, and no pair can match more than the longest doc
+    var maxRounds = 1
+    while ((minLen.toLong << maxRounds) < maxDocTokens) maxRounds += 1
     val shufP = df.sparkSession.sessionState.conf.numShufflePartitions
-    val lcpTokensPerTask = df.sparkSession.conf
-      .get(LcpTokensPerTaskKey, "2000000").toLong
-    val gc = graft.LoopGc.ticker(df.sparkSession)
+    val gc = graft.LoopGc.ticker()
     while (rounds < maxRounds &&
         (if (activeCnt >= 0) activeCnt > 0 else !active.isEmpty)) {
       // WORK-AWARE REPARTITION of the chunk-compare join (guide §2
@@ -451,8 +346,8 @@ object SuffixSpans {
       // r18 lesson: pinning every small stage at 32 tasks regressed
       // the six-query set 3×, BENCH minPartitionSize=1b).
       val workParts =
-        if (activeCnt > 0 && lcpTokensPerTask > 0)
-          math.min(shufP.toLong, activeCnt * chunk / lcpTokensPerTask + 1).toInt
+        if (activeCnt > 0)
+          math.min(shufP.toLong, activeCnt * chunk / LcpTokensPerTask + 1).toInt
         else 1
       val pairSide = if (workParts > 1) active.repartition(workParts, col("idA"))
                      else active
@@ -499,36 +394,6 @@ object SuffixSpans {
       .select(col(idCol), col("n_tokens"), col("pos"), col("dup_len"))
   }
 
-  /** [[Dedup.duplicateSpans]]' exact counterpart at ANY minimum length:
-    * per-doc merged spans of tokens covered by some substring of
-    * length ≥ minLen occurring ≥ 2 times corpus-wide. Output matches
-    * duplicateSpans — (idCol, n_tokens, dup_tokens, n_spans,
-    * dup_fraction) — and at equal thresholds the two are spec-pinned
-    * identical (both exact at token granularity); this path also works
-    * BELOW a k-gram pipeline's shuffle width and reports exact repeat
-    * extents on the way. */
-  def duplicateSpansExact(df: DataFrame, idCol: String, textCol: String,
-                          minLen: Int = 8, buildMinLen: Int = 0,
-                          baseWidth: Int = DefaultBaseWidth,
-                          arity: Int = DefaultArity): DataFrame = {
-    val ext = repeatExtents(df, idCol, textCol, minLen, buildMinLen = buildMinLen,
-        baseWidth = baseWidth, arity = arity)
-      .withColumn("__end", col("pos") + col("dup_len") - 1)
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    val prevMax = max(col("__end")).over(
-      w.rowsBetween(Window.unboundedPreceding, -1))
-    ext
-      .withColumn("__brk", when(col("pos") <= prevMax + 1, lit(0)).otherwise(lit(1)))
-      .withColumn("__isl", sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col(idCol), col("n_tokens"), col("__isl"))
-      .agg(min("pos").cast("long").as("__start"), max("__end").cast("long").as("__end"))
-      .groupBy(col(idCol), col("n_tokens"))
-      .agg(sum(col("__end") - col("__start") + 1).as("dup_tokens"),
-        count(lit(1)).as("n_spans"))
-      .withColumn("dup_fraction",
-        round(col("dup_tokens").cast("double") / col("n_tokens"), 4))
-  }
-
   /** The maximal repeated passages themselves: top `topN` longest
     * exact repeats, one row per run start (positions strictly inside a
     * longer repeat are suppressed: a position whose predecessor's
@@ -536,13 +401,9 @@ object SuffixSpans {
     * Output: (idCol, pos, dup_len, passage), ordered dup_len desc with
     * (idCol, pos) tie-break — deterministic. */
   def longestPassages(df: DataFrame, idCol: String, textCol: String,
-                      minLen: Int = 8, topN: Int = 20,
-                      buildMinLen: Int = 0,
-                      baseWidth: Int = DefaultBaseWidth,
-                      arity: Int = DefaultArity): DataFrame = {
+                      minLen: Int = 8, topN: Int = 20): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
-    val ext = repeatExtents(df, idCol, textCol, minLen, buildMinLen = buildMinLen,
-      baseWidth = baseWidth, arity = arity)
+    val ext = repeatExtents(df, idCol, textCol, minLen)
     val w = Window.partitionBy(idCol).orderBy("pos")
     val runStarts = ext
       .withColumn("__ppos", lag("pos", 1).over(w))
@@ -559,39 +420,10 @@ object SuffixSpans {
       .limit(topN)
   }
 
-  /** Session-conf knob for the doubling loop's representation:
-    * "auto" (default) — join-formulated rounds that SWITCH to the
-    * co-partitioned table when the pending set stays above
-    * [[CoPartSwitchFrac]] of the corpus (the measured routing
-    * boundary); "true" — co-partitioned from round 1 (A-B side);
-    * "false" — pure join loop (A-B side, and the automatic fallback
-    * when the xxhash64 doc-id surrogate is not a bijection — checked
-    * per build, in which case every mode routes to the join loop on
-    * the raw id). */
-  private[graft] val CoPartConfKey = "spark.graft.saCopartition"
-
-  /** Token-comparison budget per task for the chunked-LCP compare
-    * stage (work-aware repartition; <= 0 disables the pin and leaves
-    * the stage entirely to AQE). The default targets ~100 ms tasks on
-    * one core; at real scale factors the stage carries enough bytes to
-    * split on byte-based knobs anyway, and the pin is capped at the
-    * session's shuffle partition count, so the setting only matters
-    * where AQE's byte heuristic and the CPU cost disagree. */
-  private[graft] val LcpTokensPerTaskKey = "spark.graft.lcpTokensPerTask"
-
-  /** Longest-document cap (tokens) for the co-partitioned loop: a
-    * build containing any doc longer than this routes to the join
-    * loop (and never adaptively switches), because the copart
-    * partner-lookup deque buffers up to one doc's remaining rows per
-    * task (~120 B/boxed row: 2M tokens is ~240 MB in one task). Cost
-    * guard only — exactness is identical on both paths. */
-  private[graft] val CoPartMaxDocTokensKey = "spark.graft.saCopartMaxDocTokens"
-
   /** Pending-set fraction above which the adaptive loop abandons the
-    * join formulation for the co-partitioned table (knob value
-    * "auto"). MEASURED routing boundary, not a guess: on the sf10
-    * bench corpus (fast decay — pending collapses after the width-8
-    * round 0) the join loop won all 3 interleaved fresh-JVM pairs
+    * join formulation for the co-partitioned table. MEASURED routing
+    * boundary, not a guess: on the sf10 bench corpus (fast decay —
+    * pending collapses after the width-8 round 0) the join loop won all 3 interleaved fresh-JVM pairs
     * (copart 1.12-1.27x slower: the full-table decode+rewrite per
     * round outweighs a broadcast-probed view scan when pending is
     * small), while on the slow-decay boilerplate corpus (shared
@@ -602,33 +434,17 @@ object SuffixSpans {
     * locally rewriting beats re-shuffling. */
   private[graft] val CoPartSwitchFrac = 0.5
 
-  /** The join-formulated doubling loop (rounds <= r13): frozen
-    * checkpointed pieces + a pending set; each round's partner lookup
-    * equi-joins the pending probe against the shifted full rank view
-    * (frozen ∪ pending ≈ n rows — a full-corpus exchange, or a
-    * broadcast + full-view scan once the pending side shrinks). Kept
-    * verbatim as the surrogate-collision fallback and the A-B
-    * comparator for [[doublingCoPartitioned]]; with a finite
-    * `switchFrac` (knob "auto") it is also the adaptive loop's
-    * join-mode phase — when the pending set stays above
-    * switchFrac·n at a round boundary, the full view is laid out
-    * once into the co-partitioned table and [[copartLoop]] finishes
-    * the job (the pending count rides the existing per-round gate
-    * aggregate, so the routing signal is free). Input/output rows:
-    * (__kid, n_tokens, pos, __r[, __amb]). */
-  /** Test instrumentation ONLY: whether the last AUTO-mode build in
-    * this JVM switched to the co-partitioned table (pins that the
-    * adaptive spec corpus actually exercises the switch, not just the
-    * join path). Written exclusively at the auto-path call site from
-    * [[doublingJoin]]'s returned switch fact — forced-mode runs
-    * ("true"/"false") never touch it, so it is meaningless after
-    * them; concurrent auto builds in one session race on it, which a
-    * single-threaded spec never does. Production code must read the
-    * [[JoinLoopResult]], never this var. */
+  /** Test instrumentation ONLY: whether the last build in this JVM
+    * switched to the co-partitioned table (pins that the adaptive spec
+    * corpus actually exercises the switch, not just the join path).
+    * Written from [[doublingJoin]]'s returned switch fact; concurrent
+    * builds in one session race on it, which a single-threaded spec
+    * never does. Production code must read the [[JoinLoopResult]],
+    * never this var. */
   @volatile private[graft] var lastSwitchedToCoPart = false
 
   /** Test instrumentation ONLY: the loop formulation the last build in
-    * this JVM routed to ("join" | "copart" | "auto") — lets the specs
+    * this JVM routed to ("join" | "auto") — lets the specs
     * pin that a guard (surrogate collision, pathological-doc cap)
     * actually forced the join route rather than merely producing
     * correct results by luck. Same caveats as
@@ -642,9 +458,20 @@ object SuffixSpans {
   private final case class JoinLoopResult(ranked: DataFrame,
                                           switchedToCoPart: Boolean)
 
-  private def doublingJoin(all0: DataFrame, baseWidth: Int, arity: Int,
-                           switchFrac: Double = Double.PositiveInfinity,
-                           init: Option[Map[String, Any]] = None): JoinLoopResult = {
+  /** The join-formulated doubling loop: frozen checkpointed pieces + a
+    * pending set; each round's partner lookup equi-joins the pending
+    * probe against the shifted full rank view (frozen ∪ pending ≈ n
+    * rows — a full-corpus exchange, or a broadcast + full-view scan
+    * once the pending side shrinks). With a finite `switchFrac` it is
+    * the adaptive loop's first phase — when the pending set stays above
+    * switchFrac·n at a round boundary, the full view is laid out once
+    * into the co-partitioned table and [[copartLoop]] finishes the job
+    * (the pending count rides the existing per-round gate aggregate, so
+    * the routing signal is free). At an infinite `switchFrac` it runs
+    * to the end: the surrogate-collision and long-document fallback.
+    * Input/output rows: (__kid, n_tokens, pos, __r[, __amb]). */
+  private def doublingJoin(all0: DataFrame, switchFrac: Double,
+                           init: Option[Map[String, Any]]): JoinLoopResult = {
     val cols = Seq(col("__kid"), col("n_tokens"), col("pos"), col("__r"))
     // frozen pieces (classes proven singleton) + the active remainder;
     // their union is the full rank table at any round
@@ -660,8 +487,8 @@ object SuffixSpans {
       all0.filter(!col("__amb")).select(cols: _*))
     var pend = graft.Checkpoints.checkpoint(
       all0.filter(col("__amb")).select(cols: _*))
-    var span = baseWidth.toLong
-    // ROUND GATE (round 12): stop when span covers every pending
+    var span = BaseWidth.toLong
+    // ROUND GATE: stop when span covers every pending
     // row's remaining suffix, not when it covers the longest DOC.
     // Once span ≥ max(n_tokens − pos) over the pending set, every
     // pending class's shared rank already encodes its members' full
@@ -672,9 +499,8 @@ object SuffixSpans {
     // A corpus whose longest doc is 4096 tokens but whose ambiguous
     // classes are all short repeats would otherwise pay ~9 dead
     // rounds.
-    // ROUND 19 (guide §1.2 — remove serial driver passes): the stats
-    // aggregate now rides the newPend CHECKPOINT's own materialization
-    // (CollectMetrics) instead of a separate per-round job. Gate
+    // The stats aggregate rides the newPend CHECKPOINT's own
+    // materialization (CollectMetrics), not a separate per-round job. Gate
     // discipline: an OPEN observed gate is safe to trust (worst case a
     // dead round that refines nothing), but a CLOSED one is
     // exactness-bearing, so gateOpen() re-confirms any close with this
@@ -695,7 +521,7 @@ object SuffixSpans {
       if (!statsExact) { stats = pendStats(); statsExact = true }
       span < stats._1
     }
-    val gc = graft.LoopGc.ticker(all0.sparkSession)
+    val gc = graft.LoopGc.ticker()
     while (gateOpen()) {
       if (stats._2 > switchFrac * nAll) {
         // the pending set is corpus-sized: every further join round
@@ -710,43 +536,33 @@ object SuffixSpans {
         (frozenParts :+ pend).foreach(graft.Checkpoints.free)
         graft.Checkpoints.free(all0) // its round-0 splits + nAll are long done
         return JoinLoopResult(
-          copartLoop(laid, span, stats._1, statsExact, arity),
+          copartLoop(laid, span, stats._1, statsExact),
           switchedToCoPart = true)
       }
       val rankedView = (frozenParts :+ pend).reduce(_ unionByName _)
-      // suffix at pos p extends with the ranks of the suffixes at
-      // p + j·span for j = 1..arity−1 (binary doubling is arity 2 —
-      // one partner; k-ary combines k−1 partners per round and
-      // multiplies span by k, exactness per the lexicographic
-      // composition argument: components j < k agree whenever the
-      // first difference lies beyond (j+1)·span, and a −1 end marker
-      // orders a proper-prefix suffix strictly first at its first
-      // absent partner). Each partner lookup shifts the rank view by
-      // −j·span so the probe is a plain equi-join. Positions with
-      // pos ≥ n_tokens − j·span have no partner — knowable
+      // suffix at pos p extends with the rank of the suffix at
+      // p + span (a −1 end marker orders a proper-prefix suffix
+      // strictly first). The lookup shifts the rank view by −span so
+      // the probe is a plain equi-join. Positions with
+      // pos ≥ n_tokens − span have no partner — knowable
       // arithmetically, so the join stays INNER (broadcastable on the
       // shrinking active side; a left join would force the full
       // corpus-sized lookup through a shuffle).
-      var paired = pend
-      val partnerCols = (1 until arity).map(j => s"__p$j")
-      for (j <- 1 until arity) {
-        val shift = span * j
-        val nearEnd = paired.filter(col("pos") >= col("n_tokens") - lit(shift))
-          .withColumn(s"__p$j", lit(-1L))
-        val lookup = rankedView.select(col("__kid"), (col("pos") - lit(shift)).as("pos"),
-          col("__r").as(s"__p$j"))
-        val far = paired.filter(col("pos") < col("n_tokens") - lit(shift))
-          .join(lookup, Seq("__kid", "pos"))
-        paired = far.unionByName(nearEnd)
-      }
+      val nearEnd = pend.filter(col("pos") >= col("n_tokens") - lit(span))
+        .withColumn("__p", lit(-1L))
+      val lookup = rankedView.select(col("__kid"), (col("pos") - lit(span)).as("pos"),
+        col("__r").as("__p"))
+      val paired = pend.filter(col("pos") < col("n_tokens") - lit(span))
+        .join(lookup, Seq("__kid", "pos"))
+        .unionByName(nearEnd)
       // within class [r, r+s): new rank = r + (rows strictly before
-      // this row's (r, partners…) run) = r + __sh − __ch, where __ch
+      // this row's (r, partner) run) = r + __sh − __ch, where __ch
       // (the block head = min(__sh) over the class, contiguous under
       // the sort) and the new class's size>1 flag are computed inside
       // the ranking pass itself — every member of an ambiguous class
       // is in the subset, so the offsets are exact
       val sub = GlobalOrder.withHeadRankFlagged(paired, Seq(col("__r")),
-        partnerCols.map(col), "__sh", "__amb", Some("__ch"))
+        Seq(col("__p")), "__sh", "__amb", Some("__ch"))
       val refined = graft.Checkpoints.checkpoint(
         sub.select(col("__kid"), col("n_tokens"), col("pos"),
           (col("__r") + col("__sh") - col("__ch")).as("__r"), col("__amb")))
@@ -767,7 +583,7 @@ object SuffixSpans {
       graft.Checkpoints.free(refined)
       graft.Checkpoints.free(pend)
       pend = newPend
-      span *= arity
+      span *= 2
       val m = graft.Observed.metrics(obs)
       stats = m.map(mm => (graft.Observed.longOf(mm, "mx"),
         graft.Observed.longOf(mm, "cnt"))).getOrElse(pendStats())
@@ -782,53 +598,6 @@ object SuffixSpans {
     graft.Checkpoints.free(all0)
     JoinLoopResult((frozenParts :+ pend).reduce(_ unionByName _),
       switchedToCoPart = false)
-  }
-
-  /** The co-partitioned doubling loop (round 14): the full rank state
-    * lives in ONE table hash-partitioned by doc surrogate and sorted
-    * by (doc, pos) within partitions — a layout every round REUSES,
-    * because the partner of (doc, pos) at pos + j·span lives j·span
-    * rows ahead in the SAME partition (positions are dense 0..n−1
-    * within each doc block, and no row ever leaves the table). Each
-    * round then costs:
-    *   1. partner lookup — one zero-exchange streaming pass over the
-    *      table ([[pairedRows]]: a bounded lookahead window, partner
-    *      rank read by ARRAY OFFSET, no join, no hash map);
-    *   2. the refinement range-sort over the pending rows only
-    *      (unchanged, [[GlobalOrder.withHeadRankFlagged]]);
-    *   3. rank merge — the refined delta re-keyed to the same layout
-    *      (a pending-sized exchange) and zipped partition-for-partition
-    *      into the table by a sorted two-pointer pass ([[mergeSorted]]),
-    *      then checkpointed as the next round's state.
-    * vs the join loop's per-round full-corpus exchange of the rank
-    * view: the full table is only ever SCANNED and REWRITTEN (slim
-    * ~40-byte rows through executor-local storage), never shuffled.
-    * The trade-offs, stated honestly: (a) the merge rewrites n rows
-    * per round where the join loop checkpointed only the refined set —
-    * on fast-decaying corpora that is the price for removing the
-    * full-view exchange that same round still pays; (b) hash(doc)
-    * partitioning makes partition load ∝ the largest document (the
-    * per-doc window stages downstream already have this shape); the
-    * lookahead window is likewise bounded by min((arity−1)·span,
-    * longest doc) rows. Doc ids ride as the xxhash64 long surrogate
-    * (bijection-checked upstream) so partition hashing, in-partition
-    * ordering and row width never depend on the caller's id type.
-    * Exactness is pinned by the copart≡join parity spec and the
-    * planted-truth extents suites (both loops produce identical
-    * extents), plus in-pass density asserts that fail loudly if the
-    * layout invariant is ever broken. */
-  private def doublingCoPartitioned(all0: DataFrame, baseWidth: Int, arity: Int,
-                                    init: Option[Map[String, Any]] = None): DataFrame = {
-    // observed gate (riding all0's checkpoint job) trusted while OPEN;
-    // a close — here the early return — is re-confirmed exactly first
-    var gate = init.map(graft.Observed.longOf(_, "mx")).getOrElse(gateOf(all0))
-    var gateExact = init.isEmpty
-    if (baseWidth.toLong >= gate && !gateExact) { gate = gateOf(all0); gateExact = true }
-    if (baseWidth.toLong >= gate) // round 0 individuated everything still pending
-      return all0.select("__kid", "n_tokens", "pos", "__r") // lazy view: all0 must stay
-    val laid = copartLayout(all0) // eager: all0 fully consumed here
-    graft.Checkpoints.free(all0)
-    copartLoop(laid, baseWidth.toLong, gate, gateExact, arity)
   }
 
   private def gateOf(d: DataFrame): Long = { // max remaining length over
@@ -849,8 +618,39 @@ object SuffixSpans {
         .repartition(nPart, col("__kid")).sortWithinPartitions("__kid", "pos"))
   }
 
+  /** The co-partitioned doubling loop — [[doublingJoin]]'s second
+    * phase once the pending set is corpus-sized: the full rank state
+    * lives in ONE table hash-partitioned by doc surrogate and sorted
+    * by (doc, pos) within partitions — a layout every round REUSES,
+    * because the partner of (doc, pos) at pos + span lives span rows
+    * ahead in the SAME partition (positions are dense 0..n−1 within
+    * each doc block, and no row ever leaves the table). Each round
+    * then costs:
+    *   1. partner lookup — one zero-exchange streaming pass over the
+    *      table ([[pairedRows]]: a bounded lookahead window, partner
+    *      rank read by ARRAY OFFSET, no join, no hash map);
+    *   2. the refinement range-sort over the pending rows only
+    *      ([[GlobalOrder.withHeadRankFlagged]], as in the join loop);
+    *   3. rank merge — the refined delta re-keyed to the same layout
+    *      (a pending-sized exchange) and zipped partition-for-partition
+    *      into the table by a sorted two-pointer pass ([[mergeSorted]]),
+    *      then checkpointed as the next round's state.
+    * vs the join loop's per-round full-corpus exchange of the rank
+    * view: the full table is only ever SCANNED and REWRITTEN (slim
+    * ~40-byte rows through executor-local storage), never shuffled.
+    * The trade-offs: (a) the merge rewrites n rows per round where the
+    * join loop checkpointed only the refined set — the reason it only
+    * takes over once pending ≥ [[CoPartSwitchFrac]]·n; (b) hash(doc)
+    * partitioning makes partition load ∝ the largest document (the
+    * per-doc window stages downstream already have this shape); the
+    * lookahead window is likewise bounded by min(span, longest doc)
+    * rows. Doc ids ride as the xxhash64 long surrogate
+    * (bijection-checked upstream) so partition hashing, in-partition
+    * ordering and row width never depend on the caller's id type.
+    * In-pass density asserts fail loudly if the layout invariant is
+    * ever broken. */
   private def copartLoop(table0: DataFrame, startSpan: Long, startGate: Long,
-                         startGateExact: Boolean, arity: Int): DataFrame = {
+                         startGateExact: Boolean): DataFrame = {
     var table = table0
     var span = startSpan
     var gate = startGate
@@ -863,14 +663,12 @@ object SuffixSpans {
       if (!gateExact) { gate = gateOf(table); gateExact = true }
       span < gate
     }
-    val gc = graft.LoopGc.ticker(table0.sparkSession)
+    val gc = graft.LoopGc.ticker()
     while (gateOpen()) {
-      val paired = pairedRows(table, span, arity)
-      val partnerCols = (1 until arity).map(j => s"__p$j")
       // within class [r, r+s): new rank = r + __sh − __ch, exactly as
       // in the join loop (the refinement sort is shared machinery)
-      val sub = GlobalOrder.withHeadRankFlagged(paired, Seq(col("__r")),
-        partnerCols.map(col), "__sh", "__amb", Some("__ch"))
+      val sub = GlobalOrder.withHeadRankFlagged(pairedRows(table, span),
+        Seq(col("__r")), Seq(col("__p")), "__sh", "__amb", Some("__ch"))
       // the round gate rides the delta layout's own checkpoint job
       // (CollectMetrics over the pending rows), not a separate
       // per-round aggregate; frozen rows never re-enter the pending
@@ -893,7 +691,7 @@ object SuffixSpans {
       graft.Checkpoints.free(delta)
       graft.Checkpoints.free(table)
       table = merged
-      span *= arity
+      span *= 2
       gc.tick() // bound dead-shuffle residency in long builds (LoopGc)
     }
     // classes still ambiguous when the gate closes are genuinely
@@ -904,40 +702,37 @@ object SuffixSpans {
 
   /** One zero-exchange partner-lookup pass over the co-partitioned
     * rank table: for every still-ambiguous row (doc, pos) emit
-    * (__kid, n_tokens, pos, __r, __p1..__p_{arity−1}) where __pj is
-    * the rank at (doc, pos + j·span), read from a bounded lookahead
-    * window — positions are dense within each doc block, so the
-    * partner sits exactly j·span rows ahead in the same sorted
-    * partition (density is asserted per lookup; a violation is a
-    * layout bug and must fail the job, never mis-rank). Positions
-    * within j·span of their doc end take the −1 end marker, exactly
-    * like the join loop's nearEnd branch. The window never holds more
-    * than min((arity−1)·span, remaining doc length) + 1 rows. */
-  private def pairedRows(table: DataFrame, spanLen: Long, arity: Int): DataFrame = {
+    * (__kid, n_tokens, pos, __r, __p) where __p is the rank at
+    * (doc, pos + span), read from a bounded lookahead window —
+    * positions are dense within each doc block, so the partner sits
+    * exactly span rows ahead in the same sorted partition (density is
+    * asserted per lookup; a violation is a layout bug and must fail
+    * the job, never mis-rank). Positions within span of their doc end
+    * take the −1 end marker, exactly like the join loop's nearEnd
+    * branch. The window never holds more than min(span, remaining doc
+    * length) + 1 rows. */
+  private def pairedRows(table: DataFrame, spanLen: Long): DataFrame = {
     import org.apache.spark.sql.GraftInternalRows
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val maxShift = spanLen * (arity - 1)
-    val schema = StructType(table.schema.fields.take(4).toIndexedSeq ++
-      (1 until arity).map(j => StructField(s"__p$j", LongType, nullable = false)))
+    val schema = StructType(table.schema.fields.take(4).toIndexedSeq :+
+      StructField("__p", LongType, nullable = false))
     val outTypes = schema.fields.map(_.dataType)
-    // INTERNALROW FORMULATION (round 15): the r14 pass ran on
-    // `table.rdd` — every row paid an encoder decode to a boxed
-    // GenericRow (one object + one box per primitive field), the
-    // measured reason the copart loop lost fast-decay corpora
-    // 1.12–1.27x (BENCH_sa_copart_ab_r14.json; VERDICT r14 item 4).
-    // This pass reads the plan's InternalRows in place and decodes the
-    // five primitive fields straight into a primitive RING BUFFER —
-    // the lookahead window holds no row objects at all — and emits one
-    // REUSED mutable output row (the scan node behind
+    // INTERNALROW FORMULATION: a pass over `table.rdd` pays an encoder
+    // decode to a boxed GenericRow per row (one object + one box per
+    // primitive field) — measured 1.12–1.27x slower on fast-decay
+    // corpora (BENCH_sa_copart_ab_r14.json). This pass reads the
+    // plan's InternalRows in place and decodes the five primitive
+    // fields straight into a primitive RING BUFFER — the lookahead
+    // window holds no row objects at all — and emits one REUSED
+    // mutable output row (the scan node behind
     // [[GraftInternalRows.fromRdd]] applies its own unsafe projection;
     // reuse is the standard valid-until-next-next() row contract).
     val rdd = GraftInternalRows.toRdd(table).mapPartitions { it =>
       new Iterator[InternalRow] {
         // decoded lookahead window as five primitive ring buffers:
-        // bounded by min(maxShift, remaining doc length) entries (same
-        // bound as the r14 deque, at ~29 B/entry vs ~120 B/boxed Row)
+        // bounded by min(span, remaining doc length) entries, ~29 B each
         private var cap = 1024
         private var kidB = new Array[Long](cap)
         private var ntB = new Array[Long](cap)
@@ -978,26 +773,21 @@ object SuffixSpans {
             val hR = rB(hi); val hAmb = ambB(hi)
             // rows of lookahead this head can ever need: partners stop
             // at the doc end, and the doc block is contiguous
-            val need = math.min(maxShift, hNt - hPos - 1).toInt
+            val need = math.min(spanLen, hNt - hPos - 1).toInt
             while (len - 1 < need && it.hasNext) append(it.next())
             start = (start + 1) % cap; len -= 1
             if (hAmb) {
               out.setLong(0, hKid); out.setLong(1, hNt)
               out.setInt(2, hPos); out.setLong(3, hR)
-              var j = 1
-              while (j < arity) {
-                val sh = spanLen * j
-                val v =
-                  if (hPos + sh >= hNt) -1L
-                  else {
-                    val idx = (start + (sh - 1).toInt) % cap // head removed: offset sh ⇒ index sh−1
-                    require(kidB(idx) == hKid && posB(idx) == hPos + sh,
-                      s"suffix rank table density violated at pos=$hPos shift=$sh")
-                    rB(idx)
-                  }
-                out.setLong(3 + j, v)
-                j += 1
-              }
+              val v =
+                if (hPos + spanLen >= hNt) -1L
+                else {
+                  val idx = (start + (spanLen - 1).toInt) % cap // head removed: offset span ⇒ index span−1
+                  require(kidB(idx) == hKid && posB(idx) == hPos + spanLen,
+                    s"suffix rank table density violated at pos=$hPos shift=$spanLen")
+                  rB(idx)
+                }
+              out.setLong(4, v)
               ready = true
             }
           }
@@ -1024,7 +814,7 @@ object SuffixSpans {
     import org.apache.spark.sql.GraftInternalRows
     import org.apache.spark.sql.catalyst.InternalRow
     val schema = table.schema
-    // InternalRow formulation (round 15): pure passthrough — no decode,
+    // InternalRow formulation: pure passthrough — no decode,
     // no per-row allocation. Row-reuse safety: `di.head` caches the one
     // row the underlying iterator last produced, whose buffer is only
     // overwritten by the NEXT underlying next() — i.e. after the merge

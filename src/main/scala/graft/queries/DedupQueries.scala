@@ -86,8 +86,8 @@ object DedupQueries {
     // on the resolved extraSegs rung: the base query at the default
     // rung, the auto query at whatever its measured chooser picks — on
     // corpora where the chooser lands on the default (every benign
-    // corpus) the family pays the pipeline ONCE, the sa_extents /
-    // dsir_weights amortization pattern. The entry is a LAZY
+    // corpus) the family pays the pipeline ONCE, the dsir_weights
+    // amortization pattern. The entry is a LAZY
     // localCheckpoint, so registration stays jobless (the plan audit
     // builds the whole registry) and the pipeline cost lands inside
     // whichever query's timing triggers it first. The candidate-join
@@ -148,37 +148,29 @@ object DedupQueries {
         .orderBy("doc_id")
     }),
 
-    // #43e suffix-array exact duplicate spans at minLen=5 — BELOW the
-    // k-gram query's width, from the prefix-doubling SA construction
-    // (SuffixSpans). The oracle recomputes the identical semantics via
-    // the 5-gram coverage formulation (exact at token granularity —
-    // both constructions are exact, derived independently, and the
-    // spec pins their equality at equal thresholds).
+    // #43e duplicate spans at minLen=5: token ranges covered by any
+    // repeated substring of length ≥ 5. A token is covered by such a
+    // repeat exactly when it is covered by a repeated 5-gram, so this
+    // is the k-gram coverage pipeline at k = 5 (exact at token
+    // granularity; the oracle is the same 5-gram coverage SQL).
+    // SuffixSpansSpec cross-checks it against spans derived from the
+    // suffix-array extents.
     "q_dup_spans_sa" -> ((s, dir) =>
-      graft.dedup.SuffixSpans.duplicateSpansExact(Tables.documents(s, dir),
-          "doc_id", "text", minLen = 5)
+      Dedup.duplicateSpans(Tables.documents(s, dir), "doc_id", "text",
+        k = 5, minCount = 2)
         .orderBy("doc_id")),
 
     // #43f maximal repeated passages: the 20 longest exact repeats with
-    // their text — hash-oracled since round 12: DuckDB recomputes
+    // their text, from the suffix-array repeat extents built at this
+    // query's own width (minLen = 8) — hash-oracled: DuckDB recomputes
     // dup_len from first principles (sort the rem>=8 suffixes as token
     // LISTS — shorter-prefix-first list order IS finite-suffix order —
     // then max LCP with either sort neighbor via an indexed-lambda
     // first-mismatch scan), then replays the run-start suppression +
-    // top-N slice. buildMinLen=5 points this query at the SAME
-    // shared suffix-array extents q_dup_spans_sa consumes (exact: the
-    // wider construction filtered to dup_len >= 8). The round-8
-    // in-suite numbers (76.3 s family) suggested this build was a
-    // regression; the round-9 isolated fresh-JVM A-B settled it the
-    // other way: minLen-5 build + eager checkpoint + reuse = 27.6 s
-    // family vs 47.7 s for independent lazy builds (r7 code, same
-    // session) — the in-suite inflation was shared-JVM aging, not the
-    // construction. SuffixSpans' covering lookup makes the
-    // amortization order-independent: whichever family member runs
-    // first builds at 5, the other derives by filter.
+    // top-N slice.
     "q_dup_passages" -> ((s, dir) =>
       graft.dedup.SuffixSpans.longestPassages(Tables.documents(s, dir),
-        "doc_id", "text", minLen = 8, topN = 20, buildMinLen = 5)),
+        "doc_id", "text", minLen = 8, topN = 20)),
 
     // #41 MinHash+LSH candidates (rows-only: xxhash64-specific).
     "q_dedup_minhash" -> ((s, dir) =>
@@ -436,9 +428,8 @@ object DedupQueries {
         |FROM sp GROUP BY doc_id, n_tokens ORDER BY doc_id""".stripMargin,
 
     // coverage by duplicated substrings of length >= 5 — the 5-gram
-    // window formulation, exact at token granularity (see q_dup_spans;
-    // the SA implementation computes the same semantics by a wholly
-    // different construction)
+    // window formulation, exact at token granularity (q_dup_spans at
+    // k = 5)
     "q_dup_spans_sa" ->
       """WITH mk AS (SELECT doc_id,
         |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ws FROM documents),

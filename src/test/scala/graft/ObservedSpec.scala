@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * own action, values equal to the exact aggregates they replace —
   * plus the invalidation added to the Tables schema cache. The
   * operators' exactness is pinned where it always was (survivors
-  * chain/cluster specs, SA extents parity + planted-truth suites). */
+  * chain/cluster specs, SA extents brute-force + planted-truth suites). */
 class ObservedSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
@@ -105,21 +105,5 @@ class ObservedSpec extends AnyFunSuite with SharedSpark {
     val before = Observed.fallbacks
     assert(Observed.metrics(obs, waitMs = 50L).isEmpty)
     assert(Observed.fallbacks === before + 1)
-  }
-
-  test("LoopGc interval parses fractions and falls back to the default on garbage") {
-    def interval(v: String): Long = {
-      spark.conf.set(LoopGc.IntervalKey, v)
-      try {
-        val t = LoopGc.ticker(spark)
-        t.tick() // must not throw whatever the setting
-        t.intervalNs
-      } finally spark.conf.unset(LoopGc.IntervalKey)
-    }
-    assert(interval("1.5") === 1500000000L)
-    assert(interval("not-a-number") === 60000000000L)
-    assert(interval("NaN") === 60000000000L)
-    assert(interval("0") === 0L)
-    assert(interval(" 30 ") === 30000000000L)
   }
 }

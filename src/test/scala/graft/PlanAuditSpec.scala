@@ -293,7 +293,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("duplicate-span queries: doc-partitioned windows only, no cartesian anywhere") {
-    for (name <- Seq("q_dup_spans", "q_dedup_cut")) {
+    for (name <- Seq("q_dup_spans", "q_dup_spans_sa", "q_dedup_cut")) {
       val lp = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
       val bad = lp.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window if w.partitionSpec.isEmpty => w

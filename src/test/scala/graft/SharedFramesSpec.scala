@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-query reuse registry: plan-keyed memoization must HIT for
-  * equivalent inputs (that is the whole point — one suffix-array /
-  * DSIR-weights construction for the family), MISS for different
-  * inputs or parameters, and the derived-threshold sharing
-  * (`buildMinLen`) must be output-identical to a direct construction. */
+  * equivalent inputs (that is the whole point — one DSIR-weights or
+  * edit-distance construction for the family) and MISS for different
+  * inputs or parameters. */
 class SharedFramesSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
@@ -52,26 +51,17 @@ class SharedFramesSpec extends AnyFunSuite with SharedSpark {
     SharedFrames.creatorTag = ""
   }
 
-  test("suffix-array family shares ONE construction; buildMinLen derivation is exact") {
+  test("suffix-array extents are built per call, outside the registry") {
+    // the SA build has one consumer (longestPassages) and no covering
+    // reuse, so it must not leave an entry that Bench would have to
+    // declare as a family
     SharedFrames.releaseAll()
-    val docs = docsDf()
-    // direct minLen=8 construction (its own entry)
-    val direct = SuffixSpans.duplicateSpansExact(docs, "doc_id", "text", minLen = 8)
-      .orderBy("doc_id").collect().toSeq
-    SharedFrames.releaseAll()
-    // family pattern: spans at 5 builds the shared extents, passages at
-    // 8 derives from the SAME entry — one construction total
-    SuffixSpans.duplicateSpansExact(docs, "doc_id", "text", minLen = 5).collect()
-    val nAfterFirst = SharedFrames.liveTags.count(_ == "sa_extents")
-    val derived = SuffixSpans.duplicateSpansExact(docs, "doc_id", "text",
-        minLen = 8, buildMinLen = 5)
-      .orderBy("doc_id").collect().toSeq
-    val nAfterSecond = SharedFrames.liveTags.count(_ == "sa_extents")
-    assert(nAfterFirst == 1 && nAfterSecond == 1,
-      s"expected one shared sa_extents entry, got $nAfterFirst then $nAfterSecond")
-    assert(derived == direct,
-      "buildMinLen-derived spans must equal the direct construction")
-    SharedFrames.releaseAll()
+    val ext = SuffixSpans.repeatExtents(docsDf(), "doc_id", "text", minLen = 8)
+      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(3)).toMap
+    assert(SharedFrames.liveTags.isEmpty)
+    // docs 1 and 2 share "one … twelve": 12 tokens from doc 1's pos 0
+    assert(ext((1L, 0)) == 12L && ext((2L, 1)) == 12L)
+    graft.dedup.Dedup.releaseCaches()
   }
 
   test("DSIR weights frame is computed once across score + sample") {

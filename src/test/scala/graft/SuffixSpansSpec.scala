@@ -1,17 +1,19 @@
 package graft
 
 import graft.dedup.{Dedup, SuffixSpans}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Suffix-array exact duplicate spans (SURVEY.md §2 #43e) pinned
-  * against the k-gram pipeline and hand-computed ground truth:
-  *  - at equal thresholds the two constructions are IDENTICAL (both
-  *    exact at token granularity, independently derived);
-  *  - below the k-gram width the SA path finds planted duplicates the
-  *    k-gram pipeline provably cannot see;
-  *  - per-position extents and the maximal passages are exact on
-  *    planted fixtures, including self-repeats and overlapping runs.
+/** Suffix-array repeat extents (SURVEY.md §2 #43e/#43f) pinned against
+  * a driver-side brute-force reference written here, against the k-gram
+  * span pipeline, and against hand-computed ground truth:
+  *  - every fixture's extents equal the brute force: per position, the
+  *    max LCP against every other position (any doc, including its
+  *    own), kept when ≥ minLen;
+  *  - spans derived from the extents in this spec equal
+  *    `Dedup.duplicateSpans` at the same threshold (independent
+  *    constructions, both exact at token granularity);
+  *  - the maximal passages surface verbatim, longest first.
   */
 class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
@@ -20,7 +22,7 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     * vanishingly unlikely) with planted shared phrases of lengths 5,
     * 11 and 23 — non-multiples of k on purpose — plus a same-doc
     * self-repeat. */
-  private def planted(k: Int): org.apache.spark.sql.DataFrame = {
+  private def planted(): DataFrame = {
     val rng = new scala.util.Random(37)
     def w() = s"w${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     def run(n: Int) = Seq.fill(n)(w())
@@ -42,38 +44,99 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     docs.toDF("doc_id", "text")
   }
 
-  private def spans(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-      r.getLong(3), r.getDouble(4))).toSet
+  private type Ext = Set[(Long, Long, Int, Long)] // (doc_id, n_tokens, pos, dup_len)
+
+  private def collectExtents(ext: DataFrame): Ext = {
+    val got = ext.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+    Dedup.releaseCaches()
+    got
+  }
+
+  private def extents(df: DataFrame, minLen: Int): Ext =
+    collectExtents(SuffixSpans.repeatExtents(df, "doc_id", "text", minLen))
+
+  /** Brute-force reference: dup_len(doc, pos) = the longest common
+    * prefix of the suffix at (doc, pos) with the suffix at any OTHER
+    * position (any doc, including the same one), capped by both
+    * remainders; kept when ≥ minLen. Tokens split on whitespace like
+    * `TextAnalysis.words`. */
+  private def bruteExtents(df: DataFrame, minLen: Int): Ext = {
+    val docs = df.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1).split("\\s+").filter(_.nonEmpty))
+    val sites = for ((d, di) <- docs.zipWithIndex.toSeq; p <- d._2.indices) yield (di, p)
+    def lcp(a: Array[String], i: Int, b: Array[String], j: Int): Int = {
+      var l = 0
+      while (i + l < a.length && j + l < b.length && a(i + l) == b(j + l)) l += 1
+      l
+    }
+    sites.flatMap { case (di, p) =>
+      val (id, ws) = docs(di)
+      val best = sites.iterator.filter(_ != ((di, p)))
+        .map { case (dj, q) => lcp(ws, p, docs(dj)._2, q) }.maxOption.getOrElse(0)
+      if (best >= minLen) Some((id, ws.length.toLong, p, best.toLong)) else None
+    }.toSet
+  }
+
+  private type Spans = Set[(Long, Long, Long, Long, Double)]
+
+  /** Per-doc merged coverage of the extents — (doc_id, n_tokens,
+    * dup_tokens, n_spans, dup_fraction), the `duplicateSpans` shape:
+    * a position covers [pos, pos + dup_len − 1], and ranges that
+    * overlap or touch merge into one span. */
+  private def spansOf(ext: Ext): Spans =
+    ext.groupBy(_._1).map { case (id, rows) =>
+      val n = rows.head._2
+      val islands = rows.toSeq.sortBy(_._3).foldLeft(List.empty[(Long, Long)]) {
+        case (acc, (_, _, pos, len)) =>
+          val end = pos + len - 1
+          acc match {
+            case (s, e) :: rest if pos <= e + 1 => (s, math.max(e, end)) :: rest
+            case _ => (pos.toLong, end) :: acc
+          }
+      }
+      val dup = islands.map { case (s, e) => e - s + 1 }.sum
+      (id, n, dup, islands.size.toLong,
+        BigDecimal(dup.toDouble / n).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }.toSet
+
+  private def kgramSpans(df: DataFrame, k: Int): Spans =
+    Dedup.duplicateSpans(df, "doc_id", "text", k = k, minCount = 2)
+      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))).toSet
 
   test("SA spans == k-gram spans at the same threshold (independent constructions)") {
-    val df = planted(8)
-    val sa = spans(SuffixSpans.duplicateSpansExact(df, "doc_id", "text", minLen = 8)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    val kg = spans(Dedup.duplicateSpans(df, "doc_id", "text", k = 8, minCount = 2)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    assert(sa.nonEmpty)
-    assert(sa == kg)
+    val df = planted()
+    for (minLen <- Seq(8, 5)) {
+      val ext = extents(df, minLen)
+      assert(ext === bruteExtents(df, minLen), s"minLen $minLen")
+      val sa = spansOf(ext)
+      assert(sa.nonEmpty)
+      assert(sa === kgramSpans(df, minLen), s"minLen $minLen")
+    }
   }
 
   test("SA spans == k-gram spans on the real documents fixture") {
     val docs = Tables.documents(spark, sf)
-    val sa = spans(SuffixSpans.duplicateSpansExact(docs, "doc_id", "text", minLen = 8)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    val kg = spans(Dedup.duplicateSpans(docs, "doc_id", "text", k = 8, minCount = 2)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    assert(sa == kg)
+    // 8 is q_dup_passages' width; 5 is q_dup_spans_sa's, which now runs
+    // the k-gram pipeline on the strength of this equality
+    for (minLen <- Seq(8, 5))
+      assert(spansOf(extents(docs, minLen)) === kgramSpans(docs, minLen), s"minLen $minLen")
   }
 
   test("below the k-gram width: minLen=5 finds the planted 5-token duplicate k=8 misses") {
-    val df = planted(8)
-    val at8 = Dedup.duplicateSpans(df, "doc_id", "text", k = 8, minCount = 2)
+    // a repeat of length >= k is covered exactly when a repeated k-gram
+    // covers it, so the k-gram width IS the minimum repeat length: doc 7
+    // shares ONLY a 5-token phrase (with docs 2 and 3), which k = 5
+    // sees and k = 8 cannot
+    val df = planted()
+    def docsAt(k: Int) = Dedup.duplicateSpans(df, "doc_id", "text", k = k, minCount = 2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val at5 = SuffixSpans.duplicateSpansExact(df, "doc_id", "text", minLen = 5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // doc 7 shares ONLY the 5-gram with docs 2 and 3
+    val at8 = docsAt(8)
+    val at5 = docsAt(5)
     assert(!at8.contains(7L), "k=8 must not see the 5-token duplicate")
-    assert(at5.contains(7L), "minLen=5 must see the 5-token duplicate")
+    assert(at5.contains(7L), "k=5 must see the 5-token duplicate")
     assert(at8.subsetOf(at5))
   }
 
@@ -83,8 +146,9 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       (2L, "v1 d1 d2 d3 d4 d5 v2 v3"),   // planted run at pos 1..5
       (3L, "r r r r r r")                // overlapping self-repeat
     ).toDF("doc_id", "text")
-    val ext = SuffixSpans.repeatExtents(df, "doc_id", "text", minLen = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(3)).toMap
+    val got = extents(df, 3)
+    assert(got === bruteExtents(df, 3))
+    val ext = got.map { case (id, _, pos, len) => (id, pos) -> len }.toMap
     // doc1: suffix at pos 2 shares exactly d1..d5 (5 tokens) with doc2
     assert(ext((1L, 2)) == 5L)
     assert(ext((2L, 1)) == 5L)
@@ -94,22 +158,22 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     // "r"*6: suffix 0 vs suffix 1 share 5
     assert(ext((3L, 0)) == 5L)
     assert(ext((3L, 3)) == 3L)
-    val spans3 = SuffixSpans.duplicateSpansExact(df, "doc_id", "text", minLen = 3)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
+    val spans3 = spansOf(got).map(s => s._1 -> (s._3, s._4)).toMap
     assert(spans3(1L) == (5L, 1L)) // dup_tokens = 5, one span
     assert(spans3(2L) == (5L, 1L))
     assert(spans3(3L) == (6L, 1L)) // the whole run is duplicated coverage
+    assert(spansOf(got) === kgramSpans(df, 3))
   }
 
-  test("base rank width is a pure cost knob: extents identical at baseWidth 1 vs 4") {
-    // the r12 wide base rank keys round 0 on the raw first-baseWidth
-    // token slice; array<string> order is shorter-prefix-first, which
-    // IS finite-suffix order, so suffixes within baseWidth of their
-    // doc end (keys shorter than the width) still sort exactly. The
-    // corpus mixes a LONG document with no qualifying repeat (the
-    // round gate must stop on the pending set's remaining length, not
-    // this doc's) with short docs carrying the repeats, including one
-    // whose planted phrase runs to the doc's final token.
+  // the width-8 base rank keys round 0 on the raw 8-token slice;
+  // array/NUL-joined order is shorter-prefix-first, which IS
+  // finite-suffix order, so suffixes within 8 tokens of their doc end
+  // (keys shorter than the width) still sort exactly. Both corpora mix a
+  // LONG document with no qualifying repeat (the round gate must stop on
+  // the pending set's remaining length, not this doc's) with short docs
+  // carrying the repeats, one of which runs to its doc's final token
+  // (absent partners).
+  test("repeatExtents == brute force: doc-final phrase, long repeat-free doc, short doc") {
     val rng = new scala.util.Random(53)
     def w() = s"b${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     def run(n: Int) = Seq.fill(n)(w())
@@ -120,33 +184,17 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       (3L, (p6 ++ run(3)).mkString(" ")),
       (4L, "e1 e2 e3")                              // shorter than minLen
     ).toDF("doc_id", "text")
-    def extents(width: Int) = {
-      val got = SuffixSpans.repeatExtents(df, "doc_id", "text",
-          minLen = 4, baseWidth = width)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSet
-      SharedFrames.release() // width is excluded from the shared key by design
-      Dedup.releaseCaches()
-      got
-    }
-    val w1 = extents(1)
-    val w4 = extents(4)
-    assert(w1 === w4)
-    // and the extents are the planted truth: the full 6-token phrase
-    assert(w1.exists { case (id, _, pos, len) => id == 2L && pos == 4 && len == 6L })
-    assert(w1.exists { case (id, _, pos, len) => id == 3L && pos == 0 && len == 6L })
-    assert(!w1.exists { case (id, _, _, _) => id == 1L || id == 4L })
+    val got = extents(df, 4)
+    assert(got === bruteExtents(df, 4))
+    // the extents are the planted truth: the full 6-token phrase
+    assert(got.exists { case (id, _, pos, len) => id == 2L && pos == 4 && len == 6L })
+    assert(got.exists { case (id, _, pos, len) => id == 3L && pos == 0 && len == 6L })
+    assert(!got.exists { case (id, _, _, _) => id == 1L || id == 4L })
   }
 
-  test("refinement arity is a pure cost knob: extents identical at arity 2 vs 4") {
-    // k-ary doubling combines the ranks at pos + j·span (j = 1..k−1)
-    // into one refinement sort. The corpus forces multiple refinement
-    // rounds at baseWidth 1 (a 37-token planted phrase needs span to
-    // reach 64 binary / 81 quaternary) and exercises every sentinel
-    // case: a phrase running to a doc's final token (absent partners
-    // at several j simultaneously), a proper-prefix pair (one doc's
-    // phrase a strict prefix of another's longer run), and a long
-    // repeat-free doc holding the gate honest.
+  test("repeatExtents == brute force: 37-token phrase past the base width, proper prefix") {
+    // the 37-token phrase needs doubling rounds past the base width
+    // (spans 8 → 16 → 32 → 64); doc 3 holds a strict prefix of it
     val rng = new scala.util.Random(67)
     def w() = s"a${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     def run(n: Int) = Seq.fill(n)(w())
@@ -158,152 +206,67 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       (4L, run(200).mkString(" ")),                 // long, repeat-free
       (5L, "z1 z2")                                 // shorter than minLen
     ).toDF("doc_id", "text")
-    def extents(k: Int, width: Int = 1) = {
-      val got = SuffixSpans.repeatExtents(df, "doc_id", "text",
-          minLen = 4, baseWidth = width, arity = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSet
-      SharedFrames.release() // arity is excluded from the shared key by design
-      Dedup.releaseCaches()
-      got
-    }
-    val a2 = extents(2)
-    val a4 = extents(4)
-    assert(a2 === a4)
-    // k-ary loop ON TOP OF the NUL-joined binary round-0 key (the
-    // shipped width-8-style path): width >= 2 starts the loop at span
-    // = width, so quaternary rounds run 4 -> 16 -> 64 over a
-    // joined-string base ranking — the knob combination the width and
-    // arity tests above each pin only in isolation
-    val a4w4 = extents(4, width = 4)
-    assert(a2 === a4w4)
-    // planted truth: doc1 pos 5 and doc2 pos 2 share the full 37 tokens
-    assert(a2.exists { case (id, _, pos, len) => id == 1L && pos == 5 && len == 37L })
-    assert(a2.exists { case (id, _, pos, len) => id == 2L && pos == 2 && len == 37L })
+    val got = extents(df, 4)
+    assert(got === bruteExtents(df, 4))
+    // doc1 pos 5 and doc2 pos 2 share the full 37 tokens
+    assert(got.exists { case (id, _, pos, len) => id == 1L && pos == 5 && len == 37L })
+    assert(got.exists { case (id, _, pos, len) => id == 2L && pos == 2 && len == 37L })
     // doc3's 13-token prefix matches the phrase hosts exactly
-    assert(a2.exists { case (id, _, pos, len) => id == 3L && pos == 0 && len == 13L })
-    assert(!a2.exists { case (id, _, _, _) => id == 4L || id == 5L })
-  }
-
-  test("co-partitioned doubling == join-formulated doubling (full parity, both arities)") {
-    // the r14 co-partitioned loop keeps the rank state in one
-    // hash(doc)-partitioned (doc, pos)-sorted table and reads partner
-    // ranks by array offset; the join loop is the independently-derived
-    // comparator. The corpus forces several refinement rounds (a
-    // 37-token phrase), doc-final suffixes (phrase ends a doc), a
-    // proper-prefix pair, a long repeat-free doc, and a doc shorter
-    // than minLen — every sentinel the partner lookup handles.
-    val rng = new scala.util.Random(71)
-    def w() = s"c${rng.nextInt(100000)}_${rng.nextInt(100000)}"
-    def run(n: Int) = Seq.fill(n)(w())
-    val p37 = run(37)
-    val df = Seq(
-      (1L, (run(5) ++ p37 ++ run(4)).mkString(" ")),
-      (2L, (run(2) ++ p37).mkString(" ")),          // phrase ends the doc
-      (3L, (p37.take(13) ++ run(6)).mkString(" ")), // proper prefix of the repeat
-      (4L, run(200).mkString(" ")),                 // long, repeat-free
-      (5L, "z1 z2")                                 // shorter than minLen
-    ).toDF("doc_id", "text")
-    def extents(copart: Boolean, width: Int, k: Int) = {
-      spark.conf.set(SuffixSpans.CoPartConfKey, copart.toString)
-      try {
-        val got = SuffixSpans.repeatExtents(df, "doc_id", "text",
-            minLen = 4, baseWidth = width, arity = k)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-          .toSet
-        SharedFrames.release()
-        Dedup.releaseCaches()
-        got
-      } finally spark.conf.unset(SuffixSpans.CoPartConfKey)
-    }
-    val joinPath = extents(copart = false, width = 1, k = 2)
-    assert(joinPath.nonEmpty)
-    assert(extents(copart = true, width = 1, k = 2) === joinPath)
-    // and on the shipped-shaped config: joined binary base key + k-ary
-    assert(extents(copart = true, width = 4, k = 4) === joinPath)
+    assert(got.exists { case (id, _, pos, len) => id == 3L && pos == 0 && len == 13L })
+    assert(!got.exists { case (id, _, _, _) => id == 4L || id == 5L })
   }
 
   test("adaptive loop switches mid-run on a slow-decay corpus and stays exact") {
-    // every doc shares a 40-token boilerplate prefix + a unique tail,
-    // so after the width-1 round 0 nearly every position is still
-    // ambiguous (pending >> CoPartSwitchFrac of the corpus) and the
-    // "auto" mode must abandon the join formulation for the
-    // co-partitioned table mid-loop — the routing the sf10/slow-decay
-    // A-B pair motivated (BENCH_sa_copart_ab_r14.json). Equality with
-    // the pure join path is the exactness pin for the switch itself
-    // (the mid-loop layout of frozen ∪ pending and the copart rounds
-    // that follow).
+    // every doc shares a 40-token boilerplate prefix + a unique tail, so
+    // after the width-8 round 0 three quarters of the positions are still
+    // ambiguous (pending > CoPartSwitchFrac of the corpus) and the build
+    // must abandon the join formulation for the co-partitioned table
+    // mid-loop — the routing the slow-decay A-B pair motivated
+    // (BENCH_sa_copart_ab_r14.json). Equality with the brute force is
+    // the exactness pin for the switch itself (the mid-loop layout of
+    // frozen ∪ pending and the copart rounds that follow).
     val rng = new scala.util.Random(83)
     def w() = s"s${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     val shared = Seq.fill(40)(w())
     val df = (1L to 12L).map { i =>
       (i, (shared ++ Seq.fill(4)(w())).mkString(" "))
     }.toDF("doc_id", "text")
-    def extents(knob: String) = {
-      spark.conf.set(SuffixSpans.CoPartConfKey, knob)
-      try {
-        val got = SuffixSpans.repeatExtents(df, "doc_id", "text",
-            minLen = 4, baseWidth = 1)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-          .toSet
-        SharedFrames.release()
-        Dedup.releaseCaches()
-        got
-      } finally spark.conf.unset(SuffixSpans.CoPartConfKey)
-    }
-    val joinPath = extents("false")
-    assert(joinPath.nonEmpty)
-    // the 40-token shared prefix must surface in the extents
-    assert(joinPath.exists { case (_, _, pos, len) => pos == 0 && len == 40L })
-    assert(extents("auto") === joinPath)
+    val got = extents(df, 4)
+    assert(SuffixSpans.lastModeChosen == "auto")
     assert(SuffixSpans.lastSwitchedToCoPart,
-      "auto mode never switched — the corpus does not exercise the adaptive path")
+      "the build never switched — the corpus does not exercise the adaptive path")
+    assert(got === bruteExtents(df, 4))
+    // the 40-token shared prefix must surface in the extents
+    assert(got.exists { case (_, _, pos, len) => pos == 0 && len == 40L })
   }
 
   test("pathological-document cap routes the build to the join loop (r15 guard)") {
     // pairedRows buffers up to one doc's remaining rows per task, so a
-    // build whose longest doc exceeds saCopartMaxDocTokens must route
-    // to the join formulation even when the knob FORCES copart — and
-    // stay exact. Cap forced to 30 tokens; the planted 60-token doc
-    // trips it. The instrumentation var pins the route (correct output
-    // alone would pass on the copart path too).
+    // build whose longest doc exceeds the cap must stay on the join
+    // formulation — and stay exact. Cap lowered to 30 tokens; the
+    // planted 60-token doc trips it. The instrumentation var pins the
+    // route (correct output alone would pass on the adaptive path too).
     val rng = new scala.util.Random(59)
     def w() = s"g${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     val phrase = Seq.fill(6)(w())
     val big = (Seq.fill(20)(w()) ++ phrase ++ Seq.fill(34)(w())).mkString(" ")
     val small = (Seq.fill(3)(w()) ++ phrase ++ Seq.fill(3)(w())).mkString(" ")
     val df = Seq((1L, big), (2L, small)).toDF("doc_id", "text")
-    def run(knob: Option[String], cap: Option[String]) = {
-      knob.foreach(spark.conf.set(SuffixSpans.CoPartConfKey, _))
-      cap.foreach(spark.conf.set(SuffixSpans.CoPartMaxDocTokensKey, _))
-      try {
-        val got = SuffixSpans.repeatExtents(df, "doc_id", "text", minLen = 4)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-          .toSet
-        SharedFrames.release()
-        Dedup.releaseCaches()
-        (got, SuffixSpans.lastModeChosen)
-      } finally {
-        spark.conf.unset(SuffixSpans.CoPartConfKey)
-        spark.conf.unset(SuffixSpans.CoPartMaxDocTokensKey)
-      }
-    }
-    val (base, baseMode) = run(Some("true"), None)
-    assert(base.nonEmpty)
-    assert(baseMode == "copart") // 60 tokens is far under the 2M default
-    val (guarded, guardedMode) = run(Some("true"), Some("30"))
-    assert(guardedMode == "join",
-      "a 60-token doc above the forced 30-token cap must route to the join loop")
-    assert(guarded === base)
-    // default path (auto) is likewise capped
-    val (_, autoMode) = run(None, Some("30"))
-    assert(autoMode == "join")
+    val truth = bruteExtents(df, 4)
+    assert(truth.nonEmpty)
+    assert(extents(df, 4) === truth)
+    assert(SuffixSpans.lastModeChosen == "auto") // 60 tokens is far under the 2M default
+    val guarded = collectExtents(SuffixSpans.computeExtents(df, "doc_id", "text", 4,
+      copartMaxDocTokens = 30))
+    assert(SuffixSpans.lastModeChosen == "join",
+      "a 60-token doc above a 30-token cap must route to the join loop")
+    assert(guarded === truth)
   }
 
   test("NUL-containing tokens route to the array base key (no separator collisions)") {
-    // the r13 binary base key joins slice keys with chr(0); a corpus
-    // whose tokens can contain NUL must fall back to the array form.
-    // The fixture is the exact collision the separator argument would
+    // the binary base key joins slice keys with chr(0); a corpus whose
+    // tokens can contain NUL must fall back to the array form. The
+    // fixture is the exact collision the separator argument would
     // otherwise break on: the token "a\u0000b" vs the token PAIR
     // "a","b" - their NUL-joined slice keys are byte-identical
     // ("a\0b\0p1\0p2\0p3" both), so a broken binary route would merge
@@ -313,9 +276,9 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       (1L, "x1 x2 a\u0000b p1 p2 p3"),
       (3L, "w1 a b p1 p2 p3")
     ).toDF("doc_id", "text")
-    val ext = SuffixSpans.repeatExtents(df, "doc_id", "text", minLen = 4).collect()
-    SharedFrames.releaseAll(); Dedup.releaseCaches()
+    val ext = extents(df, 4)
     assert(ext.isEmpty, ext.mkString(", "))
+    assert(ext === bruteExtents(df, 4))
   }
 
   test("exact-duplicate collapse: copies get closed-form full-suffix " +
@@ -336,9 +299,9 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     val lone = run(20).mkString(" ")
     val df = (copyIds.map(_ -> dupText) ++ Seq(200L -> uniq, 300L -> lone))
       .toDF("doc_id", "text")
-    val ext = SuffixSpans.repeatExtents(df, "doc_id", "text", minLen = 8)
-      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(3)).toMap
-    graft.SharedFrames.releaseAll()
+    val got = extents(df, 8)
+    assert(got === bruteExtents(df, 8))
+    val ext = got.map { case (id, _, pos, len) => (id, pos) -> len }.toMap
     // every copy (INCLUDING the representative): dup_len(pos) = 16 - pos
     // for pos 0..8 — the full remaining suffix repeats in a twin
     for (id <- copyIds; pos <- 0 to 8)
@@ -350,16 +313,12 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     assert(!ext.keys.exists(_._1 == 300L))
     // and the derived spans still agree with the independent k-gram
     // construction on a corpus with exact copies
-    val sa = spans(SuffixSpans.duplicateSpansExact(df, "doc_id", "text", minLen = 8)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    graft.SharedFrames.releaseAll()
-    val kg = spans(Dedup.duplicateSpans(df, "doc_id", "text", k = 8, minCount = 2)
-      .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction"))
-    assert(sa == kg && sa.nonEmpty)
+    val sa = spansOf(got)
+    assert(sa.nonEmpty && sa === kgramSpans(df, 8))
   }
 
   test("longestPassages: the planted phrases surface verbatim, longest first") {
-    val df = planted(8)
+    val df = planted()
     val top = SuffixSpans.longestPassages(df, "doc_id", "text", minLen = 5, topN = 10)
       .collect()
     assert(top.nonEmpty)

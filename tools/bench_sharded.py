@@ -175,12 +175,14 @@ def main():
 
 
 SHARD_RULES = [  # (shard, prefixes) — first match wins
-    # the SA-extents family (suffix-array build + its consumers) gets
-    # its OWN fresh JVM: the ~229 s extents build otherwise ages the
-    # JVM enough to inflate the unrelated spans queries 2-3x in-suite
-    # every round (r12/r13 A-Bs kept re-adjudicating the same two
-    # queries back to their isolated band — fix the harness instead)
-    ("sa_extents", ["q_dup_spans_sa", "q_dup_passages"]),
+    # the suffix-array build gets its OWN fresh JVM: the ~229 s extents
+    # build otherwise ages the JVM enough to inflate the unrelated spans
+    # queries 2-3x in-suite every round (r12/r13 A-Bs kept
+    # re-adjudicating the same queries back to their isolated band —
+    # fix the harness instead). Its one consumer is q_dup_passages;
+    # q_dup_spans_sa is the k-gram span pipeline at k=5 and runs with
+    # the other q_dup_ span queries below
+    ("sa_extents", ["q_dup_passages"]),
     ("sa",       ["q_dup_"]),
     ("dedup",    ["q_dedup_"]),
     ("dsir_cur", ["q_dsir", "q_contamination", "q_split", "q_pipeline",

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Cross-round bench adjudication (generalized from movers_r17.py so
-the round number is an argument, not a fork of the file): for the
+"""Cross-round bench adjudication (the round number is an argument,
+not a fork of the file): for the
 common queries of two sharded-bench artifacts, total ratio raw,
 st-normalized, and mt-normalized; per-query movers beyond 1.5x in
 either direction under the workload-matched (mt) normalizer, with the
