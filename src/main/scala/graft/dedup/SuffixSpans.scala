@@ -32,16 +32,12 @@ import org.apache.spark.sql.functions._
   *     partner's rank and re-sort — rows carry (id, pos, rank, rank2),
   *     ~32 bytes, never token text (the singleton flag and the
   *     class-head rank ride the ranking sort itself — zero groupBy
-  *     shuffles, zero split joins). Rounds run join-formulated
-  *     ([[doublingJoin]]: frozen pieces ∪ pending view probed by
-  *     equi-join) and switch, once the pending set stays above
-  *     [[CoPartSwitchFrac]] of the corpus, to one hash(doc)-partitioned
-  *     (doc, pos)-sorted table ([[copartLoop]]) where a partner lookup
-  *     is an ARRAY OFFSET in the same partition and the refinement folds
-  *     back in by a co-partitioned sorted merge. Suffixes never compare
-  *     across documents (a position within 2^h of its doc end ranks its
-  *     missing partner as −1 = "ends here", which orders doc-final
-  *     suffixes exactly like finite strings).
+  *     shuffles, zero split joins). Each round is join-formulated
+  *     ([[doublingJoin]]): the pending rows probe the rank view
+  *     (frozen pieces ∪ pending) by an equi-join on (doc id, pos + 2^h).
+  *     Suffixes never compare across documents (a position within 2^h
+  *     of its doc end ranks its missing partner as −1 = "ends here",
+  *     which orders doc-final suffixes exactly like finite strings).
   *  2. Suffix-array adjacency: one [[GlobalOrder.withPrev]] boundary
   *     exchange over (rank, id, pos) pairs each suffix with its SA
   *     neighbor; a suffix's longest repeated prefix is realized at an
@@ -84,13 +80,6 @@ object SuffixSpans {
     * doubling lost to binary there too (1.2–1.7× slower). */
   private val BaseWidth = 8
 
-  /** Longest-document cap (tokens) for the co-partitioned loop: a
-    * build containing any doc longer than this stays on the join loop,
-    * because the copart partner lookup buffers up to one doc's
-    * remaining rows per task (~29 B/row: 2M tokens is ~60 MB in one
-    * task). Memory guard only — both loops are exact. */
-  private val CoPartMaxDocTokens = 2000000L
-
   /** Token-comparison budget per task for the chunked-LCP compare
     * stage (work-aware repartition). Targets ~100 ms tasks on one
     * core; BENCH_sa_sf10_r19.json left the stage to AQE together with
@@ -118,12 +107,9 @@ object SuffixSpans {
     * AQE-skew-splittable join — the collapse a 100 TB run cannot skip.
     * Grouping is on the raw text (never a hash): a hash collision
     * would silently merge distinct texts, and exactness here is
-    * oracle-checked. `copartMaxDocTokens` is the co-partitioned
-    * loop's memory guard (see [[CoPartMaxDocTokens]]); only specs lower
-    * it. */
-  private[graft] def computeExtents(df: DataFrame, idCol: String, textCol: String,
-                                    minLen: Int,
-                                    copartMaxDocTokens: Long = CoPartMaxDocTokens): DataFrame = {
+    * oracle-checked. */
+  private def computeExtents(df: DataFrame, idCol: String, textCol: String,
+                             minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     val base = graft.Parallelism.spread(df).select(col(idCol), col(textCol))
     // MEASURED routing (the editdist-chooser pattern): the collapse
@@ -142,12 +128,11 @@ object SuffixSpans {
       .agg(count(lit(1)).as("__n"), countDistinct(col(textCol)).as("__d")).first()
     val (pn, pd) = (probe.getLong(0), probe.getLong(1))
     if (pn == 0L || (pn - pd).toDouble / pn < 0.1)
-      return computeExtentsDistinct(df, idCol, textCol, minLen, copartMaxDocTokens)
+      return computeExtentsDistinct(df, idCol, textCol, minLen)
     val groups = base.groupBy(col(textCol))
       .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__cnt"))
     val extD = computeExtentsDistinct(
-      groups.select(col("__rep").as(idCol), col(textCol)),
-      idCol, textCol, minLen, copartMaxDocTokens)
+      groups.select(col("__rep").as(idCol), col(textCol)), idCol, textCol, minLen)
     val dupTexts = groups.filter(col("__cnt") >= 2)
     // duplicated reps' SA rows are superseded by the closed form below
     val uniqExt = extD.join(dupTexts.select(col("__rep").as(idCol)),
@@ -165,7 +150,7 @@ object SuffixSpans {
   }
 
   private def computeExtentsDistinct(df: DataFrame, idCol: String, textCol: String,
-                                     minLen: Int, copartMaxDocTokens: Long): DataFrame = {
+                                     minLen: Int): DataFrame = {
     // workHint 8: this cache feeds the round-0 suffix explode (one row
     // per token position, each carrying an 8-token slice key —
     // ~8× the input bytes before the sort) and the gram prefilter
@@ -176,35 +161,16 @@ object SuffixSpans {
       .select(col(idCol), col("__ws"), size(col("__ws")).cast("long").as("n_tokens")))
 
     // one head pass: max length (empty guard and the chunked-LCP round
-    // bound), whether any token contains NUL (the binary base key's
-    // separator — see below), and the surrogate-key bijection check for
-    // the co-partitioned loop (a 64-bit xxhash64 collision between two
-    // doc ids would silently merge their suffix sets; astronomically
-    // unlikely at any real doc count, but exactness never RESTS on it —
-    // a detected collision keeps the build on the join-formulated loop,
-    // keyed on the raw id)
+    // bound) and whether any token contains NUL (the binary base key's
+    // separator — see below)
     val head = docsArr.agg(max("n_tokens"),
-      max(when(exists(col("__ws"), t => t.contains("\u0000")), 1).otherwise(0)),
-      countDistinct(col(idCol)), countDistinct(xxhash64(col(idCol)))).first()
+      max(when(exists(col("__ws"), t => t.contains("\u0000")), 1).otherwise(0))).first()
     if (head.isNullAt(0))
       // no doc long enough: empty result, right schema
       return docsArr.select(col(idCol), col("n_tokens"),
         lit(0).as("pos"), lit(0L).as("dup_len")).limit(0)
     val nulFree = head.getInt(1) == 0
-    // PATHOLOGICAL-DOCUMENT GUARD: [[pairedRows]]' lookahead window is
-    // bounded by min(span, remaining doc length) rows — on a single
-    // multi-million-token document that is a per-task buffer
-    // proportional to the doc's full length late in the loop (span
-    // grows past every shorter doc). The join loop has no such per-doc
-    // buffer (its partner lookup is an equi-join), so a build whose
-    // LONGEST doc exceeds the cap never switches to the co-partitioned
-    // table. Cost guard only (both loops are exact).
     val maxDocTokens = head.getLong(0)
-    val mode =
-      if (head.getLong(2) != head.getLong(3) || maxDocTokens > copartMaxDocTokens) "join"
-      else "auto"
-    lastModeChosen = mode // test-only instrumentation (see the var's doc)
-    val keyExpr = if (mode == "join") col(idCol) else xxhash64(col(idCol))
 
     // --- 1. prefix doubling ------------------------------------------
     // Head ranks (rank = global index of the class head) let a round
@@ -247,7 +213,8 @@ object SuffixSpans {
     // anything) falls back to the array form: exactness never rests on
     // the separator assumption.
     val baseKey = s"slice(__ws, i + 1, $BaseWidth)"
-    val toks = docsArr.select(keyExpr.as("__kid"), col("n_tokens"),
+    // steps 1–3 key on the caller's id, carried as "__kid"
+    val toks = docsArr.select(col(idCol).as("__kid"), col("n_tokens"),
       posexplode(expr(
         if (nulFree) s"transform(__ws, (x, i) -> array_join($baseKey, chr(0)))"
         else s"transform(__ws, (x, i) -> $baseKey)")).as(Seq("pos", "__t")))
@@ -255,29 +222,18 @@ object SuffixSpans {
     // the ranking sort itself (GlobalOrder.withHeadRankFlagged): one
     // parallel sort per round, no groupBy shuffles, no split joins
     val r0 = GlobalOrder.withHeadRankFlagged(toks, Nil, Seq(col("__t")), "__r", "__amb")
-    // the doubling loop's startup signals — position count n (the auto
-    // switch fraction's denominator), the pending set's max remaining
-    // length (the round gate) and its row count — ride the round-0
-    // checkpoint's own materialization (CollectMetrics) instead of a
-    // separate count job + pendStats job (guide §1.2: remove serial
-    // driver passes). Wrong/missing metrics cannot mis-rank: the loops
-    // re-confirm any observed gate CLOSE with an exact aggregate
-    // before exiting (see gateOpen in doublingJoin/copartLoop).
+    // the doubling loop's startup gate — the pending set's max remaining
+    // length — rides the round-0 checkpoint's own materialization
+    // (CollectMetrics) instead of a separate pendStats job (guide §1.2:
+    // remove serial driver passes). A wrong/missing metric cannot
+    // mis-rank: the loop re-confirms any observed gate CLOSE with an
+    // exact aggregate before exiting (see gateOpen in doublingJoin).
     val obs0 = org.apache.spark.sql.Observation()
     val all0 = graft.Checkpoints.checkpoint(r0.drop("__t").observe(obs0,
-      count(lit(1)).as("n"),
-      max(when(col("__amb"), col("n_tokens") - col("pos"))).as("mx"),
-      count(when(col("__amb"), 1)).as("cnt")))
-    val st0 = graft.Observed.metrics(obs0)
-    val loop = doublingJoin(all0,
-      if (mode == "auto") CoPartSwitchFrac else Double.PositiveInfinity, st0)
-    lastSwitchedToCoPart = loop.switchedToCoPart // test-only instrumentation
-    val ranked = loop.ranked
+      max(when(col("__amb"), col("n_tokens") - col("pos"))).as("mx")))
+    val ranked = doublingJoin(all0, graft.Observed.metrics(obs0))
 
     // --- 2. SA adjacency (suffixes that can host a >=minLen repeat) ---
-    // (steps 2 and 3 run on the loop's "__kid" key — the raw id on the
-    // join path, the long surrogate on the co-partitioned one; the
-    // caller's id comes back in the final join below)
     val suff = ranked.filter(col("pos") <= col("n_tokens") - minLen)
       .withColumn("__rem", col("n_tokens") - col("pos"))
     val adj = GlobalOrder.withPrev(suff,
@@ -295,7 +251,7 @@ object SuffixSpans {
         least(col("remA"), col("remB")).as("lcp"))
     // 128-bit gram prefilter: unequal hashes PROVE lcp < minLen (drop);
     // equal hashes proceed to exact chunk comparison from off = minLen
-    val grams = docsArr.select(keyExpr.as("__kid"),
+    val grams = docsArr.select(col(idCol).as("__kid"),
         posexplode(Dedup.positionalShingleArray(minLen)).as(Seq("pos", "__g")))
       .select(col("__kid"), col("pos"),
         xxhash64(col("__g")).as("gh1"), xxhash64(lit("s2"), col("__g")).as("gh2"))
@@ -319,8 +275,8 @@ object SuffixSpans {
     // -1 = metric missing: fall back to the exact isEmpty probe
     var activeCnt: Long = graft.Observed.metrics(obsA)
       .map(graft.Observed.longOf(_, "cnt")).getOrElse(-1L)
-    val wsA = docsArr.select(keyExpr.as("idA"), col("__ws").as("__wsA"))
-    val wsB = docsArr.select(keyExpr.as("idB"), col("__ws").as("__wsB"))
+    val wsA = docsArr.select(col(idCol).as("idA"), col("__ws").as("__wsA"))
+    val wsB = docsArr.select(col(idCol).as("idB"), col("__ws").as("__wsB"))
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     done += eqLcp
     var chunk = minLen.toLong
@@ -386,12 +342,10 @@ object SuffixSpans {
       .unionByName(lcps.select(col("idB").as("__kid"), col("posB").as("pos"), col("lcp")))
       .groupBy(col("__kid"), col("pos")).agg(max("lcp").as("dup_len"))
       .filter(col("dup_len") >= minLen)
-    // map the loop key back to the caller's id (identity join on the
-    // join path; surrogate→id on the co-partitioned one — byPos holds
-    // only the duplicate-mass positions, so this join is result-sized)
-    byPos.join(docsArr.select(keyExpr.as("__kid"), col(idCol), col("n_tokens")),
-        Seq("__kid"))
-      .select(col(idCol), col("n_tokens"), col("pos"), col("dup_len"))
+    // attach n_tokens (byPos holds only the duplicate-mass positions, so
+    // this join is result-sized)
+    byPos.join(docsArr.select(col(idCol).as("__kid"), col("n_tokens")), Seq("__kid"))
+      .select(col("__kid").as(idCol), col("n_tokens"), col("pos"), col("dup_len"))
   }
 
   /** The maximal repeated passages themselves: top `topN` longest
@@ -399,79 +353,40 @@ object SuffixSpans {
     * longer repeat are suppressed: a position whose predecessor's
     * extent already reaches one token further is not a new passage).
     * Output: (idCol, pos, dup_len, passage), ordered dup_len desc with
-    * (idCol, pos) tie-break — deterministic. */
+    * (idCol, pos) tie-break — deterministic. Only the `topN` winners
+    * re-read their text: the passage is sliced from `words(text)` of
+    * those rows alone, never from a second tokenized corpus. */
   def longestPassages(df: DataFrame, idCol: String, textCol: String,
                       minLen: Int = 8, topN: Int = 20): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
     val ext = repeatExtents(df, idCol, textCol, minLen)
     val w = Window.partitionBy(idCol).orderBy("pos")
-    val runStarts = ext
+    val order = Seq(col("dup_len").desc, col(idCol), col("pos"))
+    val top = ext
       .withColumn("__ppos", lag("pos", 1).over(w))
       .withColumn("__plen", lag("dup_len", 1).over(w))
       .filter(col("__ppos").isNull || col("__ppos") =!= col("pos") - 1 ||
         col("__plen") < col("dup_len") + 1)
-    val docsArr = Dedup.cachedCorpus(graft.Parallelism.spread(df)
-      .select(col(idCol), words(col(textCol)).as("__ws")))
-    runStarts.join(docsArr, Seq(idCol))
-      .select(col(idCol), col("pos"), col("dup_len"),
-        concat_ws(" ",
-          expr("slice(__ws, cast(pos + 1 as int), cast(dup_len as int))")).as("passage"))
-      .orderBy(col("dup_len").desc, col(idCol), col("pos"))
+      .orderBy(order: _*)
       .limit(topN)
+      .select(col(idCol), col("pos"), col("dup_len"))
+    top.join(df.select(col(idCol), col(textCol)), Seq(idCol))
+      .select(col(idCol), col("pos"), col("dup_len"),
+        concat_ws(" ", slice(words(col(textCol)), col("pos") + 1,
+          col("dup_len").cast("int"))).as("passage"))
+      .orderBy(order: _*)
+      .limit(topN) // a top-N sort in one stage, not a range-partitioned global sort
   }
-
-  /** Pending-set fraction above which the adaptive loop abandons the
-    * join formulation for the co-partitioned table. MEASURED routing
-    * boundary, not a guess: on the sf10 bench corpus (fast decay —
-    * pending collapses after the width-8 round 0) the join loop won all 3 interleaved fresh-JVM pairs
-    * (copart 1.12-1.27x slower: the full-table decode+rewrite per
-    * round outweighs a broadcast-probed view scan when pending is
-    * small), while on the slow-decay boilerplate corpus (shared
-    * 1000-token prefix, pending ≈ 0.97·n for ~7 rounds) the copart
-    * table won both pairs (0.87x/0.95x) — BENCH_sa_copart_ab_r14.json.
-    * At pending ≥ half the corpus a join round's partner-lookup
-    * exchange already moves ≥ n/2 rows, the regime where scanning and
-    * locally rewriting beats re-shuffling. */
-  private[graft] val CoPartSwitchFrac = 0.5
-
-  /** Test instrumentation ONLY: whether the last build in this JVM
-    * switched to the co-partitioned table (pins that the adaptive spec
-    * corpus actually exercises the switch, not just the join path).
-    * Written from [[doublingJoin]]'s returned switch fact; concurrent
-    * builds in one session race on it, which a single-threaded spec
-    * never does. Production code must read the [[JoinLoopResult]],
-    * never this var. */
-  @volatile private[graft] var lastSwitchedToCoPart = false
-
-  /** Test instrumentation ONLY: the loop formulation the last build in
-    * this JVM routed to ("join" | "auto") — lets the specs
-    * pin that a guard (surrogate collision, pathological-doc cap)
-    * actually forced the join route rather than merely producing
-    * correct results by luck. Same caveats as
-    * [[lastSwitchedToCoPart]]: races under concurrent builds,
-    * production code must never read it. */
-  @volatile private[graft] var lastModeChosen = ""
-
-  /** [[doublingJoin]]'s result: the final rank table plus whether the
-    * adaptive loop abandoned the join formulation mid-build for the
-    * co-partitioned table (always false at an infinite switchFrac). */
-  private final case class JoinLoopResult(ranked: DataFrame,
-                                          switchedToCoPart: Boolean)
 
   /** The join-formulated doubling loop: frozen checkpointed pieces + a
     * pending set; each round's partner lookup equi-joins the pending
     * probe against the shifted full rank view (frozen ∪ pending ≈ n
     * rows — a full-corpus exchange, or a broadcast + full-view scan
-    * once the pending side shrinks). With a finite `switchFrac` it is
-    * the adaptive loop's first phase — when the pending set stays above
-    * switchFrac·n at a round boundary, the full view is laid out once
-    * into the co-partitioned table and [[copartLoop]] finishes the job
-    * (the pending count rides the existing per-round gate aggregate, so
-    * the routing signal is free). At an infinite `switchFrac` it runs
-    * to the end: the surrogate-collision and long-document fallback.
-    * Input/output rows: (__kid, n_tokens, pos, __r[, __amb]). */
-  private def doublingJoin(all0: DataFrame, switchFrac: Double,
-                           init: Option[Map[String, Any]]): JoinLoopResult = {
+    * once the pending side shrinks). `init` carries the round-0
+    * checkpoint's observed gate ("mx"). Input rows:
+    * (__kid, n_tokens, pos, __r, __amb); output: (__kid, n_tokens, pos,
+    * __r), the final rank table. */
+  private def doublingJoin(all0: DataFrame, init: Option[Map[String, Any]]): DataFrame = {
     val cols = Seq(col("__kid"), col("n_tokens"), col("pos"), col("__r"))
     // frozen pieces (classes proven singleton) + the active remainder;
     // their union is the full rank table at any round
@@ -499,46 +414,25 @@ object SuffixSpans {
     // A corpus whose longest doc is 4096 tokens but whose ambiguous
     // classes are all short repeats would otherwise pay ~9 dead
     // rounds.
-    // The stats aggregate rides the newPend CHECKPOINT's own
+    // The gate aggregate rides the newPend CHECKPOINT's own
     // materialization (CollectMetrics), not a separate per-round job. Gate
     // discipline: an OPEN observed gate is safe to trust (worst case a
     // dead round that refines nothing), but a CLOSED one is
     // exactness-bearing, so gateOpen() re-confirms any close with this
     // exact aggregate before the loop may exit; a missing metric
-    // (listener hiccup) falls back to it too. The observed row count
-    // only routes the copart switch — cost, never correctness.
-    def pendStats(): (Long, Long) = { // (max remaining length, rows); (0,0) when empty
-      val r = pend.agg(max(col("n_tokens") - col("pos")), count(lit(1))).first()
-      if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+    // (listener hiccup) falls back to it too.
+    def pendMax(): Long = { // max remaining length; 0 when empty
+      val r = pend.agg(max(col("n_tokens") - col("pos"))).first()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    lazy val nAll: Long = init.map(graft.Observed.longOf(_, "n"))
-      .getOrElse(all0.count()) // cheap fallback: all0 is checkpointed
-    var stats: (Long, Long) = init
-      .map(m => (graft.Observed.longOf(m, "mx"), graft.Observed.longOf(m, "cnt")))
-      .getOrElse(pendStats())
-    var statsExact = init.isEmpty
-    def gateOpen(): Boolean = span < stats._1 || {
-      if (!statsExact) { stats = pendStats(); statsExact = true }
-      span < stats._1
+    var gate = init.map(graft.Observed.longOf(_, "mx")).getOrElse(pendMax())
+    var gateExact = init.isEmpty
+    def gateOpen(): Boolean = span < gate || {
+      if (!gateExact) { gate = pendMax(); gateExact = true }
+      span < gate
     }
     val gc = graft.LoopGc.ticker()
     while (gateOpen()) {
-      if (stats._2 > switchFrac * nAll) {
-        // the pending set is corpus-sized: every further join round
-        // would exchange ~n rows for its partner lookup — lay the
-        // full view out ONCE into the co-partitioned table and let
-        // the offset-lookup loop finish (see CoPartSwitchFrac)
-        val view = frozenParts.map(_.withColumn("__amb", lit(false)))
-          .reduceOption(_ unionByName _)
-          .map(_.unionByName(pend.withColumn("__amb", lit(true))))
-          .getOrElse(pend.withColumn("__amb", lit(true)))
-        val laid = copartLayout(view) // eager: pieces fully consumed here
-        (frozenParts :+ pend).foreach(graft.Checkpoints.free)
-        graft.Checkpoints.free(all0) // its round-0 splits + nAll are long done
-        return JoinLoopResult(
-          copartLoop(laid, span, stats._1, statsExact),
-          switchedToCoPart = true)
-      }
       val rankedView = (frozenParts :+ pend).reduce(_ unionByName _)
       // suffix at pos p extends with the rank of the suffix at
       // p + span (a −1 end marker orders a proper-prefix suffix
@@ -571,8 +465,7 @@ object SuffixSpans {
       val obs = org.apache.spark.sql.Observation()
       val newPend = graft.Checkpoints.checkpoint(
         refined.filter(col("__amb")).select(cols: _*)
-          .observe(obs, max(col("n_tokens") - col("pos")).as("mx"),
-            count(lit(1)).as("cnt")))
+          .observe(obs, max(col("n_tokens") - col("pos")).as("mx")))
       // refined and the old pending set are now superseded — both of
       // their consumers (the frozen piece and newPend; rankedView's
       // lookup ran inside refined's own materialization) are eagerly
@@ -585,262 +478,16 @@ object SuffixSpans {
       pend = newPend
       span *= 2
       val m = graft.Observed.metrics(obs)
-      stats = m.map(mm => (graft.Observed.longOf(mm, "mx"),
-        graft.Observed.longOf(mm, "cnt"))).getOrElse(pendStats())
-      statsExact = m.isEmpty
+      gate = m.map(graft.Observed.longOf(_, "mx")).getOrElse(pendMax())
+      gateExact = m.isEmpty
       gc.tick() // bound dead-shuffle residency in long builds (LoopGc)
     }
     // classes still ambiguous when the gate closes are genuinely
     // identical suffixes (to their doc ends) — their shared rank is
     // final. all0 (position-table-sized — the single largest
     // checkpoint in the build) is dead: its only consumers were the
-    // eager round-0 splits and the nAll count
+    // eager round-0 splits
     graft.Checkpoints.free(all0)
-    JoinLoopResult((frozenParts :+ pend).reduce(_ unionByName _),
-      switchedToCoPart = false)
-  }
-
-  private def gateOf(d: DataFrame): Long = { // max remaining length over
-    // the pending rows — the same round gate as the join loop; 0 when
-    // no class is still ambiguous
-    val r = d.filter(col("__amb")).agg(max(col("n_tokens") - col("pos"))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Materialize (__kid, n_tokens, pos, __r, __amb) rows in the
-    * co-partitioned layout: hash(__kid) into the session's shuffle
-    * partition count, sorted by (__kid, pos) within partitions — the
-    * layout [[pairedRows]] and [[mergeSorted]] rely on. */
-  private def copartLayout(d: DataFrame): DataFrame = {
-    val nPart = d.sparkSession.sessionState.conf.numShufflePartitions
-    graft.Checkpoints.checkpoint(
-      d.select(col("__kid"), col("n_tokens"), col("pos"), col("__r"), col("__amb"))
-        .repartition(nPart, col("__kid")).sortWithinPartitions("__kid", "pos"))
-  }
-
-  /** The co-partitioned doubling loop — [[doublingJoin]]'s second
-    * phase once the pending set is corpus-sized: the full rank state
-    * lives in ONE table hash-partitioned by doc surrogate and sorted
-    * by (doc, pos) within partitions — a layout every round REUSES,
-    * because the partner of (doc, pos) at pos + span lives span rows
-    * ahead in the SAME partition (positions are dense 0..n−1 within
-    * each doc block, and no row ever leaves the table). Each round
-    * then costs:
-    *   1. partner lookup — one zero-exchange streaming pass over the
-    *      table ([[pairedRows]]: a bounded lookahead window, partner
-    *      rank read by ARRAY OFFSET, no join, no hash map);
-    *   2. the refinement range-sort over the pending rows only
-    *      ([[GlobalOrder.withHeadRankFlagged]], as in the join loop);
-    *   3. rank merge — the refined delta re-keyed to the same layout
-    *      (a pending-sized exchange) and zipped partition-for-partition
-    *      into the table by a sorted two-pointer pass ([[mergeSorted]]),
-    *      then checkpointed as the next round's state.
-    * vs the join loop's per-round full-corpus exchange of the rank
-    * view: the full table is only ever SCANNED and REWRITTEN (slim
-    * ~40-byte rows through executor-local storage), never shuffled.
-    * The trade-offs: (a) the merge rewrites n rows per round where the
-    * join loop checkpointed only the refined set — the reason it only
-    * takes over once pending ≥ [[CoPartSwitchFrac]]·n; (b) hash(doc)
-    * partitioning makes partition load ∝ the largest document (the
-    * per-doc window stages downstream already have this shape); the
-    * lookahead window is likewise bounded by min(span, longest doc)
-    * rows. Doc ids ride as the xxhash64 long surrogate
-    * (bijection-checked upstream) so partition hashing, in-partition
-    * ordering and row width never depend on the caller's id type.
-    * In-pass density asserts fail loudly if the layout invariant is
-    * ever broken. */
-  private def copartLoop(table0: DataFrame, startSpan: Long, startGate: Long,
-                         startGateExact: Boolean): DataFrame = {
-    var table = table0
-    var span = startSpan
-    var gate = startGate
-    var gateExact = startGateExact
-    // observed-gate discipline (see doublingJoin): trust an OPEN gate,
-    // exactly re-confirm a CLOSE before exiting. The confirm reads the
-    // merged table — its ambiguous set IS the last delta's (frozen
-    // rows never re-enter the pending set).
-    def gateOpen(): Boolean = span < gate || {
-      if (!gateExact) { gate = gateOf(table); gateExact = true }
-      span < gate
-    }
-    val gc = graft.LoopGc.ticker()
-    while (gateOpen()) {
-      // within class [r, r+s): new rank = r + __sh − __ch, exactly as
-      // in the join loop (the refinement sort is shared machinery)
-      val sub = GlobalOrder.withHeadRankFlagged(pairedRows(table, span),
-        Seq(col("__r")), Seq(col("__p")), "__sh", "__amb", Some("__ch"))
-      // the round gate rides the delta layout's own checkpoint job
-      // (CollectMetrics over the pending rows), not a separate
-      // per-round aggregate; frozen rows never re-enter the pending
-      // set, so the delta's ambiguous rows ARE the new pending set
-      val obs = org.apache.spark.sql.Observation()
-      val delta = copartLayout(sub.select(col("__kid"), col("n_tokens"), col("pos"),
-        (col("__r") + col("__sh") - col("__ch")).as("__r"), col("__amb"))
-        .observe(obs,
-          max(when(col("__amb"), col("n_tokens") - col("pos"))).as("mx")))
-      val m = graft.Observed.metrics(obs)
-      gate = m.map(graft.Observed.longOf(_, "mx")).getOrElse(gateOf(delta))
-      gateExact = m.isEmpty
-      val merged = graft.Checkpoints.checkpoint(mergeSorted(table, delta))
-      // the pre-merge table and the delta are superseded once the
-      // merged table materializes (eager) — free both, or every
-      // round's full n-row table stays resident for the whole build
-      // (the copart loop rewrites n rows per round BY DESIGN, which
-      // makes the leak rounds × n — the dominant term in the sf100
-      // disk-guard kill)
-      graft.Checkpoints.free(delta)
-      graft.Checkpoints.free(table)
-      table = merged
-      span *= 2
-      gc.tick() // bound dead-shuffle residency in long builds (LoopGc)
-    }
-    // classes still ambiguous when the gate closes are genuinely
-    // identical suffixes (to their doc ends) — their shared rank is
-    // final
-    table.select("__kid", "n_tokens", "pos", "__r")
-  }
-
-  /** One zero-exchange partner-lookup pass over the co-partitioned
-    * rank table: for every still-ambiguous row (doc, pos) emit
-    * (__kid, n_tokens, pos, __r, __p) where __p is the rank at
-    * (doc, pos + span), read from a bounded lookahead window —
-    * positions are dense within each doc block, so the partner sits
-    * exactly span rows ahead in the same sorted partition (density is
-    * asserted per lookup; a violation is a layout bug and must fail
-    * the job, never mis-rank). Positions within span of their doc end
-    * take the −1 end marker, exactly like the join loop's nearEnd
-    * branch. The window never holds more than min(span, remaining doc
-    * length) + 1 rows. */
-  private def pairedRows(table: DataFrame, spanLen: Long): DataFrame = {
-    import org.apache.spark.sql.GraftInternalRows
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(table.schema.fields.take(4).toIndexedSeq :+
-      StructField("__p", LongType, nullable = false))
-    val outTypes = schema.fields.map(_.dataType)
-    // INTERNALROW FORMULATION: a pass over `table.rdd` pays an encoder
-    // decode to a boxed GenericRow per row (one object + one box per
-    // primitive field) — measured 1.12–1.27x slower on fast-decay
-    // corpora (BENCH_sa_copart_ab_r14.json). This pass reads the
-    // plan's InternalRows in place and decodes the five primitive
-    // fields straight into a primitive RING BUFFER — the lookahead
-    // window holds no row objects at all — and emits one REUSED
-    // mutable output row (the scan node behind
-    // [[GraftInternalRows.fromRdd]] applies its own unsafe projection;
-    // reuse is the standard valid-until-next-next() row contract).
-    val rdd = GraftInternalRows.toRdd(table).mapPartitions { it =>
-      new Iterator[InternalRow] {
-        // decoded lookahead window as five primitive ring buffers:
-        // bounded by min(span, remaining doc length) entries, ~29 B each
-        private var cap = 1024
-        private var kidB = new Array[Long](cap)
-        private var ntB = new Array[Long](cap)
-        private var posB = new Array[Int](cap)
-        private var rB = new Array[Long](cap)
-        private var ambB = new Array[Boolean](cap)
-        private var start = 0
-        private var len = 0
-        private def grow(): Unit = {
-          val nc = cap << 1
-          val k2 = new Array[Long](nc); val n2 = new Array[Long](nc)
-          val p2 = new Array[Int](nc); val r2 = new Array[Long](nc)
-          val a2 = new Array[Boolean](nc)
-          var i = 0
-          while (i < len) {
-            val s = (start + i) % cap
-            k2(i) = kidB(s); n2(i) = ntB(s); p2(i) = posB(s)
-            r2(i) = rB(s); a2(i) = ambB(s)
-            i += 1
-          }
-          kidB = k2; ntB = n2; posB = p2; rB = r2; ambB = a2
-          cap = nc; start = 0
-        }
-        private def append(r: InternalRow): Unit = {
-          if (len == cap) grow()
-          val e = (start + len) % cap
-          kidB(e) = r.getLong(0); ntB(e) = r.getLong(1); posB(e) = r.getInt(2)
-          rB(e) = r.getLong(3); ambB(e) = r.getBoolean(4)
-          len += 1
-        }
-        private val out = new SpecificInternalRow(outTypes)
-        private var ready = false
-        private def advance(): Unit = {
-          while (!ready && (len > 0 || it.hasNext)) {
-            if (len == 0) append(it.next())
-            val hi = start
-            val hKid = kidB(hi); val hNt = ntB(hi); val hPos = posB(hi)
-            val hR = rB(hi); val hAmb = ambB(hi)
-            // rows of lookahead this head can ever need: partners stop
-            // at the doc end, and the doc block is contiguous
-            val need = math.min(spanLen, hNt - hPos - 1).toInt
-            while (len - 1 < need && it.hasNext) append(it.next())
-            start = (start + 1) % cap; len -= 1
-            if (hAmb) {
-              out.setLong(0, hKid); out.setLong(1, hNt)
-              out.setInt(2, hPos); out.setLong(3, hR)
-              val v =
-                if (hPos + spanLen >= hNt) -1L
-                else {
-                  val idx = (start + (spanLen - 1).toInt) % cap // head removed: offset span ⇒ index span−1
-                  require(kidB(idx) == hKid && posB(idx) == hPos + spanLen,
-                    s"suffix rank table density violated at pos=$hPos shift=$spanLen")
-                  rB(idx)
-                }
-              out.setLong(4, v)
-              ready = true
-            }
-          }
-        }
-        def hasNext: Boolean = { if (!ready) advance(); ready }
-        def next(): InternalRow = {
-          if (!ready) advance()
-          ready = false; out
-        }
-      }
-    }
-    GraftInternalRows.fromRdd(table.sparkSession, rdd, schema)
-  }
-
-  /** Sorted two-pointer merge of the refined delta into the rank
-    * table, partition-for-partition (both sides share the
-    * hash(__kid)-into-nPart layout and the (__kid, pos) in-partition
-    * order, so `zipPartitions` aligns them without any exchange).
-    * Delta keys are a subset of table keys — a row takes the delta's
-    * (rank, amb) when keys match, else passes through unchanged; a
-    * delta row left over when its partition's table side is exhausted
-    * is a co-partitioning bug and fails loudly. */
-  private def mergeSorted(table: DataFrame, delta: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftInternalRows
-    import org.apache.spark.sql.catalyst.InternalRow
-    val schema = table.schema
-    // InternalRow formulation: pure passthrough — no decode,
-    // no per-row allocation. Row-reuse safety: `di.head` caches the one
-    // row the underlying iterator last produced, whose buffer is only
-    // overwritten by the NEXT underlying next() — i.e. after the merge
-    // either emitted it (downstream contract: valid until the
-    // consumer's next next(), which is when we advance again) or
-    // decided to pass the table row through (di untouched). The two
-    // sides reuse DISTINCT buffers, so comparing di.head against t is
-    // always sound.
-    val rdd = GraftInternalRows.toRdd(table)
-      .zipPartitions(GraftInternalRows.toRdd(delta)) { (ti, di0) =>
-        val di = di0.buffered
-        val merged = ti.map { t =>
-          if (di.hasNext && di.head.getLong(0) == t.getLong(0) &&
-              di.head.getInt(2) == t.getInt(2)) di.next()
-          else t
-        }
-        new Iterator[InternalRow] {
-          def hasNext: Boolean = {
-            val h = merged.hasNext
-            if (!h) require(!di.hasNext,
-              "suffix delta row missing from the base rank table (layout bug)")
-            h
-          }
-          def next(): InternalRow = merged.next()
-        }
-      }
-    GraftInternalRows.fromRdd(table.sparkSession, rdd, schema)
+    (frozenParts :+ pend).reduce(_ unionByName _)
   }
 }

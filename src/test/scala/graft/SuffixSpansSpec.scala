@@ -44,17 +44,16 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     docs.toDF("doc_id", "text")
   }
 
-  private type Ext = Set[(Long, Long, Int, Long)] // (doc_id, n_tokens, pos, dup_len)
+  // (doc_id, n_tokens, pos, dup_len); doc_id is whatever type the
+  // fixture uses (long or string)
+  private type Ext = Set[(Any, Long, Int, Long)]
 
-  private def collectExtents(ext: DataFrame): Ext = {
-    val got = ext.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+  private def extents(df: DataFrame, minLen: Int): Ext = {
+    val got = SuffixSpans.repeatExtents(df, "doc_id", "text", minLen).collect()
+      .map(r => (r.get(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
     Dedup.releaseCaches()
     got
   }
-
-  private def extents(df: DataFrame, minLen: Int): Ext =
-    collectExtents(SuffixSpans.repeatExtents(df, "doc_id", "text", minLen))
 
   /** Brute-force reference: dup_len(doc, pos) = the longest common
     * prefix of the suffix at (doc, pos) with the suffix at any OTHER
@@ -63,7 +62,7 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     * `TextAnalysis.words`. */
   private def bruteExtents(df: DataFrame, minLen: Int): Ext = {
     val docs = df.select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1).split("\\s+").filter(_.nonEmpty))
+      .map(r => r.get(0) -> r.getString(1).split("\\s+").filter(_.nonEmpty))
     val sites = for ((d, di) <- docs.zipWithIndex.toSeq; p <- d._2.indices) yield (di, p)
     def lcp(a: Array[String], i: Int, b: Array[String], j: Int): Int = {
       var l = 0
@@ -78,7 +77,7 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     }.toSet
   }
 
-  private type Spans = Set[(Long, Long, Long, Long, Double)]
+  private type Spans = Set[(Any, Long, Long, Long, Double)]
 
   /** Per-doc merged coverage of the extents — (doc_id, n_tokens,
     * dup_tokens, n_spans, dup_fraction), the `duplicateSpans` shape:
@@ -103,7 +102,7 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
   private def kgramSpans(df: DataFrame, k: Int): Spans =
     Dedup.duplicateSpans(df, "doc_id", "text", k = k, minCount = 2)
       .select("doc_id", "n_tokens", "dup_tokens", "n_spans", "dup_fraction")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSet
 
   test("SA spans == k-gram spans at the same threshold (independent constructions)") {
@@ -190,6 +189,15 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     assert(got.exists { case (id, _, pos, len) => id == 2L && pos == 4 && len == 6L })
     assert(got.exists { case (id, _, pos, len) => id == 3L && pos == 0 && len == 6L })
     assert(!got.exists { case (id, _, _, _) => id == 1L || id == 4L })
+    // two docs only: a 60-token doc carrying a 6-token phrase mid-doc,
+    // and a 12-token doc carrying it at pos 3
+    val phrase = run(6)
+    val big = (run(20) ++ phrase ++ run(34)).mkString(" ")
+    val small = (run(3) ++ phrase ++ run(3)).mkString(" ")
+    val pair = Seq((1L, big), (2L, small)).toDF("doc_id", "text")
+    val truth = bruteExtents(pair, 4)
+    assert(truth.exists { case (id, _, pos, len) => id == 1L && pos == 20 && len == 6L })
+    assert(extents(pair, 4) === truth)
   }
 
   test("repeatExtents == brute force: 37-token phrase past the base width, proper prefix") {
@@ -216,15 +224,13 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
     assert(!got.exists { case (id, _, _, _) => id == 4L || id == 5L })
   }
 
-  test("adaptive loop switches mid-run on a slow-decay corpus and stays exact") {
-    // every doc shares a 40-token boilerplate prefix + a unique tail, so
-    // after the width-8 round 0 three quarters of the positions are still
-    // ambiguous (pending > CoPartSwitchFrac of the corpus) and the build
-    // must abandon the join formulation for the co-partitioned table
-    // mid-loop — the routing the slow-decay A-B pair motivated
-    // (BENCH_sa_copart_ab_r14.json). Equality with the brute force is
-    // the exactness pin for the switch itself (the mid-loop layout of
-    // frozen ∪ pending and the copart rounds that follow).
+  test("slow-decay corpus (75% pending after round 0) == brute force") {
+    // every doc shares a 40-token boilerplate prefix + a 4-token unique
+    // tail, so after the width-8 round 0 three quarters of the positions
+    // are still ambiguous (33 of 44 per doc), and the refinement rounds
+    // at spans 8, 16 and 32 start from 75%, 57% and 20% of the corpus
+    // pending: each round's partner lookup probes a corpus-sized rank
+    // view with a corpus-sized pending side
     val rng = new scala.util.Random(83)
     def w() = s"s${rng.nextInt(100000)}_${rng.nextInt(100000)}"
     val shared = Seq.fill(40)(w())
@@ -232,35 +238,40 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       (i, (shared ++ Seq.fill(4)(w())).mkString(" "))
     }.toDF("doc_id", "text")
     val got = extents(df, 4)
-    assert(SuffixSpans.lastModeChosen == "auto")
-    assert(SuffixSpans.lastSwitchedToCoPart,
-      "the build never switched — the corpus does not exercise the adaptive path")
     assert(got === bruteExtents(df, 4))
     // the 40-token shared prefix must surface in the extents
     assert(got.exists { case (_, _, pos, len) => pos == 0 && len == 40L })
   }
 
-  test("pathological-document cap routes the build to the join loop (r15 guard)") {
-    // pairedRows buffers up to one doc's remaining rows per task, so a
-    // build whose longest doc exceeds the cap must stay on the join
-    // formulation — and stay exact. Cap lowered to 30 tokens; the
-    // planted 60-token doc trips it. The instrumentation var pins the
-    // route (correct output alone would pass on the adaptive path too).
-    val rng = new scala.util.Random(59)
-    def w() = s"g${rng.nextInt(100000)}_${rng.nextInt(100000)}"
-    val phrase = Seq.fill(6)(w())
-    val big = (Seq.fill(20)(w()) ++ phrase ++ Seq.fill(34)(w())).mkString(" ")
-    val small = (Seq.fill(3)(w()) ++ phrase ++ Seq.fill(3)(w())).mkString(" ")
-    val df = Seq((1L, big), (2L, small)).toDF("doc_id", "text")
-    val truth = bruteExtents(df, 4)
-    assert(truth.nonEmpty)
-    assert(extents(df, 4) === truth)
-    assert(SuffixSpans.lastModeChosen == "auto") // 60 tokens is far under the 2M default
-    val guarded = collectExtents(SuffixSpans.computeExtents(df, "doc_id", "text", 4,
-      copartMaxDocTokens = 30))
-    assert(SuffixSpans.lastModeChosen == "join",
-      "a 60-token doc above a 30-token cap must route to the join loop")
-    assert(guarded === truth)
+  test("string doc ids key every step of the build (id order unlike hash order)") {
+    // the build keys its doubling loop, SA adjacency and LCP steps on
+    // the caller's id itself, so a string id must rank, pair and
+    // resolve exactly like a long one. The ids' lexicographic order
+    // differs from their xxhash64 order, so nothing can rely on the ids
+    // sorting like a hash surrogate would.
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val rng = new scala.util.Random(71)
+    def w() = s"t${rng.nextInt(100000)}_${rng.nextInt(100000)}"
+    def run(n: Int) = Seq.fill(n)(w())
+    val p7 = run(7); val p19 = run(19)
+    val df = Seq(
+      ("zeta", (run(5) ++ p19 ++ run(2)).mkString(" ")),
+      ("alpha", (p19 ++ run(3) ++ p7).mkString(" ")),   // both phrases, p7 doc-final
+      ("Mu-7", (run(4) ++ p7 ++ run(6) ++ p7).mkString(" ")), // self-repeat
+      ("beta", (p19.take(11) ++ run(8)).mkString(" ")), // proper prefix of p19
+      ("omega", run(30).mkString(" "))                  // repeat-free
+    ).toDF("doc_id", "text")
+    val ids = df.select(col("doc_id"), xxhash64(col("doc_id")).as("h")).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    assert(ids.sortBy(_._1).map(_._1).toSeq != ids.sortBy(_._2).map(_._1).toSeq,
+      "fixture premise: id order must differ from hash order")
+    for (minLen <- Seq(4, 8)) {
+      val got = extents(df, minLen)
+      assert(got === bruteExtents(df, minLen), s"minLen $minLen")
+      assert(got.exists { case (id, _, pos, len) => id == "alpha" && pos == 0 && len == 19L })
+      assert(got.exists { case (id, _, pos, len) => id == "beta" && pos == 0 && len == 11L })
+      assert(!got.exists(_._1 == "omega"))
+    }
   }
 
   test("NUL-containing tokens route to the array base key (no separator collisions)") {
@@ -331,5 +342,18 @@ class SuffixSpansSpec extends AnyFunSuite with SharedSpark {
       .map(_.getAs[String]("passage")).toSet
     assert(p23Texts.size == 1, s"both occurrences must yield the same passage: $p23Texts")
     assert(p23Texts.head.split(" ").length == 23)
+  }
+
+  test("longestPassages reads no cached tokenized corpus (slices the top-N texts)") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.ArrayType
+    val passages = SuffixSpans.longestPassages(planted(), "doc_id", "text", minLen = 5, topN = 10)
+    // the extents build caches its own tokenized corpus while it runs;
+    // the returned frame must not read that cache or one of its own
+    val tokenized = passages.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation if r.output.exists(_.dataType.isInstanceOf[ArrayType]) => r
+    }
+    try assert(tokenized.isEmpty, s"passages read a cached tokenized corpus: $tokenized")
+    finally Dedup.releaseCaches()
   }
 }

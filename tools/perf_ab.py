@@ -6,15 +6,18 @@
 For each pair i (seed = --seed0 + i, the same seed on both sides) it runs
 `python3 perfbench/run.py --workload W --seed S --seconds T --trace 0`
 once in each checkout, A first on even pairs and B first on odd pairs, so
-host drift falls on both sides alike. Each run is a fresh JVM built from
+host drift falls on both sides alike. An odd --pairs is rounded up to the
+next even number, so each side runs first equally often. Each run is a fresh JVM built from
 its own checkout's sources. Nothing under perfbench/ is changed; the runs
 write only their usual perfbench/.work/ outputs.
 
 Printed per workload and end-to-end metric (BENCHMARK.json gives the
 direction): each side's median and quartiles, the pairs B won (ties count
 for neither), and whether the gain rule holds: B wins at least 9/10 of the
-pairs and the medians differ by more than A's interquartile range. Also the
-failed share of each side. --out writes every run's metrics as JSON.
+pairs and the medians differ by more than A's interquartile range. Then
+each side's median split by run position (the runs it made first in a
+pair, and second), so an order effect shows. Also the failed share of
+each side. --out writes every run's metrics as JSON.
 
 It flags, and exits 1 on, any metric whose B median is worse than its A
 median by more than the metric's BENCHMARK.json bound (a relative bound:
@@ -54,8 +57,8 @@ def summarize(runs, metrics):
     rows = []
     for m in metrics:
         name, lower = m["name"], m.get("better", "lower") == "lower"
-        pairs = [(r["a"]["metrics"][name], r["b"]["metrics"][name]) for r in runs
-                 if "metrics" in r["a"] and "metrics" in r["b"]]
+        done = [r for r in runs if "metrics" in r["a"] and "metrics" in r["b"]]
+        pairs = [(r["a"]["metrics"][name], r["b"]["metrics"][name]) for r in done]
         if not pairs:
             continue
         a = [x for x, _ in pairs]
@@ -66,7 +69,12 @@ def summarize(runs, metrics):
         better = bm < am if lower else bm > am
         worse_by = ((bm - am) if lower else (am - bm)) / am if am else 0.0
         bound = m.get("bound")
-        rows.append({"metric": name, "unit": m.get("unit", ""), "pairs": len(pairs),
+        by_pos = {}
+        for side in ("a", "b"):
+            for pos in ("first", "second"):
+                xs = [r[side]["metrics"][name] for r in done if (r["first"] == side) == (pos == "first")]
+                by_pos[f"{side}_{pos}_median"] = float(np.median(xs)) if xs else float("nan")
+        rows.append({"metric": name, "unit": m.get("unit", ""), "pairs": len(pairs), **by_pos,
                      "a_q1": a1, "a_median": am, "a_q3": a3,
                      "b_q1": b1, "b_median": bm, "b_q3": b3,
                      "b_wins": wins, "delta_pct": 100.0 * (bm - am) / am if am else float("nan"),
@@ -86,6 +94,10 @@ def main():
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--out")
     args = ap.parse_args()
+    if args.pairs % 2:
+        args.pairs += 1
+        print(f"--pairs rounded up to {args.pairs} so A and B each run first in half the pairs",
+              flush=True)
     a, b = os.path.abspath(args.a), os.path.abspath(args.b)
     with open(os.path.join(b, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
@@ -118,6 +130,11 @@ def main():
                   + ("  OVER BOUND" if r["over_bound"] else ""))
             if r["over_bound"]:
                 flags.append(f"{w} {r['metric']}: B median {r['delta_pct']:+.1f}% vs A, bound {r['bound']:.0%}")
+        print(f"\nmedian by run position (first/second in its pair); {len(runs) // 2} runs each")
+        print(f"{'metric':14} {'A first/second':>20} {'B first/second':>20}")
+        for r in rows:
+            print(f"{r['metric']:14} {r['a_first_median']:9.4g}/{r['a_second_median']:<10.4g} "
+                  f"{r['b_first_median']:9.4g}/{r['b_second_median']:<10.4g}")
         if failed["b"] > failed["a"]:
             flags.append(f"{w}: B failed share {failed['b']:.3f} above A's {failed['a']:.3f}")
         crashed = {s: sum(1 for r in runs if "error" in r[s]) for s in ("a", "b")}
