@@ -359,14 +359,6 @@ object Dedup {
                                  k: Int): DataFrame =
     shingles(df, idCol, textCol, k).repartition(col(idCol)).distinct()
 
-  /** The tracked corpus shingle cache the ngram operators share
-    * (Spark's CacheManager matches it by plan) — exposed so a caller
-    * can materialize it in a dedicated job BEFORE a memory-hungry pair
-    * join would otherwise populate it from inside pressured tasks. */
-  def ngramShingleCache(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3): DataFrame =
-    cachedCorpus(docShingles(df, idCol, textCol, k))
-
   /** Exact n-gram Jaccard pairs >= threshold (id1 < id2), via
     * positional prefix filtering (the AllPairs/PPJoin principle,
     * Bayardo WWW'07 / Xiao WWW'08): under any global shingle order, a

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *     both orders ARE shorter-prefix-first finite-suffix order), then
   *     double h with one partner rank per round until the span covers
   *     every still-ambiguous suffix's remaining length (the round gate —
-  *     not the longest document's length). Ranks are HEAD ranks (class
-  *     head's global row index, [[GlobalOrder.withHeadRank]]) so a class
-  *     of size s owns rank range [r, r+s) and refines in place: each
+  *     not the longest document's length). Ranks are HEAD ranks
+  *     (class head's global row index,
+  *     [[GlobalOrder.withHeadRankFlagged]]) so a class of size s owns
+  *     rank range [r, r+s) and refines in place: each
   *     round only the still-ambiguous classes fetch their pos+2^h
   *     partner's rank and re-sort — rows carry (id, pos, rank, rank2),
   *     ~32 bytes, never token text (the singleton flag and the
@@ -181,8 +182,8 @@ object SuffixSpans {
     // almost every suffix within the first few rounds, so after
     // span ≈ 8 the ambiguous set collapses to the true repeat mass
     // and each remaining round is a scan + small broadcast join
-    // instead of a full corpus sort (the withDenseRank formulation
-    // re-sorted ALL n positions every round).
+    // instead of a full corpus sort (a dense-rank formulation
+    // re-sorts ALL n positions every round).
     //
     // WIDE BASE RANK: round 0 ranks each suffix by its first
     // [[BaseWidth]] tokens — the key is the raw token slice,

@@ -3,118 +3,23 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
-/** Handle to broadcast per-probe ADC lookup tables for product
-  * quantization (Jégou/Douze/Schmid, TPAMI 2011).
-  *
-  * PQ's asymmetric-distance trick: for a probe q and an m-subspace
-  * codebook of ksub centroids each, precompute
-  * lut[j·ksub + c] = ‖q_j − cb_j[c]‖² once per probe; the approximate
-  * distance to ANY encoded corpus vector is then Σ_j lut[j·ksub +
-  * code_j] — m array reads instead of D multiplies per pair. The LUTs
-  * must NOT ride the join as a column: a probe's m·ksub doubles
-  * serialized into every (probe, candidate) output row would undo the
-  * compression the codes bought. They travel ONCE per executor as a
-  * broadcast map keyed by probe id (probes are a bounded slice by
-  * design — the same convention as the bounded exact ANN baselines),
-  * and the scoring expression reads them by key. */
-case class BroadcastPqLuts(luts: Broadcast[Map[Long, Array[Double]]], m: Int, ksub: Int) {
-
-  /** Approximate squared L2 distance between the probe (by id) and an
-    * encoded vector — either `array<int>` of m codes, or the packed
-    * `bigint` form (code_j in byte j; m ≤ 8, ksub ≤ 256). */
-  def adc(probeId: Column, codes: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      PqAdcDistance(
-        org.apache.spark.sql.GraftColumnBridge.expression(probeId),
-        org.apache.spark.sql.GraftColumnBridge.expression(codes), this))
-
-  def destroy(): Unit = luts.destroy()
-}
-
-/** Codegen'd ADC distance: Σ_j lut[j·ksub + code_j] over the broadcast
-  * LUT of the row's probe id. The LUT map never enters the plan —
-  * codegen references this expression instance, which carries only the
-  * broadcast handle (the [[NearestCentroids]] pattern). */
-case class PqAdcDistance(left: Expression, right: Expression, luts: BroadcastPqLuts)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (LongType, ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (LongType, LongType) =>
-      if (luts.m <= 8 && luts.ksub <= 256) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"pq_adc packed codes need m<=8 and ksub<=256, got m=${luts.m} ksub=${luts.ksub}")
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"pq_adc requires (bigint probe id, array<int> | bigint codes), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-
-  def adcDistance(probeId: Long, codes: ArrayData): Double = {
-    val lut = luts.luts.value.getOrElse(probeId,
-      throw new IllegalArgumentException(s"pq_adc: no LUT for probe id $probeId"))
-    val (m, ksub) = (luts.m, luts.ksub)
-    if (codes.numElements() != m)
-      throw new IllegalArgumentException(
-        s"pq_adc: ${codes.numElements()} codes for an m=$m quantizer")
-    var d = 0.0
-    var j = 0
-    while (j < m) {
-      val c = codes.getInt(j)
-      if (c < 0 || c >= ksub)
-        throw new IllegalArgumentException(s"pq_adc: code $c outside [0, $ksub)")
-      d += lut(j * ksub + c)
-      j += 1
-    }
-    d
-  }
-
-  /** Packed form: code_j lives in byte j of one long (m ≤ 8 bytes,
-    * ksub ≤ 256 values per byte) — the 8 codes of the standard
-    * m=8/ksub=256 config fill the long exactly, so a candidate's
-    * whole PQ payload is ONE fixed-width column (32 vs 80 B/row raw on
-    * the posting exchange; BENCH_pq_packed_r16.json). */
-  def adcDistancePacked(probeId: Long, packed: Long): Double = {
-    val lut = luts.luts.value.getOrElse(probeId,
-      throw new IllegalArgumentException(s"pq_adc: no LUT for probe id $probeId"))
-    val (m, ksub) = (luts.m, luts.ksub)
-    var d = 0.0
-    var j = 0
-    while (j < m) {
-      val c = ((packed >>> (j * 8)) & 0xffL).toInt
-      if (c >= ksub)
-        throw new IllegalArgumentException(s"pq_adc: code $c outside [0, $ksub)")
-      d += lut(j * ksub + c)
-      j += 1
-    }
-    d
-  }
-
-  private lazy val packed = right.dataType == LongType
-
-  override protected def nullSafeEval(probeId: Any, codes: Any): Any =
-    if (packed) adcDistancePacked(probeId.asInstanceOf[Long], codes.asInstanceOf[Long])
-    else adcDistance(probeId.asInstanceOf[Long], codes.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqAdcKernel", this, classOf[PqAdcDistance].getName)
-    val call = if (packed) "adcDistancePacked" else "adcDistance"
-    nullSafeCodeGen(ctx, ev, (pid, codes) => s"${ev.value} = $self.$call($pid, $codes);")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Handle to broadcast DECOMPOSED residual-ADC lookup tables — the
-  * IVFADC search kernel (Jégou/Douze/Schmid, TPAMI 2011 §IV: codes
-  * quantize the residual x − centroid(cell), so the ADC table depends
-  * on BOTH the probe and the probed cell).
+  * IVFADC search kernel of product quantization (Jégou/Douze/Schmid,
+  * TPAMI 2011 §IV: codes quantize the residual x − centroid(cell), so
+  * the ADC table depends on BOTH the probe and the probed cell).
+  *
+  * The asymmetric-distance trick: the approximate distance to ANY
+  * encoded corpus vector is a sum of m table reads indexed by its
+  * codes — m reads instead of D multiplies per pair. The tables must
+  * NOT ride the join as a column: m·ksub doubles serialized into every
+  * (probe, candidate) row would undo the compression the codes bought.
+  * They travel ONCE per executor as a broadcast (probes are a bounded
+  * slice by design), and the scoring expression reads them.
   *
   * A naive per-(probe, cell) LUT is nProbes·nprobe·m·ksub doubles —
   * 400 MB at the production measurement shape (100 probes × 256
@@ -127,7 +32,7 @@ case class PqAdcDistance(left: Expression, right: Expression, luts: BroadcastPqL
   *
   *   adc(q, C, codes) = Σ_j A_q[j,code_j] + Σ_j D_C[j,code_j] + bias(q,C)
   *
-  * where A_q[j,c] = ‖q_j − cb_j[c]‖² is the existing PER-PROBE table
+  * where A_q[j,c] = ‖q_j − cb_j[c]‖² is the PER-PROBE table
   * (m·ksub doubles), D_C[j,c] = 2·C_j·cb_j[c] is PER-CELL and
   * probe-independent (m·ksub doubles per PROBED cell only), and
   * bias(q,C) = ‖C‖² − 2·q·C is ONE scalar per (probe, probed cell) —
@@ -179,9 +84,12 @@ case class BroadcastPqResidualLuts(
 
 /** Codegen'd residual ADC: Σ_j (A_q + D_cid)[j·ksub + code_j] over
   * the broadcast decomposed tables (see [[BroadcastPqResidualLuts]];
-  * the caller adds the per-(probe, cell) bias COLUMN). Same
-  * broadcast-kernel pattern as [[PqAdcDistance]]: the tables never
-  * enter the plan. */
+  * the caller adds the per-(probe, cell) bias COLUMN). The tables
+  * never enter the plan — codegen references this expression
+  * instance, which carries only the broadcast handles (the
+  * [[NearestCentroids]] pattern). Codes are packed `bigint` (code_j in
+  * byte j; m ≤ 8, ksub ≤ 256 — the standard config fills the long
+  * exactly) or `array<int>` beyond that geometry. */
 case class PqAdcResidualDistance(first: Expression, second: Expression, third: Expression,
                                  luts: BroadcastPqResidualLuts)
     extends TernaryExpression {

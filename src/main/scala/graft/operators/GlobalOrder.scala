@@ -60,95 +60,34 @@ object GlobalOrder {
     spark.createDataFrame(out, outSchema)
   }
 
-  /** Head rank over `orderCols` without a global window: each row's
-    * rank is the 0-based GLOBAL row index of the first row of its key
-    * class (equal keys share the rank of their class head). Unlike
-    * [[withDenseRank]], a class of size s occupies the half-open rank
-    * range [r, r+s) with no other class inside it — which is what lets
-    * the suffix-array doubling loop refine a class IN PLACE (new ranks
-    * r + within-class offsets) without re-ranking the rest of the
-    * corpus. Same machinery: range-partition + in-partition sort, one
+  /** Head rank over `prefixCols ++ restCols` without a global window:
+    * `rankCol` is the 0-based GLOBAL row index of the first row of the
+    * row's key class (equal keys share the rank of their class head).
+    * A class of size s occupies the half-open rank range [r, r+s) with
+    * no other class inside it — which is what lets the suffix-array
+    * doubling loop refine a class IN PLACE (new ranks r + within-class
+    * offsets) without re-ranking the rest of the corpus. On a key that
+    * is unique per row the head rank IS the row position. Machinery:
+    * range-partition + in-partition sort (Spark's parallel sort), one
     * stats pass (per-partition row count, first/last key, local head
     * of the final run — O(partitions) bytes through the driver), then
-    * a second pass assigning ranks from merged offsets. Returns the
-    * ranked frame and the number of distinct classes. */
-  def withHeadRank(df: DataFrame, orderCols: Seq[Column],
-                   rankCol: String = "__rank"): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keyNames = orderCols.indices.map(i => s"__dk$i")
-    val keyed = df.select(orderCols.zipWithIndex.map { case (c, i) => c.as(s"__dk$i") } ++
-      df.columns.map(org.apache.spark.sql.functions.col): _*)
-    val kIdx = orderCols.indices.toArray
-    val base = keyed.repartitionByRange(nPart, keyNames.map(org.apache.spark.sql.functions.col): _*)
-      .sortWithinPartitions(keyNames.map(org.apache.spark.sql.functions.col): _*)
-    val rdd0 = base.rdd
-    val stats = rdd0.mapPartitionsWithIndex { (pid, it) =>
-      var nRows = 0L; var nRuns = 0L
-      var first: Seq[Any] = null; var last: Seq[Any] = null
-      var lastHead = 0L
-      while (it.hasNext) {
-        val r = it.next(); val k = kIdx.map(r.get).toSeq
-        if (first == null) first = k
-        if (last == null || k != last) { nRuns += 1; lastHead = nRows }
-        last = k; nRows += 1
-      }
-      if (first == null) Iterator.empty
-      else Iterator.single((pid, nRows, nRuns, first, last, lastHead))
-    }.collect().sortBy(_._1).map(s => s._1 -> s).toMap
-    val nParts = rdd0.getNumPartitions
-    // per partition: (row offset, carried-in key, carried-in head rank)
-    val rowOff = new Array[Long](nParts)
-    val carryKeys = new Array[Seq[Any]](nParts)
-    val carryHeads = new Array[Long](nParts)
-    var off = 0L; var ck: Seq[Any] = null; var ch = 0L; var classes = 0L
-    for (p <- 0 until nParts) {
-      rowOff(p) = off; carryKeys(p) = ck; carryHeads(p) = ch
-      stats.get(p).foreach { case (_, nRows, nRuns, first, last, lastHead) =>
-        val merge = ck != null && first == ck
-        classes += nRuns - (if (merge) 1L else 0L)
-        ch = if (nRuns == 1L && merge) ch else off + lastHead
-        ck = last
-        off += nRows
-      }
-    }
-    val bc = spark.sparkContext.broadcast((rowOff, carryKeys, carryHeads))
-    val out = rdd0.mapPartitionsWithIndex { (pid, it) =>
-      val (offs, cks, chs) = bc.value
-      val pOff = offs(pid); val inKey = cks(pid); val inHead = chs(pid)
-      var i = 0L; var curKey: Seq[Any] = null; var curHead = 0L
-      it.map { r =>
-        val k = kIdx.map(r.get).toSeq
-        if (curKey == null) {
-          curHead = if (inKey != null && k == inKey) inHead else pOff
-          curKey = k
-        } else if (k != curKey) { curKey = k; curHead = pOff + i }
-        i += 1
-        Row.fromSeq(r.toSeq :+ curHead)
-      }
-    }
-    val outSchema = StructType(base.schema.fields.toIndexedSeq :+
-      StructField(rankCol, org.apache.spark.sql.types.LongType, nullable = false))
-    (spark.createDataFrame(out, outSchema).drop(keyNames: _*), classes)
-  }
-
-  /** [[withHeadRank]] plus two facts the suffix-array doubling loop
-    * otherwise pays two groupBy shuffles and three joins per round to
-    * learn: `ambCol` — whether this row's full-key class has size > 1
-    * (a row is a singleton iff its key agrees with neither its global
-    * predecessor nor successor, decided in-stream with one row of
-    * lookahead and the neighbor partitions' boundary keys) — and, when
-    * `prefixCols` is non-empty, `prefixRankCol` — the head rank of the
+    * a second pass assigning ranks from merged offsets.
+    *
+    * Two more facts ride the same passes, which the suffix-array
+    * doubling loop otherwise pays two groupBy shuffles and three joins
+    * per round to learn: `ambCol` — whether this row's full-key class
+    * has size > 1 (a row is a singleton iff its key agrees with
+    * neither its global predecessor nor successor, decided in-stream
+    * with one row of lookahead and the neighbor partitions' boundary
+    * keys) — and, when `prefixRankCol` is set, the head rank of the
     * PREFIX block the row's class lives in (the global row index of
     * the first row whose `prefixCols` agree), which is exactly
     * `min(rank)` over the block because blocks are contiguous under
-    * the (prefix ++ rest) sort. Both ride the existing two passes:
-    * the stats pass additionally records each partition's final
-    * prefix-run head and first key (so a partition-final row can ask
-    * whether its run continues into the next partition), and the
-    * ranking pass streams with one row of lookahead. Zero extra
-    * shuffles, zero extra jobs. The full sort key is
-    * `prefixCols ++ restCols`. */
+    * the (prefix ++ rest) sort. The stats pass additionally records
+    * each partition's final prefix-run head and first key (so a
+    * partition-final row can ask whether its run continues into the
+    * next partition), and the ranking pass streams with one row of
+    * lookahead. Zero extra shuffles, zero extra jobs. */
   def withHeadRankFlagged(df: DataFrame, prefixCols: Seq[Column], restCols: Seq[Column],
                           rankCol: String, ambCol: String,
                           prefixRankCol: Option[String] = None): DataFrame = {
@@ -248,63 +187,5 @@ object GlobalOrder {
         prefixRankCol.map(c => StructField(c, lt, nullable = false)).toSeq :+
         StructField(ambCol, org.apache.spark.sql.types.BooleanType, nullable = false)))
     spark.createDataFrame(out, outSchema).drop(keyNames: _*)
-  }
-
-  /** Dense rank (0-based, contiguous) over `orderCols` without a
-    * global window: range-partition + in-partition sort (Spark's
-    * parallel sort), one pass collecting per-partition (distinct-run
-    * count, first/last key) — bytes through the driver are
-    * O(partitions) — then a second pass assigning ranks from the
-    * driver-merged offsets (classes straddling a partition boundary
-    * merge). Returns the ranked frame (input columns + `rankCol`,
-    * range-sorted by the keys) and the number of distinct classes.
-    * Order-column values must be non-null. The suffix-array doubling
-    * in [[graft.dedup.SuffixSpans]] calls this once per round, so the
-    * per-round cost is exactly one parallel sort of slim rows. */
-  def withDenseRank(df: DataFrame, orderCols: Seq[Column],
-                    rankCol: String = "__rank"): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keyNames = orderCols.indices.map(i => s"__dk$i")
-    val keyed = df.select(orderCols.zipWithIndex.map { case (c, i) => c.as(s"__dk$i") } ++
-      df.columns.map(org.apache.spark.sql.functions.col): _*)
-    val kIdx = orderCols.indices.toArray
-    val base = keyed.repartitionByRange(nPart, keyNames.map(org.apache.spark.sql.functions.col): _*)
-      .sortWithinPartitions(keyNames.map(org.apache.spark.sql.functions.col): _*)
-    val rdd0 = base.rdd
-    val stats = rdd0.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var first: Seq[Any] = null; var last: Seq[Any] = null
-      while (it.hasNext) {
-        val r = it.next(); val k = kIdx.map(r.get).toSeq
-        if (first == null) first = k
-        if (last == null || k != last) n += 1
-        last = k
-      }
-      if (first == null) Iterator.empty else Iterator.single((pid, n, first, last))
-    }.collect().sortBy(_._1)
-    val offsets = new Array[Long](rdd0.getNumPartitions)
-    var offset = 0L
-    var prevLast: Seq[Any] = null
-    stats.foreach { case (pid, n, first, last) =>
-      // a class straddling the boundary was counted by both partitions
-      val merge = prevLast != null && first == prevLast
-      offsets(pid) = offset - (if (merge) 1L else 0L)
-      offset += n - (if (merge) 1L else 0L)
-      prevLast = last
-    }
-    val classes = offset
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd0.mapPartitionsWithIndex { (pid, it) =>
-      var rank = bc.value(pid) - 1L; var last: Seq[Any] = null
-      it.map { r =>
-        val k = kIdx.map(r.get).toSeq
-        if (last == null || k != last) { rank += 1; last = k }
-        Row.fromSeq(r.toSeq :+ rank)
-      }
-    }
-    val outSchema = StructType(base.schema.fields.toIndexedSeq :+
-      StructField(rankCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = spark.createDataFrame(out, outSchema).drop(keyNames: _*)
-    (ranked, classes)
   }
 }

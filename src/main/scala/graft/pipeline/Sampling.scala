@@ -120,12 +120,13 @@ object Sampling {
     * curation pipeline — `orderBy(rand())` changes on every retry and
     * every engine; a hash order is a pure function of the ids. `salt`
     * is the epoch/seed knob: each salt is an independent permutation.
-    * Runs as [[graft.operators.GlobalOrder.withDenseRank]] — a
+    * Runs as [[graft.operators.GlobalOrder.withHeadRankFlagged]] — a
     * parallel range-sort with O(partitions) driver bytes, NO global
-    * window — and (key, id) is unique per row, so the dense rank IS
+    * window — and (key, id) is unique per row, so the head rank IS
     * the row position. */
   def shuffleOrder(df: DataFrame, idCol: String, salt: String = "shuffle"): DataFrame = {
     val key = Curation.md5Long(concat(lit(salt + ":"), col(idCol).cast("string")))
-    graft.operators.GlobalOrder.withDenseRank(df, Seq(key, col(idCol)), "pos")._1
+    graft.operators.GlobalOrder.withHeadRankFlagged(df, Nil, Seq(key, col(idCol)), "pos", "__amb")
+      .drop("__amb")
   }
 }

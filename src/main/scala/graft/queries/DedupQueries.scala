@@ -267,18 +267,16 @@ object DedupQueries {
     // fewer compressed wire bytes than q_ann_ivf — BENCH_pq_packed_
     // r16.json), distances are m reads from broadcast DECOMPOSED
     // per-probe/per-cell tables. Codes quantize the RESIDUAL
-    // x − centroid(cell) (Jégou et al. TPAMI '11): raw-vector codes
-    // measured recall-saturated at production parameters (0.15–0.20,
-    // BENCH_pq_recall_r16.json) because their entropy re-described
-    // the cell id the posting list already encodes. Both trainers
-    // read the same bounded sample so the wall is search-dominated.
+    // x − centroid(cell) (Jégou et al. TPAMI '11), the one PQ
+    // encoding. Both trainers read the same bounded sample so the
+    // wall is search-dominated.
     "q_ann_ivfpq" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       val coarse = Pq.trainCoarse(e, "vec_id", "embedding", k = 8, iters = 3,
         maxTrainRows = 20000L)
-      val cbs = Pq.trainCodebooksResidual(e, "vec_id", "embedding", coarse,
+      val cbs = Pq.trainCodebooks(e, "vec_id", "embedding", coarse,
         m = 8, ksub = 16, iters = 3, maxTrainRows = 20000L)
-      Pq.topKResidual(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
+      Pq.topK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
         coarse, cbs, nprobe = 3)
         .orderBy("probe_id", "rank")
     }),
@@ -286,19 +284,16 @@ object DedupQueries {
     // #55c IVF-PQ with exact re-ranking — the production PQ search
     // mode: residual ADC prunes to kCand candidates, the survivors'
     // full vectors are fetched (candidate side broadcast-PINNED —
-    // the corpus is never shuffled) and exactly re-scored. With
-    // residual codes the candidate pool is good enough that the
-    // recall target needs a far smaller kCand than the raw-code
-    // 100·k the r16 artifact measured (rows-only: recall +
-    // pool-subset invariants in spec; recall at production
-    // parameters in BENCH_pq_recall_r17.json).
+    // the corpus is never shuffled) and exactly re-scored
+    // (rows-only: recall + pool-subset invariants in spec; recall at
+    // production parameters in BENCH_pq_recall_r17.json).
     "q_ann_ivfpq_refined" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       val coarse = Pq.trainCoarse(e, "vec_id", "embedding", k = 8, iters = 3,
         maxTrainRows = 20000L)
-      val cbs = Pq.trainCodebooksResidual(e, "vec_id", "embedding", coarse,
+      val cbs = Pq.trainCodebooks(e, "vec_id", "embedding", coarse,
         m = 8, ksub = 16, iters = 3, maxTrainRows = 20000L)
-      Pq.topKRefinedResidual(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
+      Pq.topKRefined(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
         coarse, cbs, nprobe = 3, kCand = 50)
         .orderBy("probe_id", "rank")
     }),

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.functions.{BroadcastCentroids, BroadcastPqLuts, BroadcastPqResidualLuts}
+import graft.functions.{BroadcastCentroids, BroadcastPqResidualLuts}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * (BENCH_pq_bytes_r16.json, BENCH_pq_packed_r16.json): 312 B/row
   * (IVF, full vector) → 80 B/row (array codes) → 32 B/row (packed) —
   * and the per-pair distance is m LUT reads instead of D multiplies
-  * (the asymmetric-distance computation, ADC). The LUTs are
-  * m·ksub doubles per probe, computed ONCE per probe from its raw
-  * vector and broadcast as a map ([[graft.functions.BroadcastPqLuts]])
-  * so they never ride join rows.
+  * (the asymmetric-distance computation, ADC). The LUTs are computed
+  * ONCE per probe and per probed cell on the driver and broadcast
+  * ([[graft.functions.BroadcastPqResidualLuts]]) so they never ride
+  * join rows.
   *
   * Cosine ordering: all vectors are L2-normalized first, so ascending
   * squared-L2 ADC order equals descending cosine order (‖a−b‖² =
@@ -29,21 +29,9 @@ import org.apache.spark.sql.functions._
   * per-subspace Lloyd trainer inherits [[Ivf.train]]'s hash-ordered
   * init and fixed iteration count.
   *
-  * TWO encodings live here. [[trainCodebooks]]/[[topK]] quantize the
-  * raw normalized vector; [[trainCodebooksResidual]]/[[topKResidual]]
-  * quantize the residual x − centroid(cell) (IVFADC, TPAMI '11 §IV)
-  * and are the production default — measured at production parameters
-  * (BENCH_pq_recall_r17.json): residual lifts raw-ADC recall@10
-  * 0.199→0.225 (200k vectors) / 0.147→0.198 (2M), and residual
-  * candidates let [[topKRefinedResidual]] MEET the plain-IVF recall
-  * ceiling at kCand=300·k–1000·k (raw-code refinement stalls below
-  * it). The lift is bounded by the DATA here, not the algorithm: the
-  * same artifact measures kc=1024 coarse cells capturing only 19.8%
-  * of variance on these near-isotropic synthetic embeddings, so the
-  * residual still carries 80% of the energy the 8 bytes must
-  * describe; on manifold-structured real embeddings the gap to the
-  * published IVFADC gains closes. Which ANN row to use when: SURVEY
-  * §2 row 55d (the measured chooser).
+  * The codes quantize the residual x − centroid(cell) (IVFADC,
+  * TPAMI '11 §IV); which ANN row to use when is SURVEY §2 row 55d
+  * (the measured chooser).
   *
   * Reference scope: the reference library has no ANN at all (its
   * nearest lookup is df-index-of over a sorted series); this operator
@@ -83,47 +71,27 @@ object Pq {
   }
 
   /** Train m per-subspace codebooks of ksub centroids each over the
-    * NORMALIZED vectors. dim must divide evenly into m subspaces.
-    * Returns codebooks(j)(c) = centroid c of subspace j (length
-    * dim/m). `maxTrainRows > 0` trains on a deterministic hash sample
-    * (one sample shared by all m subspaces — the 100 TB path; see
-    * [[Ivf.trainSample]]) while encode/search read the full corpus.
-    * The trainer is [[Ivf.train]] run m times on sliced subvectors,
-    * so it inherits the broadcast-argmin assignment (one plan node
-    * per iteration at any ksub). */
+    * RESIDUALS x − centroid(cell) of the NORMALIZED vectors, cells
+    * assigned by `coarse` (from [[trainCoarse]]) — the IVFADC encoding
+    * (Jégou et al. TPAMI '11 §IV) [[topK]] searches with. dim must
+    * divide evenly into m subspaces. Returns codebooks(j)(c) =
+    * centroid c of subspace j (length dim/m). `maxTrainRows > 0`
+    * trains on a deterministic hash sample (one sample shared by all m
+    * subspaces — the 100 TB path; see [[Ivf.trainSample]]) while
+    * encode/search read the full corpus.
+    *
+    * Why residuals: codebooks over the raw vector spend most of their
+    * 8 bytes re-describing WHICH coarse cell the vector sits in —
+    * information the posting list already encodes. Residuals are the
+    * small within-cell displacement, so the same m·ksub geometry
+    * spends its entropy on the signal that separates neighbors inside
+    * a probed cell. Measured, raw-vector codebooks recall at or below
+    * residual ones at every point (BENCH_pq_recall_r17.json,
+    * BENCH_ann_structured_r18.json). */
   def trainCodebooks(df: DataFrame, idCol: String, vecCol: String,
+                     coarse: Array[Array[Double]],
                      m: Int, ksub: Int, iters: Int = 4,
                      maxTrainRows: Long = 0L): Array[Array[Array[Double]]] = {
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
-    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
-    require(maxTrainRows <= 0 || maxTrainRows >= 10L * ksub,
-      s"maxTrainRows=$maxTrainRows must comfortably exceed ksub=$ksub (>= ${10L * ksub}) " +
-        "so binomial sample jitter cannot leave a codebook short of centroids")
-    val sub = dim / m
-    val total = if (maxTrainRows > 0) df.count() else -1L // raw count — see trainCoarse
-    val base = Ivf.trainSample(normalized(df, vecCol), idCol, maxTrainRows, total)
-      .select(col(idCol), col("__vn")).cache()
-    try trainSubspacesJoint(base, idCol, "__vn", m, sub, ksub, iters)
-    finally base.unpersist()
-  }
-
-  /** Train m per-subspace codebooks over RESIDUALS x − centroid(cell)
-    * — the IVFADC encoding (Jégou et al. TPAMI '11 §IV), the variant
-    * [[topKResidual]] searches with.
-    *
-    * Why residuals: [[trainCodebooks]]' raw-vector codebooks spend
-    * most of their 8 bytes re-describing WHICH coarse cell the vector
-    * sits in — information the posting list already encodes — so the
-    * quantization error rides on top of the full vector magnitude and
-    * raw-ADC recall@10 saturates at 0.15–0.20 at production
-    * parameters (measured, BENCH_pq_recall_r16.json). Residuals are
-    * the small within-cell displacement; the same m·ksub geometry
-    * spends its entropy on exactly the signal that separates
-    * neighbors inside a probed cell. */
-  def trainCodebooksResidual(df: DataFrame, idCol: String, vecCol: String,
-                             coarse: Array[Array[Double]],
-                             m: Int, ksub: Int, iters: Int = 4,
-                             maxTrainRows: Long = 0L): Array[Array[Array[Double]]] = {
     val dim = coarse.head.length
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
     require(maxTrainRows <= 0 || maxTrainRows >= 10L * ksub,
@@ -189,7 +157,7 @@ object Pq {
     cents
   }
 
-  /** Encode NORMALIZED vectors to m codebook ids (one argmin per
+  /** Encode the `srcCol` vectors to m codebook ids (one argmin per
     * subspace — m broadcast-kernel plan nodes, no joins). When the
     * codes fit (m ≤ 8, ksub ≤ 256 — the standard PQ config and
     * everything below it), they pack into ONE `bigint` column
@@ -197,10 +165,9 @@ object Pq {
     * `array<int>` whose UnsafeArrayData header + 4-byte slots made up
     * most of the candidate row (measured 80 → 32 B/row raw, 32.8 → 15.6
     * compressed, on the posting exchange — BENCH_pq_packed_r16.json). Falls back to
-    * array<int> for larger geometries. Input df must already carry
-    * `__vn`. */
+    * array<int> for larger geometries. */
   private def encodeCol(df: DataFrame, codebooks: Array[Array[Array[Double]]],
-                        srcCol: String = "__vn"): DataFrame = {
+                        srcCol: String): DataFrame = {
     val m = codebooks.length
     val sub = codebooks.head.head.length
     val spark = df.sparkSession
@@ -213,93 +180,24 @@ object Pq {
     df.withColumn("__codes", codes)
   }
 
-  /** IVF-PQ top-k: coarse posting lists select candidates (nprobe
-    * lists per probe), ADC over broadcast per-probe LUTs scores them.
-    * `coarse` must be trained in the NORMALIZED space (use
-    * [[trainCoarse]]): cells here are assigned from `__vn`, so a
-    * raw-space matrix ([[Ivf.train]] output) only matches on
-    * unit-norm input. `probes` is a bounded slice by design (its
-    * LUTs broadcast; the same convention as the bounded exact
-    * baselines). Output:
-    * (probe_id, rank, neighbor_id, adc) — adc ascending = cosine
-    * descending on the normalized vectors. */
+  /** IVFADC top-k: coarse posting lists select candidates (nprobe
+    * lists per probe), residual ADC scores them. `coarse` must be
+    * trained in the NORMALIZED space (use [[trainCoarse]]) and
+    * `codebooks` by [[trainCodebooks]] against the same matrix.
+    * Candidates ride as one packed `bigint` (or `array<int>`) through
+    * the posting-list join; the ADC table depends on the probed cell
+    * as well as the probe, so it is broadcast in decomposed form
+    * (per-probe + per-probed-cell + scalar bias — see
+    * [[graft.functions.BroadcastPqResidualLuts]] for the algebra and
+    * why the naive per-(probe, cell) table is NOT broadcast-bounded).
+    * The probe side's nprobe cell selection and all LUTs are computed
+    * on the driver from the bounded probe slice (the same convention
+    * as the bounded exact baselines). Output: (probe_id, rank,
+    * neighbor_id, adc) — adc ascending = cosine descending on the
+    * normalized vectors. */
   def topK(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
            k: Int, coarse: Array[Array[Double]],
            codebooks: Array[Array[Array[Double]]], nprobe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val sub = codebooks.head.head.length
-    val bcCoarse = BroadcastCentroids(spark, coarse)
-
-    val c = encodeCol(normalized(corpus, vecCol), codebooks)
-      .withColumn("__cid", bcCoarse.nearestOne(col("__vn")))
-      .select(col("__cid"), col(idCol).as("neighbor_id"), col("__codes"))
-
-    // per-probe ADC LUTs, computed on the driver from the bounded
-    // probe slice: lut[j*ksub + c] = ||q_j - cb_j[c]||^2
-    val probeRows = normalized(probes, vecCol)
-      .select(col(idCol).cast("long").as("__pid"), col("__vn")).collect()
-    val lutMap = probeRows.map { r =>
-      val q = r.getSeq[Double](1).toArray
-      require(q.length == m * sub,
-        s"probe vector has ${q.length} dims, codebooks expect ${m * sub}")
-      val lut = new Array[Double](m * ksub)
-      var j = 0
-      while (j < m) {
-        var cc = 0
-        while (cc < ksub) {
-          val cent = codebooks(j)(cc)
-          var s = 0.0
-          var i = 0
-          while (i < sub) {
-            val d = q(j * sub + i) - cent(i)
-            s += d * d
-            i += 1
-          }
-          lut(j * ksub + cc) = s
-          cc += 1
-        }
-        j += 1
-      }
-      r.getLong(0) -> lut
-    }.toMap
-    val bcLuts = BroadcastPqLuts(spark.sparkContext.broadcast(lutMap), m, ksub)
-
-    val p = normalized(probes, vecCol)
-      .select(col(idCol).cast("long").as("probe_id"),
-        explode(bcCoarse.nearest(col("__vn"), nprobe)).as("__cid"))
-
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("neighbor_id"))
-    // same posting-join pin as topKResidual (measured there; this
-    // frame's unknown filter stats happen to plan the merge join
-    // already — the hint keeps that measured shape independent of the
-    // caller's probe-frame lineage)
-    p.hint("merge").join(c, Seq("__cid"))
-      .filter(col("probe_id") =!= col("neighbor_id"))
-      .withColumn("adc", bcLuts.adc(col("probe_id"), col("__codes")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("neighbor_id"), round(col("adc"), 6).as("adc"))
-  }
-
-  /** IVFADC top-k — [[topK]] with RESIDUAL codes (train with
-    * [[trainCodebooksResidual]] against the same `coarse` matrix; the
-    * two encodings are not interchangeable). Candidates still ride as
-    * one packed `bigint` (or `array<int>`) through the posting-list
-    * join; what changes is what the code MEANS (the within-cell
-    * displacement x − centroid(cell)) and the ADC table shape: the
-    * LUT depends on the probed cell as well as the probe, broadcast
-    * in decomposed form (per-probe + per-probed-cell + scalar bias —
-    * see [[graft.functions.BroadcastPqResidualLuts]] for the algebra
-    * and why the naive per-(probe, cell) table is NOT broadcast-
-    * bounded). The probe side's nprobe cell selection and all LUTs
-    * are computed on the driver from the bounded probe slice (the
-    * same convention as [[topK]], which already collects the probes).
-    * Output schema = [[topK]]: (probe_id, rank, neighbor_id, adc). */
-  def topKResidual(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
-                   k: Int, coarse: Array[Array[Double]],
-                   codebooks: Array[Array[Array[Double]]], nprobe: Int = 2): DataFrame = {
     val spark = corpus.sparkSession
     val m = codebooks.length
     val ksub = codebooks.head.length
@@ -420,8 +318,7 @@ object Pq {
     // parallelism. Measured (BENCH_pq_posting_join_r18.json, 200k
     // vectors, nprobe=256, same session, interleaved fresh plans):
     // broadcast-fused 38-45 s vs shuffled 10.8-10.9 s (3.5x), parity
-    // at nprobe=32; the raw-code path never had the pathology because
-    // its probe frame's unknown stats already plan the merge join.
+    // at nprobe=32.
     // The exchange this buys back is the ENCODED corpus (cell id +
     // packed 8-byte codes — the wire-frugal posting exchange the PQ
     // design is built around), not the raw vectors.
@@ -436,26 +333,24 @@ object Pq {
       .select(col("probe_id"), col("rank"), col("neighbor_id"), round(col("adc"), 6).as("adc"))
   }
 
-  /** IVF-PQ with exact re-ranking (the production search mode): ADC
-    * prunes the corpus to `kCand` candidates per probe, then the
-    * survivors' FULL vectors are fetched and exactly re-scored, and
-    * the true-cosine top-k is returned.
+  /** IVFADC with exact re-ranking (the production search mode):
+    * [[topK]] prunes the corpus to `kCand` candidates per probe, then
+    * the survivors' FULL vectors are fetched and exactly re-scored,
+    * and the true-cosine top-k is returned.
     *
-    * Why this exists: measured at production parameters (kc=1024,
-    * m=8, ksub=256 on the 64-dim embeddings;
-    * BENCH_pq_recall_r16.json), raw ADC recall@10 SATURATES — 0.199
-    * at sf10, 0.147 at sf100, flat from nprobe=128 on — because the
-    * 8-byte code's quantization error exceeds the margins between
-    * true top-10 neighbors, so more candidates don't help. Re-ranking
-    * recovers MOST of the gap to plain IVF at the same nprobe
-    * (kCand=100·k: 0.81/0.76 vs the IVF ceiling 0.87/0.92 at
-    * sf10/sf100; kCand is the recall/cost dial) while keeping PQ's
-    * scale shape: the heavy pass over the posting lists still reads
-    * only 8-int codes; full vectors are touched for just
-    * |probes|·kCand rows, fetched by an equi-join in which the
-    * candidate set (the small side) broadcasts — the corpus is
-    * neither shuffled nor re-scanned wholesale. Output schema matches
-    * [[Ivf.topK]]: (probe_id, rank, neighbor_id, cos). */
+    * Why this exists: at production parameters (kc=1024, m=8,
+    * ksub=256 on the 64-dim embeddings; BENCH_pq_recall_r17.json) ADC
+    * recall@10 saturates near 0.2, because the 8-byte code's
+    * quantization error exceeds the margins between true top-10
+    * neighbors. Re-ranking reaches the plain-IVF ceiling at the same
+    * nprobe (kCand=300·k–1000·k: 0.868–0.871 vs 0.871 at 200k vectors;
+    * kCand is the recall/cost dial) while keeping PQ's scale shape:
+    * the heavy pass over the posting lists still reads only the
+    * codes; full vectors are touched for just |probes|·kCand rows,
+    * fetched by an equi-join in which the candidate set (the small
+    * side) broadcasts — the corpus is neither shuffled nor re-scanned
+    * wholesale. Output schema matches [[Ivf.topK]]: (probe_id, rank,
+    * neighbor_id, cos). */
   def topKRefined(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
                   k: Int, coarse: Array[Array[Double]],
                   codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
@@ -466,24 +361,10 @@ object Pq {
       topK(corpus, probes, idCol, vecCol, kc, coarse, codebooks, nprobe))
   }
 
-  /** [[topKRefined]] over the RESIDUAL index (train with
-    * [[trainCodebooksResidual]]): residual ADC prunes to kCand
-    * candidates per probe, exact cosine re-ranks the survivors.
-    * Because residual codes spend their entropy on the within-cell
-    * displacement, the candidate pool is materially better than raw
-    * ADC's at the same kCand, so the recall target is reached at a
-    * far smaller (cheaper) kCand. Output schema = [[Ivf.topK]]. */
-  def topKRefinedResidual(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
-                          k: Int, coarse: Array[Array[Double]],
-                          codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
-                          kCand: Int = 0): DataFrame = {
-    val kc = if (kCand > 0) kCand else 10 * k
-    require(kc >= k, s"kCand=$kc must be >= k=$k")
-    refine(corpus, probes, idCol, vecCol, k, kc,
-      topKResidual(corpus, probes, idCol, vecCol, kc, coarse, codebooks, nprobe))
-  }
+  /** Candidate rows [[refine]]'s broadcast-pinned fetch admits. */
+  private val RefineBroadcastMaxRows = 32L * 1000 * 1000
 
-  /** Exact re-ranking shared by the refined modes: fetch the
+  /** Exact re-ranking for [[topKRefined]]: fetch the
     * candidates' full vectors with an equi-join and return the true
     * cosine top-k. The candidate set is bounded at |probes|·kCand rows
     * BY CONSTRUCTION, but it reaches this join as a window-aggregate
@@ -504,27 +385,23 @@ object Pq {
     * corpus can push \|probes\|·kCand past what a pinned broadcast
     * survives. The guard's arithmetic: a candidate row broadcasts as
     * ~48 B in the hashed relation (two longs + UnsafeRow + map
-    * overhead), so the default cap of 32M rows is ~1.5 GB — far under
-    * the 8 GB broadcast hard limit and a small fraction of the 48 GB
+    * overhead), so the cap of 32M rows is ~1.5 GB — far under the
+    * 8 GB broadcast hard limit and a small fraction of the 48 GB
     * driver this project sizes for, but big enough for the measured
     * sf100 knee shape (100 probes × kCand = 10,000 = 1M rows) forty
-    * times over. Raise `spark.graft.refineBroadcastMaxRows` only with
-    * driver/executor memory to back it. */
+    * times over. A larger request splits its probe slice into
+    * batches. */
   private def refine(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
                      k: Int, kCand: Int, cand: DataFrame): DataFrame = {
-    val spark = corpus.sparkSession
-    val maxRows = spark.conf.getOption("spark.graft.refineBroadcastMaxRows")
-      .map(_.toLong).getOrElse(32L * 1000 * 1000)
-    // the probe slice is bounded by design (its LUTs are driver-built
-    // in both refined modes), so this count is a tiny job at plan
-    // build — the same convention as the driver-side probe collect
+    // the probe slice is bounded by design (its LUTs are driver-built),
+    // so this count is a tiny job at plan build — the same convention
+    // as the driver-side probe collect
     val nProbes = probes.count()
     val candRows = nProbes * kCand
-    require(candRows <= maxRows,
+    require(candRows <= RefineBroadcastMaxRows,
       s"refine: |probes|=$nProbes x kCand=$kCand = $candRows candidate rows exceeds " +
-        s"spark.graft.refineBroadcastMaxRows=$maxRows for the broadcast-pinned fetch - " +
-        "lower kCand, split the probe slice into batches, or raise the bound " +
-        "(with driver memory to back it)")
+        s"the $RefineBroadcastMaxRows-row bound of the broadcast-pinned fetch - " +
+        "lower kCand or split the probe slice into batches")
     val cn = Cosine.withNorm(corpus, vecCol)
       .select(col(idCol).as("neighbor_id"), col("__vd").as("v2"), col("__nrm").as("n2"))
     val pn = Cosine.withNorm(probes, vecCol)

@@ -31,21 +31,6 @@ class GlobalOrderSpec extends AnyFunSuite with SharedSpark {
     assert(got(18).isEmpty) // 17 is null → prev passes the null through
   }
 
-  test("withDenseRank equals single-partition dense_rank, classes counted exactly") {
-    val rng = new scala.util.Random(7)
-    // heavy ties across partition boundaries: values from a small set
-    val df = Seq.fill(800)((rng.nextInt(13), rng.nextInt(5))).zipWithIndex
-      .map { case ((a, b), i) => (a, b, i) }.toDF("a", "b", "id")
-    val (ranked, classes) = GlobalOrder.withDenseRank(df, Seq(col("a"), col("b")), "__r")
-    val got = ranked.collect().map(r => r.getInt(2) -> r.getLong(3)).toMap
-    val w = Window.orderBy("a", "b") // single task — fixture only
-    val want = df.withColumn("__r", dense_rank().over(w).cast("long") - 1)
-      .collect().map(r => r.getInt(2) -> r.getLong(3)).toMap
-    assert(got == want)
-    assert(classes == want.values.toSet.size)
-    assert(want.values.max == classes - 1) // contiguous 0-based
-  }
-
   test("withHeadRankFlagged: rank, prefix head and ambiguity flag equal " +
       "window-computed truth under partition-straddling runs") {
     val rng = new scala.util.Random(11)
@@ -75,13 +60,15 @@ class GlobalOrderSpec extends AnyFunSuite with SharedSpark {
     assert(bySh.forall { case (r, rows) => rows.forall(_._1 == r) })
   }
 
-  test("withHeadRankFlagged with empty prefix matches withHeadRank") {
+  test("withHeadRankFlagged, empty prefix: rank = min(row_number) over class - 1") {
     val rng = new scala.util.Random(13)
     val df = Seq.fill(400)(rng.nextInt(9)).zipWithIndex.toDF("a", "id")
     val got = GlobalOrder.withHeadRankFlagged(df, Nil, Seq(col("a")), "__r", "__amb")
       .collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val (ranked, _) = GlobalOrder.withHeadRank(df, Seq(col("a")), "__r")
-    val want = ranked.collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
+    val w = Window.orderBy("a") // single task — fixture only
+    val want = df
+      .withColumn("__r", min(row_number().over(w)).over(Window.partitionBy("a")).cast("long") - 1)
+      .collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
     assert(got == want)
   }
 

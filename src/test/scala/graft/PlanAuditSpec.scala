@@ -66,11 +66,12 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
 
-  test("ngram jaccard at a low threshold routes to the exact prefix join, not banding") {
+  test("ngram jaccard at a low threshold routes to an exact shingle join, not banding") {
     val p = plan("q_dedup_ngram")
-    // below the banding recall boundary the router must pick the
-    // prefix-filtered exact join: candidates come from a shingle
-    // equi-join, no band columns exist, and no cartesian shape appears
+    // below the banding recall boundary the router must pick an exact
+    // path (direct or prefix-filtered, by measured skew): candidates
+    // come from a shingle equi-join, no band columns exist, and no
+    // cartesian shape appears
     assert(!bandedJoinPlanned(p, "bh"), "low-threshold query must not use banded candidates")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
@@ -176,7 +177,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("refined ANN re-rank: every join broadcasts a bounded side — the corpus is never shuffled") {
-    // Pq.topKRefined*'s refine step fetches kCand survivors' full
+    // Pq.topKRefined's refine step fetches kCand survivors' full
     // vectors via equi-joins whose small sides (candidate set, probe
     // slice) are bounded BY CONSTRUCTION but reach the optimizer as a
     // window-aggregate output with poor size estimates. The broadcast

@@ -54,7 +54,7 @@ class SurfaceSpec extends AnyFunSuite {
     val inReadme = rows.map(_._1)
     assert(inReadme.distinct.size === inReadme.size, s"duplicate README rows: $inReadme")
     assert(inCode === inReadme.toSet)
-    assert(inCode.size === 3)
+    assert(inCode === Set("reliableCheckpoints", "corpusCacheLevel"))
     val specClasses = sources(testRoot).flatMap { case (_, src) =>
       """\bclass\s+(\w+Spec)\b""".r.findAllMatchIn(src).map(_.group(1))
     }.toSet

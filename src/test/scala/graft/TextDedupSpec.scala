@@ -388,79 +388,13 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     assert(cents.map(_.toSeq).toSeq == cents2.map(_.toSeq).toSeq)
   }
 
-  test("IVF-PQ recall vs exact cosine; ADC is exact on codebook-coincident vectors") {
-    // 40 vectors in 4 well-separated direction clusters of 10: PQ
-    // codebooks trained per subspace must place a centroid near each
-    // cluster's subvector, so within-cluster neighbors must dominate
-    // each probe's ADC top-k
-    val vecs = (0 until 40).map { i =>
-      val cl = i % 4
-      val v = Array.tabulate(8)(j =>
-        (math.sin(cl * 2.1 + j) + 0.01 * math.cos(i * 0.9 + j)).toFloat)
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    val probes = vecs.filter(col("vec_id") < 4) // one probe per cluster
-    val exact = Cosine.topK(vecs, probes, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    // trainCoarse: the documented space contract for Pq.topK (cells
-    // are assigned from normalized vectors, so the matrix must be
-    // trained on them — the fixture vectors are NOT unit-norm)
-    val coarse = Pq.trainCoarse(vecs, "vec_id", "embedding", k = 4, iters = 3)
-    val cbs = Pq.trainCodebooks(vecs, "vec_id", "embedding", m = 4, ksub = 8, iters = 3)
-    assert(cbs.length == 4 && cbs.forall(cb => cb.length == 8 && cb.forall(_.length == 2)))
-    val pq = Pq.topK(vecs, probes, "vec_id", "embedding", 5, coarse, cbs, nprobe = 2)
-      .collect()
-    // shape: k rows per probe, ranks 1..k, adc ascending, no self
-    assert(pq.length == 20)
-    pq.groupBy(_.getLong(0)).foreach { case (_, rs) =>
-      val sorted = rs.sortBy(_.getInt(1))
-      assert(sorted.map(_.getInt(1)).toSeq == (1 to 5))
-      val adcs = sorted.map(_.getDouble(3))
-      assert(adcs.zip(adcs.tail).forall { case (a, b) => a <= b }, "adc must ascend with rank")
-      assert(adcs.forall(a => a >= -1e-9), "squared distance cannot be negative")
-    }
-    assert(pq.forall(r => r.getLong(0) != r.getLong(2)), "self-match must be excluded")
-    // recall: the quantized path finds most of the exact top-5
-    val got = pq.map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert((exact & got).size >= 12, s"IVF-PQ recall too low: ${(exact & got).size}/20")
-    // determinism: same data, same training discipline, same output
-    val cbs2 = Pq.trainCodebooks(vecs, "vec_id", "embedding", m = 4, ksub = 8, iters = 3)
-    assert(cbs.map(_.map(_.toSeq).toSeq).toSeq == cbs2.map(_.map(_.toSeq).toSeq).toSeq)
-    // ADC exactness anchor: when a probe IS a corpus vector and every
-    // corpus subvector coincides with a codebook centroid, ADC to the
-    // probe itself would be 0 — check the next-best ADC against a
-    // hand-computed LUT distance on the emitted top-1 neighbor
-    val top1 = pq.filter(r => r.getLong(0) == 0L && r.getInt(1) == 1).head
-    assert(top1.getDouble(3) < 2.0, "nearest same-cluster neighbor should be close on the unit sphere")
-    // refined mode: ADC prunes, exact cosine re-ranks — output schema
-    // matches Ivf.topK, every returned pair must be drawn from the
-    // ADC candidate pool, and recall cannot drop below raw ADC's
-    val refined = Pq.topKRefined(vecs, probes, "vec_id", "embedding", 5, coarse, cbs,
-      nprobe = 2, kCand = 15)
-    assert(refined.columns.toSeq == Seq("probe_id", "rank", "neighbor_id", "cos"))
-    val rf = refined.collect()
-    assert(rf.length == 20 && rf.forall(r => r.getLong(0) != r.getLong(2)))
-    rf.groupBy(_.getLong(0)).foreach { case (_, rs) =>
-      val sorted = rs.sortBy(_.getInt(1))
-      assert(sorted.map(_.getInt(1)).toSeq == (1 to 5))
-      val cs = sorted.map(_.getDouble(3))
-      assert(cs.zip(cs.tail).forall { case (a, b) => a >= b }, "cos must descend with rank")
-      assert(cs.forall(c => c >= -1.0001 && c <= 1.0001))
-    }
-    val gotR = rf.map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert((exact & gotR).size >= (exact & got).size,
-      s"refined recall ${(exact & gotR).size} fell below raw ADC ${(exact & got).size}")
-    val cand15 = Pq.topK(vecs, probes, "vec_id", "embedding", 15, coarse, cbs, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(gotR.subsetOf(cand15), "refined results must come from the ADC candidate pool")
-  }
-
   test("IVFADC residual encoding: decomposed-LUT ADC equals brute-force residual distance") {
-    // same 4-cluster fixture as the raw-PQ test; the properties pinned
-    // here are the NEW algebra: (1) the emitted residual ADC equals a
+    // 40 vectors in 4 well-separated direction clusters of 10, one
+    // probe per cluster. Pinned: (1) shape, no self-match and recall
+    // against exact cosine, (2) the emitted residual ADC equals a
     // driver-side brute-force ‖(q−C_cell) − cb(codes)‖² recompute
     // (pins the A/D/bias decomposition end-to-end through the kernel),
-    // (2) training determinism, (3) refined-residual invariants
+    // (3) training determinism, (4) refined invariants
     val vecs = (0 until 40).map { i =>
       val cl = i % 4
       val v = Array.tabulate(8)(j =>
@@ -470,18 +404,23 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     val probes = vecs.filter(col("vec_id") < 4)
     val exact = Cosine.topK(vecs, probes, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    // trainCoarse: the documented space contract for Pq.topK (cells
+    // are assigned from normalized vectors, so the matrix must be
+    // trained on them — the fixture vectors are NOT unit-norm)
     val coarse = Pq.trainCoarse(vecs, "vec_id", "embedding", k = 4, iters = 3)
-    val cbs = Pq.trainCodebooksResidual(vecs, "vec_id", "embedding", coarse,
+    val cbs = Pq.trainCodebooks(vecs, "vec_id", "embedding", coarse,
       m = 4, ksub = 8, iters = 3)
     assert(cbs.length == 4 && cbs.forall(cb => cb.length == 8 && cb.forall(_.length == 2)))
     // determinism: residual training inherits the hash-ordered init
-    val cbs2 = Pq.trainCodebooksResidual(vecs, "vec_id", "embedding", coarse,
+    val cbs2 = Pq.trainCodebooks(vecs, "vec_id", "embedding", coarse,
       m = 4, ksub = 8, iters = 3)
     assert(cbs.map(_.map(_.toSeq).toSeq).toSeq == cbs2.map(_.map(_.toSeq).toSeq).toSeq)
 
-    val out = Pq.topKResidual(vecs, probes, "vec_id", "embedding", 5, coarse, cbs, nprobe = 2)
+    val out = Pq.topK(vecs, probes, "vec_id", "embedding", 5, coarse, cbs, nprobe = 2)
       .collect()
-    assert(out.length == 20 && out.forall(r => r.getLong(0) != r.getLong(2)))
+    // shape: k rows per probe, ranks 1..k, adc ascending, no self
+    assert(out.length == 20)
+    assert(out.forall(r => r.getLong(0) != r.getLong(2)), "self-match must be excluded")
     out.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getInt(1))
       assert(sorted.map(_.getInt(1)).toSeq == (1 to 5))
@@ -490,11 +429,11 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       // residual ADC is a true squared distance of real vectors
       assert(adcs.forall(a => a >= -1e-9), "squared distance cannot be negative")
     }
-    // recall bar: same as the raw-PQ test's (the raw-vs-residual gap
-    // at production parameters is BENCH_pq_recall_r17.json's measurement, not a
-    // 40-vector fixture's)
+    // recall: the quantized path finds most of the exact top-5
     val got = out.map(r => (r.getLong(0), r.getLong(2))).toSet
     assert((exact & got).size >= 12, s"IVFADC recall too low: ${(exact & got).size}/20")
+    val top1 = out.filter(r => r.getLong(0) == 0L && r.getInt(1) == 1).head
+    assert(top1.getDouble(3) < 2.0, "nearest same-cluster neighbor should be close on the unit sphere")
 
     // brute-force anchor: recompute every emitted adc on the driver
     // from first principles — normalize, assign cell (ties to lower
@@ -533,48 +472,54 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
         s"probe $pid neighbor $nid: brute-force $expected vs emitted $emitted")
     }
 
-    // refined residual: schema parity, candidate-pool subset, recall
-    // at least the residual ADC's
-    val refined = Pq.topKRefinedResidual(vecs, probes, "vec_id", "embedding", 5,
+    // refined: ADC prunes, exact cosine re-ranks — output schema
+    // matches Ivf.topK, every returned pair must be drawn from the
+    // ADC candidate pool, and recall cannot drop below ADC's
+    val refined = Pq.topKRefined(vecs, probes, "vec_id", "embedding", 5,
       coarse, cbs, nprobe = 2, kCand = 15)
     assert(refined.columns.toSeq == Seq("probe_id", "rank", "neighbor_id", "cos"))
     val rf = refined.collect()
     assert(rf.length == 20 && rf.forall(r => r.getLong(0) != r.getLong(2)))
+    rf.groupBy(_.getLong(0)).foreach { case (_, rs) =>
+      val sorted = rs.sortBy(_.getInt(1))
+      assert(sorted.map(_.getInt(1)).toSeq == (1 to 5))
+      val cs = sorted.map(_.getDouble(3))
+      assert(cs.zip(cs.tail).forall { case (a, b) => a >= b }, "cos must descend with rank")
+      assert(cs.forall(c => c >= -1.0001 && c <= 1.0001))
+    }
     val gotR = rf.map(r => (r.getLong(0), r.getLong(2))).toSet
     assert((exact & gotR).size >= (exact & got).size,
-      s"refined recall ${(exact & gotR).size} fell below residual ADC ${(exact & got).size}")
-    val pool = Pq.topKResidual(vecs, probes, "vec_id", "embedding", 15, coarse, cbs, nprobe = 2)
+      s"refined recall ${(exact & gotR).size} fell below ADC ${(exact & got).size}")
+    val pool = Pq.topK(vecs, probes, "vec_id", "embedding", 15, coarse, cbs, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(gotR.subsetOf(pool), "refined results must come from the residual ADC candidate pool")
+    assert(gotR.subsetOf(pool), "refined results must come from the ADC candidate pool")
   }
 
   test("refine guard: over-budget |probes|*kCand fails loudly, naming the knobs") {
     // the broadcast pin removes the optimizer's size fallback, so the
-    // over-budget case must be a graft-shaped error naming kCand, not
-    // a generic broadcast OOM (r17 verdict watch item 1)
+    // over-budget case must be a graft-shaped error naming kCand and
+    // the probe-batch split, not a generic broadcast OOM. The bound is
+    // 32,000,000 candidate rows: 4 probes x 8,000,000 sits exactly on it
     val vecs = (0 until 40).map { i =>
       val v = Array.tabulate(8)(j => (math.sin(i * 1.3 + j) + 1.5).toFloat)
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val probes = vecs.filter(col("vec_id") < 4)
     val coarse = Pq.trainCoarse(vecs, "vec_id", "embedding", k = 4, iters = 2)
-    val cbs = Pq.trainCodebooksResidual(vecs, "vec_id", "embedding", coarse,
+    val cbs = Pq.trainCodebooks(vecs, "vec_id", "embedding", coarse,
       m = 4, ksub = 8, iters = 2)
-    spark.conf.set("spark.graft.refineBroadcastMaxRows", "50")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        // 4 probes x kCand=15 = 60 rows > the 50-row test bound
-        Pq.topKRefinedResidual(vecs, probes, "vec_id", "embedding", 5,
-          coarse, cbs, nprobe = 2, kCand = 15)
-      }
-      assert(ex.getMessage.contains("kCand=15"), ex.getMessage)
-      assert(ex.getMessage.contains("refineBroadcastMaxRows"), ex.getMessage)
-      // exactly at the bound passes: the guard is <=, not <
-      spark.conf.set("spark.graft.refineBroadcastMaxRows", "60")
-      val ok = Pq.topKRefinedResidual(vecs, probes, "vec_id", "embedding", 5,
-        coarse, cbs, nprobe = 2, kCand = 15)
-      assert(ok.count() > 0)
-    } finally spark.conf.unset("spark.graft.refineBroadcastMaxRows")
+    val ex = intercept[IllegalArgumentException] {
+      // 4 probes x kCand=8,000,001 = 32,000,004 rows > the bound
+      Pq.topKRefined(vecs, probes, "vec_id", "embedding", 5,
+        coarse, cbs, nprobe = 2, kCand = 8000001)
+    }
+    assert(ex.getMessage.contains("kCand=8000001"), ex.getMessage)
+    assert(ex.getMessage.contains("32000004 candidate rows"), ex.getMessage)
+    assert(ex.getMessage.contains("split the probe slice into batches"), ex.getMessage)
+    // exactly at the bound passes: the guard is <=, not <
+    val ok = Pq.topKRefined(vecs, probes, "vec_id", "embedding", 5,
+      coarse, cbs, nprobe = 2, kCand = 8000000)
+    assert(ok.count() > 0)
   }
 
   test("train-on-sample: deterministic, bounded, and fails loudly when the sample can't seat k") {
@@ -593,13 +538,13 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
     // sampled codebooks: same determinism through the PQ trainer, and
     // a sampled-trained index still searches (shape invariants hold)
-    val cb1 = Pq.trainCodebooks(vecs, "vec_id", "embedding", m = 4, ksub = 8,
-      iters = 2, maxTrainRows = 500L)
-    val cb2 = Pq.trainCodebooks(vecs, "vec_id", "embedding", m = 4, ksub = 8,
-      iters = 2, maxTrainRows = 500L)
-    assert(cb1.map(_.map(_.toSeq).toSeq).toSeq == cb2.map(_.map(_.toSeq).toSeq).toSeq)
     val coarse = Pq.trainCoarse(vecs, "vec_id", "embedding", k = 4, iters = 2,
       maxTrainRows = 500L)
+    val cb1 = Pq.trainCodebooks(vecs, "vec_id", "embedding", coarse, m = 4, ksub = 8,
+      iters = 2, maxTrainRows = 500L)
+    val cb2 = Pq.trainCodebooks(vecs, "vec_id", "embedding", coarse, m = 4, ksub = 8,
+      iters = 2, maxTrainRows = 500L)
+    assert(cb1.map(_.map(_.toSeq).toSeq).toSeq == cb2.map(_.map(_.toSeq).toSeq).toSeq)
     val out = Pq.topK(vecs, vecs.filter(col("vec_id") < 3), "vec_id", "embedding",
       5, coarse, cb1, nprobe = 2).collect()
     assert(out.length == 15 && out.forall(r => r.getLong(0) != r.getLong(2)))
